@@ -1271,17 +1271,22 @@ def incremental_lsh_neardup(
     corpus (O(candidates) — the hook is ``jaccard_verify`` and a
     semi-join, left to the caller when the corpus table is at hand).
 
+    ``presigned``: this batch's signature pass, already run and
+    materialized by the caller (e.g. one corpus-wide pass shared by a
+    bootstrap and a probe call). It must be :func:`incremental_signatures`
+    of ``new_docs`` under this call's ``num_hashes``, ``shingle_n`` and
+    ``hash_fn``, else the estimate and the index are silently skewed. Only
+    its columns are checked (no Spark job): ``ValueError`` unless it has
+    ``id_col``, ``minhash`` and ``sig``.
+
     Returns the surviving rows of ``new_docs``.
     """
     from ..snapshots import snapshot_read, snapshot_write
 
     spark = new_docs.sparkSession
-    # ``presigned``: the caller already ran (and materialized) the
-    # signature pass for this batch — e.g. one corpus-wide
-    # :func:`incremental_signatures` shared between a bootstrap and a
-    # probe call (optimization round 9, guide §2.4: one exchange, two
-    # consumers). Must be exactly ``incremental_signatures`` of
-    # ``new_docs`` under the same parameters; rows are taken as-is.
+    missing = presigned is not None and {id_col, "minhash", "sig"} - set(presigned.columns)
+    if missing:
+        raise ValueError(f"presigned lacks column(s) {sorted(missing)}")
     sigs = (
         presigned
         if presigned is not None

@@ -91,7 +91,8 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; component =
     the minimum node id reachable. Isolated nodes (no edges) are absent —
-    callers left-join and coalesce to the node's own id.
+    callers left-join and coalesce to the node's own id. Edges with a null
+    endpoint are dropped before the size gate, on both of its paths.
 
     ``max_iter`` bounds the propagation rounds; convergence (no label
     changed) stops earlier. Raises if the graph hasn't converged at the
@@ -104,7 +105,7 @@ def connected_components(
         edges.select(
             F.col(dst).cast("bigint").alias("u"), F.col(src).cast("bigint").alias("v")
         )
-    ).distinct()
+    ).dropna().distinct()
     sym = checkpoint(sym)
 
     # size-gated driver fast path (module doc above): the checkpointed

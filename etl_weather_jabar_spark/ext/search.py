@@ -650,7 +650,9 @@ def bm25_topk_indexed(
     stay below θ are "non-essential", and docs matching ONLY those
     can't reach θ — they are pruned before the scoring aggregation.
     Rows beyond the top ``prune_k`` may be absent; pass None (default)
-    for the complete scored set."""
+    for the complete scored set. ``terms`` must be query-sized: every row
+    is collected to the driver (bounded-collect convention, as the caps).
+    Pass a query's terms or a top-k token list, never a corpus-sized frame."""
     batches, deletes = _live_state(spark, path)
     if not batches:
         raise ValueError(f"no committed index batches under {path}")

@@ -1069,20 +1069,6 @@ def _vector_lists(
     return lists, tomb
 
 
-def _vector_delete_ids(spark, path: str, id_col: str) -> DataFrame | None:
-    from functools import reduce
-
-    from .search import _committed_dirs
-
-    dirs = _committed_dirs(spark, f"{path}/deletes")
-    if not dirs:
-        return None
-    return reduce(
-        DataFrame.unionByName,
-        [spark.read.parquet(f"{d}/ids") for d in dirs.values()],
-    ).select(id_col)
-
-
 def ivfpq_residual_topk_indexed(
     spark,
     path: str,

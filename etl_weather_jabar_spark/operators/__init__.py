@@ -16,7 +16,7 @@ from .joins import (
     range_join_bucketed,
     salted_join,
 )
-from .aggregates import daily_recap, deterministic_mode, hourly_agg
+from .aggregates import daily_recap, deterministic_mode
 from .windows import (
     global_rank_scalable,
     keep_first_rank,
@@ -44,7 +44,6 @@ __all__ = [
     "salted_join",
     "daily_recap",
     "deterministic_mode",
-    "hourly_agg",
     "global_rank_scalable",
     "keep_first_rank",
     "scalable_ntile",

@@ -3,21 +3,25 @@
 Semantics pinned from the reference (SURVEY §7.2 watch-list):
 
 * A8: ``sum`` of an empty/all-null measure is **0.0** while avg/min/max are
-  null (daily_compile_weather.py:71-78) → coalesce ONLY the sum.
+  null (daily_compile_weather.py:71-78) → only the sum starts from 0.0.
 * A6: ``statistics.mode`` returns the first value reaching the max count in
   minute order → deterministic (count DESC, first-seen ASC, value ASC)
   tie-break, not Spark's arbitrary-tie ``F.mode``.
 * A4: averages rounded to 2 dp (daily_compile_weather.py:71,74,75).
-* A9: nested arrays are built with collect_list(struct) + array_sort —
-  ordering is explicit, never relied on from shuffle order.
+* A9: the Gold recap is one grouped pass per station-day — a single
+  ``collect_list(struct)`` + ``array_sort`` per (date, location), from which
+  array functions build the nested hourly and minute docs. Ordering is
+  explicit, never relied on from shuffle order.
 """
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .joins import grid_align, minute_grid
+from ..schemas import DAILY_RECAP, MINUTE_DOC
 
 
 def deterministic_mode(
@@ -47,44 +51,6 @@ def deterministic_mode(
         counted.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
         .select(*keys, F.col(value_col).alias(out))
-    )
-
-
-def hourly_agg(obs: DataFrame) -> DataFrame:
-    """A4/A5/A8 per (date, location, hour) over Silver rows
-    (daily_compile_weather.py:60-94). Spark aggregates ignore nulls natively
-    (P9's non-null comprehension is free); only the sum needs the
-    empty→0 coalesce."""
-    return obs.groupBy("date", "location_id", "location_name", "hour").agg(
-        F.round(F.avg("temp_c"), 2).alias("temp_avg"),
-        F.min("temp_c").alias("temp_min"),
-        F.max("temp_c").alias("temp_max"),
-        F.round(F.avg("humidity"), 2).alias("humidity_avg"),
-        F.round(F.avg("wind_kph"), 2).alias("wind_avg_kph"),
-        F.coalesce(F.sum("precip_mm"), F.lit(0.0)).alias("precip_mm"),
-    )
-
-
-def hourly_data_points(obs: DataFrame) -> DataFrame:
-    """J4 + A9 inner level: minute-grid-aligned ``data_points`` array per
-    (date, location, hour). Missing 10-min slots become all-null minute docs
-    (daily_compile_weather.py:34-58)."""
-    grid = minute_grid(obs.sparkSession)
-    aligned = grid_align(
-        obs.select(
-            "date", "location_id", "hour", "minute",
-            F.col("temp_c").alias("temp"), "humidity", "wind_kph",
-            "wind_dir", "precip_mm",
-        ),
-        grid,
-        group_keys=["date", "location_id", "hour"],
-    )
-    return aligned.groupBy("date", "location_id", "hour").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct("minute", "temp", "humidity", "wind_kph", "wind_dir", "precip_mm")
-            )
-        ).alias("data_points")
     )
 
 
@@ -203,45 +169,90 @@ def standardize(
     )
 
 
+def _present(rows: Column, field: str) -> Column:
+    """The non-null ``field`` values of an array of row structs."""
+    return F.array_compact(F.transform(rows, lambda r: r[field]))
+
+
+def _avg2(vals: Column) -> Column:
+    """A4: ``round(avg, 2)``, summing from 0.0 as Spark's ``avg`` does."""
+    total = F.aggregate(vals, F.lit(0.0), lambda acc, v: acc + v.cast("double"))
+    return F.when(F.size(vals) > 0, F.round(total / F.size(vals), 2))
+
+
+def _first_mode(vals: Column) -> Column:
+    """A6 over values in first-seen order: the first with the top count."""
+    count = lambda v: F.size(F.filter(vals, lambda w: w == v))  # noqa: E731
+    return F.aggregate(
+        F.array_distinct(vals), F.lit(None).cast("string"),
+        lambda best, v: F.when(best.isNull() | (count(v) > count(best)), v).otherwise(best),
+    )
+
+
+def _data_points(rows: Column) -> Column:
+    """J4 + A9 inner level: a doc per row on the 00..50 grid (duplicates kept,
+    off-grid minutes dropped), an all-null doc per empty slot
+    (daily_compile_weather.py:34-58), in ``array_sort`` order."""
+    measures = MINUTE_DOC.fieldNames()[1:]
+
+    def slot(m):
+        hits = F.filter(rows, lambda r: r["minute"] == m)
+        # an empty slot becomes one null row, whose fields all read null
+        padded = F.when(F.size(hits) > 0, hits).otherwise(F.array(F.lit(None)))
+        return F.transform(padded, lambda r: F.struct(m.alias("minute"), *[r[c] for c in measures]))
+
+    grid = F.array(*[F.lit(f"{m:02d}") for m in range(0, 60, 10)])
+    return F.array_sort(F.flatten(F.transform(grid, slot)))
+
+
+@functools.lru_cache(maxsize=1)
+def _recap_columns(jvm) -> tuple[Column, Column, Column]:
+    """The recap's ``rows``, ``hours`` and ``hourly`` expressions. They name
+    only grouped columns, so they are built once per JVM (the cache key):
+    their ~1,400 py4j calls cost more than running a day's recap."""
+    row = F.struct("hour", "minute", "wind_dir", F.col("temp_c").alias("temp"),
+                   "humidity", "wind_kph", "precip_mm")
+    rows = F.array_sort(F.collect_list(row))
+    # array_compact types the hours non-null, as HOUR_DOC's ``hour`` is
+    hours = F.array_compact(F.array_distinct(F.transform("rows", lambda r: r["hour"])))
+
+    def hour_doc(g):  # g: {hour, rows of that hour}
+        rs = g["rows"]
+        temps = _present(rs, "temp")
+        return F.struct(
+            g["hour"].alias("hour"),
+            F.array_contains("hours", "23").alias("full_recap"),
+            _avg2(temps).alias("temp_avg"),
+            F.array_min(temps).alias("temp_min"),
+            F.array_max(temps).alias("temp_max"),
+            _avg2(_present(rs, "humidity")).alias("humidity_avg"),
+            _avg2(_present(rs, "wind_kph")).alias("wind_avg_kph"),
+            _first_mode(_present(rs, "wind_dir")).alias("dominant_wind_dir"),
+            F.aggregate(_present(rs, "precip_mm"), F.lit(0.0), lambda a, v: a + v)
+            .alias("precip_mm"),
+            _data_points(rs).alias("data_points"),
+        )
+
+    by_hour = F.transform("hours", lambda h: F.struct(
+        h.alias("hour"), F.filter("rows", lambda r: r["hour"] == h).alias("rows")))
+    # the cast widens nullability to DAILY_RECAP's; ``when`` makes the array
+    # itself nullable, as the schema has it
+    hourly = F.transform(by_hour, hour_doc).cast(DAILY_RECAP["hourly"].dataType)
+    return rows, hours, F.when(F.size("hours") > 0, hourly)
+
+
 def daily_recap(obs: DataFrame) -> DataFrame:
-    """The full Gold assembly (daily_compile_weather.py:96-134), one
-    distributed plan instead of the reference's 27 per-location round-trips
-    (SURVEY §4.2):
-
-    hourly aggregates (A4/A5/A8) ⋈ deterministic wind mode (A6)
-    ⋈ grid-aligned data_points (J4/A9) → W2 completeness flag →
-    nested re-assembly into {date, location, hourly: [...]} (A9).
-
-    Hours with no observations are skipped (DAG behavior,
-    daily_compile_weather.py:123-124); the null-fill grid exists only at
-    minute level (SURVEY §7.2).
-    """
-    keys = ["date", "location_id", "hour"]
-    hours = hourly_agg(obs)
-    mode = deterministic_mode(
-        obs, keys, value_col="wind_dir", order_col="minute",
-        out_col="dominant_wind_dir",
-    )
-    points = hourly_data_points(obs)
-    hourly = hours.join(mode, on=keys, how="left").join(points, on=keys, how="left")
-
-    # W2: day-completeness flag stamped on every hour row.
-    day_w = Window.partitionBy("date", "location_id")
-    hourly = hourly.withColumn(
-        "full_recap", F.max(F.col("hour") == F.lit("23")).over(day_w)
-    )
-
-    return hourly.groupBy("date", "location_id", "location_name").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "hour", "full_recap", "temp_avg", "temp_min", "temp_max",
-                    "humidity_avg", "wind_avg_kph", "dominant_wind_dir",
-                    "precip_mm", "data_points",
-                )
-            )
-        ).alias("hourly")
-    )
+    """The Gold assembly (daily_compile_weather.py:96-134) as one groupBy per
+    (date, location) — a single shuffle — collecting the station-day's rows
+    (at most 24 × 6) sorted by (hour, minute, wind_dir, ...). Array functions
+    then build, per hour with rows (empty hours skipped, :123-124), the
+    A4/A5/A8 aggregates, the A6 wind mode (ties to the earliest minute, then
+    the smallest value), the grid-aligned ``data_points`` (J4/A9) and the W2
+    ``full_recap`` flag (hour 23 present). The schema is DAILY_RECAP."""
+    rows, hours, hourly = _recap_columns(obs.sparkSession.sparkContext._jvm)
+    day = obs.groupBy("date", "location_id", "location_name").agg(rows.alias("rows"))
+    return day.withColumn("hours", hours).select(
+        "date", "location_id", "location_name", hourly.alias("hourly"))
 
 
 def exact_distinct_bitmap(

@@ -108,8 +108,6 @@ def incremental_recap(
 
     Returns the recomputed recap rows (already written to ``gold_path``).
     """
-    from pyspark.sql import functions as F
-
     from ..sinks import upsert_by_partition
 
     affected = silver_new.select("date").distinct()
@@ -136,9 +134,6 @@ def recap_to_snapshot(
     table state), pre-merge versions time-travelable. Returns the new
     version number.
     """
-    from pyspark.sql import functions as F
-
-    from ..operators.aggregates import daily_recap
     from ..snapshots import snapshot_merge
 
     affected = silver_new.select("date").distinct()

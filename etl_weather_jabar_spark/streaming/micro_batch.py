@@ -70,7 +70,7 @@ def stream_windowed_agg(
     watermark: str | None = None,
 ) -> DataFrame:
     """ST1/ST6: tumbling event-time windowed aggregates — the streaming form
-    of hourly_agg. ``stream_silver`` output already carries a watermark
+    of the hourly recap. ``stream_silver`` output already carries a watermark
     (re-defining one is disallowed upstream of a stateful operator); pass
     ``watermark`` only when feeding a raw un-watermarked stream."""
     if watermark is not None:

@@ -491,6 +491,34 @@ def test_incremental_lsh_neardup_presigned_matches(spark, tmp_path):
     ) == sorted(map(key, snapshot_read(spark, idx_b).collect()))
 
 
+def test_incremental_lsh_neardup_presigned_missing_columns_raise(spark, tmp_path):
+    """A presigned frame without one of {id_col, minhash, sig} is refused
+    with ValueError by a schema check alone: no Spark job runs and no
+    index is written."""
+    import os
+
+    import pytest
+
+    from etl_weather_jabar_spark.ext.dedup_text import (
+        incremental_lsh_neardup,
+        incremental_signatures,
+    )
+
+    docs = spark.createDataFrame([(1, BASE), (2, NEAR)], ["doc_id", "text"])
+    sigs = incremental_signatures(docs)
+    idx = str(tmp_path / "idx")
+    sc = spark.sparkContext
+    sc.setJobGroup("presigned-check", "presigned column check")
+    try:
+        for col in ("doc_id", "minhash", "sig"):
+            with pytest.raises(ValueError, match=col):
+                incremental_lsh_neardup(docs, idx, presigned=sigs.drop(col))
+        assert sc.statusTracker().getJobIdsForGroup("presigned-check") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not os.path.exists(idx)
+
+
 def test_incremental_exact_substring_dedup_corpus_growth(spark, tmp_path):
     """ExactSubstr at corpus growth: the first batch (empty index)
     equals batch mode exactly; a later batch's spans duplicating

@@ -92,6 +92,24 @@ def test_driver_fast_path_matches_loop_form(spark, monkeypatch):
         assert fast == loop, edge_list
 
 
+def test_null_endpoints_dropped_on_both_sides_of_the_gate(spark, monkeypatch):
+    """An edge with a null endpoint connects nothing: the driver union-find
+    and the distributed loop both drop it and label the rest alike."""
+    import etl_weather_jabar_spark.ext.graph as graph_mod
+
+    edge_list = [(1, 2), (2, None), (None, 7), (None, None), (5, 6)]
+    edges = spark.createDataFrame(edge_list, "src bigint, dst bigint")
+
+    def components():
+        rows = connected_components(edges).collect()
+        return {r["node"]: r["component"] for r in rows}
+
+    fast = components()
+    monkeypatch.setattr(graph_mod, "_DRIVER_CC_MAX_EDGES", -1)
+    loop = components()
+    assert fast == loop == {1: 1, 2: 1, 5: 5, 6: 5}
+
+
 def test_lsh_clusters_contain_same_banding_candidates(spark):
     """Candidate pairs from the SAME md5 banding must land in one cluster —
     the cluster query can only MERGE bucket co-membership, never split it.

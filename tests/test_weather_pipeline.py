@@ -6,6 +6,7 @@ Each test cites the reference behavior it pins (file:line into
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from etl_weather_jabar_spark.operators.aggregates import daily_recap
 from etl_weather_jabar_spark.plans.pipelines import recap_stage, transform_stage
@@ -127,6 +128,168 @@ def test_recap_hourly_sorted(spark):
     doc, _ = _recap_hours(spark)
     hrs = [h["hour"] for h in doc["hourly"]]
     assert hrs == sorted(hrs)
+
+
+def _three_branch_recap(obs):
+    """The recap as it was built before the single grouped pass: hourly
+    aggregates ⋈ deterministic wind mode ⋈ grid-aligned data_points, a day
+    window for full_recap, then the nested regroup. Kept here as the
+    reference the engine's form is checked against."""
+    from pyspark.sql import Window
+
+    from etl_weather_jabar_spark.operators.aggregates import deterministic_mode
+    from etl_weather_jabar_spark.operators.joins import grid_align, minute_grid
+
+    keys = ["date", "location_id", "hour"]
+    hours = obs.groupBy("date", "location_id", "location_name", "hour").agg(
+        F.round(F.avg("temp_c"), 2).alias("temp_avg"),
+        F.min("temp_c").alias("temp_min"),
+        F.max("temp_c").alias("temp_max"),
+        F.round(F.avg("humidity"), 2).alias("humidity_avg"),
+        F.round(F.avg("wind_kph"), 2).alias("wind_avg_kph"),
+        F.coalesce(F.sum("precip_mm"), F.lit(0.0)).alias("precip_mm"),
+    )
+    mode = deterministic_mode(
+        obs, keys, value_col="wind_dir", order_col="minute",
+        out_col="dominant_wind_dir",
+    )
+    aligned = grid_align(
+        obs.select(
+            "date", "location_id", "hour", "minute",
+            F.col("temp_c").alias("temp"), "humidity", "wind_kph",
+            "wind_dir", "precip_mm",
+        ),
+        minute_grid(obs.sparkSession),
+        group_keys=keys,
+    )
+    points = aligned.groupBy(*keys).agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct("minute", "temp", "humidity", "wind_kph", "wind_dir", "precip_mm")
+            )
+        ).alias("data_points")
+    )
+    hourly = hours.join(mode, on=keys, how="left").join(points, on=keys, how="left")
+    hourly = hourly.withColumn(
+        "full_recap",
+        F.max(F.col("hour") == F.lit("23")).over(Window.partitionBy("date", "location_id")),
+    )
+    return hourly.groupBy("date", "location_id", "location_name").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    "hour", "full_recap", "temp_avg", "temp_min", "temp_max",
+                    "humidity_avg", "wind_avg_kph", "dominant_wind_dir",
+                    "precip_mm", "data_points",
+                )
+            )
+        ).alias("hourly")
+    )
+
+
+def _edge_case_silver(spark):
+    """Silver rows for 3 stations × 2 days: generated slots with about 10%
+    missing, plus planted cases — an all-null-measure hour, wind_dir count
+    ties across minutes and inside one duplicated slot, an off-grid minute,
+    an hour holding only an off-grid row, and days with and without hour
+    23. Measures are multiples of 0.25, so every sum is exact whatever
+    order it is taken in."""
+    import random
+
+    from etl_weather_jabar_spark.schemas import WEATHER_DATA
+
+    rng = random.Random(2)
+    dirs = ["N", "NE", "E", "SE", "S", "SW"]
+    rows = []
+
+    def row(date, loc, hour, minute, temp, hum, wind, wdir, precip, n=0):
+        rows.append({
+            "_id": f"{date}-{loc}-{hour}{minute}-{n}",
+            "timestamp": f"{date} {hour}:{minute}:00",
+            "date": date, "hour": hour, "minute": minute,
+            "location_id": loc, "location_name": f"LOC_{loc}",
+            "lat": -6.9, "lon": 107.6, "temp_c": temp, "feelslike_c": temp,
+            "humidity": hum, "wind_kph": wind, "wind_dir": wdir,
+            "wind_degree": 45, "precip_mm": precip, "is_day": 1, "uv": 5.0,
+            "cloud": 40, "condition": "Sunny",
+        })
+
+    def maybe(v):
+        return None if rng.random() < 0.1 else v
+
+    for date in ("2024-02-01", "2024-02-02"):
+        for loc in (1, 2, 3):
+            last = 23 if (loc + (date == "2024-02-02")) % 2 else 21
+            for h in range(6, last + 1):
+                for m in range(0, 60, 10):
+                    if rng.random() < 0.1:
+                        continue  # missing slot
+                    row(
+                        date, loc, f"{h:02d}", f"{m:02d}",
+                        maybe(rng.randrange(80, 140) / 4), maybe(rng.randrange(60, 100)),
+                        maybe(rng.randrange(0, 80) / 4), maybe(rng.choice(dirs)),
+                        maybe(rng.choice([0.0, 0.0, 0.25, 1.5, 3.75])),
+                    )
+    d, loc = "2024-02-01", 9
+    # hour 03: measures all null -> precip 0.0, avg/min/max/mode null
+    row(d, loc, "03", "00", None, None, None, None, None)
+    row(d, loc, "03", "20", None, None, None, None, None)
+    # hour 04: SW (first at :10) and NE tie 2-2 across minutes -> SW
+    for m, w in (("00", "N"), ("10", "SW"), ("20", "NE"), ("30", "NE"), ("40", "SW")):
+        row(d, loc, "04", m, 25.5, 70, 5.25, w, 0.25)
+    # hour 05: a duplicated :20 slot with NE and E, then E again at :30;
+    # the tie inside the slot (NE vs E, both first seen at :20) -> E by count
+    row(d, loc, "05", "20", 26.0, 71, 6.0, "NE", 0.0)
+    row(d, loc, "05", "20", 26.5, 72, 6.5, "E", 0.5, n=1)
+    row(d, loc, "05", "30", 27.0, 73, 7.0, "E", 0.0)
+    row(d, loc, "05", "40", 27.0, 73, 7.0, "NE", 0.0)
+    # hour 06: a tie inside one slot only (S vs E at :00) -> E (value order)
+    row(d, loc, "06", "00", 24.0, 70, 4.0, "S", 0.0)
+    row(d, loc, "06", "00", 24.5, 70, 4.0, "E", 0.0, n=1)
+    # hour 07: an off-grid :05 row next to an on-grid one; hour 08: off-grid only
+    row(d, loc, "07", "05", 30.25, 90, 9.0, "W", 2.0)
+    row(d, loc, "07", "10", 29.75, 88, 8.0, "W", 1.0)
+    row(d, loc, "08", "05", 31.0, 91, 9.5, "NW", 0.5)
+    return spark.createDataFrame(rows, WEATHER_DATA)
+
+
+def test_recap_single_pass_matches_three_branch_form(spark):
+    """The single grouped pass builds the same Gold docs as the old
+    three-branch plan, doc for doc."""
+    silver = _edge_case_silver(spark)
+
+    def docs(df):
+        return {
+            (r["date"], r["location_id"]): r.asDict(recursive=True)
+            for r in df.collect()
+        }
+
+    got, want = docs(daily_recap(silver)), docs(_three_branch_recap(silver))
+    assert len(want) == 7
+    assert got == want
+    planted = {h["hour"]: h for h in got[("2024-02-01", 9)]["hourly"]}
+    assert sorted(planted) == ["03", "04", "05", "06", "07", "08"]
+    assert planted["03"]["precip_mm"] == 0.0 and planted["03"]["temp_avg"] is None
+    assert [planted[h]["dominant_wind_dir"] for h in ("04", "05", "06")] == ["SW", "E", "E"]
+    assert [p["minute"] for p in planted["05"]["data_points"]] == [
+        "00", "10", "20", "20", "30", "40", "50",
+    ]
+    assert all(p["temp"] is None for p in planted["08"]["data_points"])
+    fulls = {k: doc["hourly"][0]["full_recap"] for k, doc in got.items()}
+    assert set(fulls.values()) == {True, False}
+
+
+def test_recap_schema_matches_gold_schema(spark):
+    """The recap's schema is DAILY_RECAP, nullability included; Silver
+    read back from parquet (every column nullable) gives the same nested
+    hourly type."""
+    from etl_weather_jabar_spark.schemas import DAILY_RECAP, WEATHER_DATA
+
+    assert daily_recap(silver_fixture(spark)).schema == DAILY_RECAP
+    nullable = spark.createDataFrame(
+        [], StructType([StructField(f.name, f.dataType, True) for f in WEATHER_DATA])
+    )
+    assert daily_recap(nullable).schema["hourly"] == DAILY_RECAP["hourly"]
 
 
 def test_json_size_observability(spark):
