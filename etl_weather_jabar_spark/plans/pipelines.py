@@ -88,37 +88,6 @@ def recap_stage(silver: DataFrame, dates: list[str] | None = None) -> DataFrame:
     return daily_recap(silver)
 
 
-def incremental_recap(
-    silver_all: DataFrame,
-    silver_new: DataFrame,
-    gold_path: str,
-) -> DataFrame:
-    """ST5 as a data-driven contract: recompute Gold ONLY for the (date)
-    partitions that newly-arrived Silver rows touch, and dynamically
-    overwrite just those partitions.
-
-    The reference gets this behavior from Airflow sensor scheduling (the
-    midnight recap waits for the day's last transform,
-    daily_compile_weather.py:153-155,171-180); here the *data* names the
-    work: ``silver_new`` (this batch's rows) → distinct affected dates
-    (tiny, broadcast) → left-semi prune of the full Silver → one recap plan
-    → partition-scoped upsert. Untouched date partitions are never read
-    (partition pruning) and never rewritten (dynamic overwrite). Replays
-    are idempotent.
-
-    Returns the recomputed recap rows (already written to ``gold_path``).
-    """
-    from ..sinks import upsert_by_partition
-
-    affected = silver_new.select("date").distinct()
-    scoped = silver_all.join(F.broadcast(affected), on="date", how="left_semi")
-    recap = daily_recap(scoped)
-    # daily_recap groups by (date, location...); date stays a column →
-    # partition the write on it
-    upsert_by_partition(recap, gold_path, ["date"])
-    return recap
-
-
 def recap_to_snapshot(
     silver_all: DataFrame,
     silver_new: DataFrame,
@@ -127,12 +96,15 @@ def recap_to_snapshot(
 ) -> int:
     """The Gold upsert (reference daily_compile_weather.py:136-142 —
     find-by-(date,location) then $set-or-insert) onto the TRANSACTIONAL
-    table: recompute recap only for the dates the new Silver rows touch
-    (same scoping as :func:`incremental_recap`), then MERGE those rows
-    into the snapshot table keyed by (date, location_id) — one atomic
-    version per run, replay-idempotent (same input → same resulting
-    table state), pre-merge versions time-travelable. Returns the new
-    version number.
+    table. The new Silver rows name the work (the reference gets it from
+    Airflow's sensor schedule, daily_compile_weather.py:153-155): their
+    distinct dates (tiny, broadcast) left-semi prune the full Silver,
+    one recap plan rebuilds only those days, and the rows MERGE into the
+    snapshot table keyed by (date, location_id). The merge prunes on
+    ``date``, so only Gold files holding a recapped day are rewritten;
+    every other day's files carry forward by name. One atomic version per
+    run, replay-idempotent (same input → same resulting table state),
+    pre-merge versions time-travelable. Returns the new version number.
     """
     from ..snapshots import snapshot_merge
 

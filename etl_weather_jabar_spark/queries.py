@@ -10833,7 +10833,7 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The observable lifecycle output IS deterministic, so it gets a SQL
     # twin after all: v1 = |region|, v2 = |region|+|nation|, v3 = same
     # (the merge's upsert of an existing key and insert+delete cancel;
-    # the merge commit records op 'overwrite' — copy-on-write publish).
+    # the merge commit records op 'merge').
     """
     SELECT CAST(1 AS INT) AS version, 'append' AS op,
            (SELECT count(*) FROM region) AS n_rows
@@ -10841,7 +10841,7 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 2, 'append',
            (SELECT count(*) FROM region) + (SELECT count(*) FROM nation)
     UNION ALL
-    SELECT 3, 'overwrite',
+    SELECT 3, 'merge',
            (SELECT count(*) FROM region) + (SELECT count(*) FROM nation)
     """,
 )

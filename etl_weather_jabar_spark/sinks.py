@@ -85,13 +85,26 @@ def append_dedup_keyed(
     from .operators.dedup import dedupe_keep_first
 
     batch = dedupe_keep_first(df, keys, order_by=[order_col])
-    spark = df.sparkSession
-    try:
-        existing = spark.read.parquet(path).select(*keys)
-    except Exception:  # first write: sink does not exist yet
+    if not _has_data_files(path):  # first write: nothing to collide with
         batch.write.mode("append").parquet(path)
         return
+    # any read error (a corrupt file, a schema clash) propagates: a sink
+    # that cannot be read must not be appended to without dedup
+    existing = df.sparkSession.read.parquet(path).select(*keys)
     batch.join(existing, on=keys, how="left_anti").write.mode("append").parquet(path)
+
+
+def _has_data_files(path: str) -> bool:
+    """Whether ``path`` holds a parquet data file Spark would read (Spark
+    hides names starting with '_' or '.', e.g. ``_temporary``)."""
+    import os
+
+    hidden = ("_", ".")
+    for _root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(hidden)]
+        if any(f.endswith(".parquet") and not f.startswith(hidden) for f in files):
+            return True
+    return False
 
 
 def upsert_by_partition(

@@ -2,6 +2,9 @@
 readers, time travel — the transactional layer the reference gets from
 MongoDB's per-document atomicity (upsert `update_one($set)` else insert,
 dags/daily_compile_weather.py:136-142) re-expressed for immutable files.
+The keyed upsert is :func:`snapshot_merge`: like the reference's
+find-then-``$set``, it touches only the files whose recorded key range
+can hold a changed key and carries every other file forward by name.
 
 Layout::
 
@@ -41,6 +44,11 @@ from pyspark.sql import DataFrame
 class ConcurrentSnapshotError(RuntimeError):
     """A conflicting commit landed and the operation cannot merge with it
     safely (the Delta ConcurrentModificationException analogue)."""
+
+
+class _Conflict(Exception):
+    """A publish found a newer version than the one its commit was
+    computed from; the caller restarts from the new latest."""
 
 
 def _manifest_dir(path: str) -> str:
@@ -223,31 +231,89 @@ def _stats_decode(v):
     return v
 
 
+# The footer key holding the Spark schema a data file was written with.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+# Spark types whose parquet footer min/max equal Spark's min/max: integers,
+# strings in the default collation (both order UTF-8 bytes unsigned) and
+# dates. INT96 timestamps carry no footer stats, pyarrow cannot decode
+# decimal stats, and float stats order NaN and -0.0 unlike Spark, so every
+# other type takes the aggregate job.
+_FOOTER_STATS_TYPES = {"byte", "short", "integer", "long", "string", "date"}
+
+
+def _footer_minmax(md, field: dict | None):
+    """``(lo, hi)`` of the top-level column ``field`` (its Spark schema
+    JSON) from one file's parquet footer — ``(None, None)`` when every
+    value is NULL — or ``None`` when the footer cannot give Spark's
+    answer."""
+    if (
+        field is None
+        or field["type"] not in _FOOTER_STATS_TYPES
+        or "__COLLATIONS" in field.get("metadata", {})
+        or (field["type"] == "date"
+            and b"org.apache.spark.legacyDateTime" in md.metadata)
+    ):
+        return None
+    idx = next(
+        i for i in range(len(md.schema))
+        if md.schema.column(i).path == field["name"]
+    )
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        st = rg.column(idx).statistics
+        if st is not None and st.has_min_max:
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        elif st is None or st.null_count != rg.num_rows:
+            return None  # values present but no stats (e.g. > 4 KiB)
+    return lo, hi
+
+
 def _file_stats(spark, path: str, files: list[str], cols: list[str]) -> dict:
-    """Per-file min/max of ``cols`` — one column-pruned scan of just the
-    named files: ``{file: {col: [lo, hi]}}`` (the manifest-side analogue
-    of parquet footer stats, queryable without opening footers). Values
-    are stored through :func:`_stats_encode`, so temporal/decimal/binary
-    keys are JSON-safe — the encode failure used to surface as a
-    json.dump TypeError AFTER data files were written (orphaning them)."""
+    """Per-file min/max of ``cols``: ``{file: {col: [lo, hi]}}`` (the
+    manifest-side analogue of parquet footer stats, queryable without
+    opening footers; a file with no rows gets no entry). Integer, string
+    and date columns are read from the files' parquet footers, with no
+    Spark job; every other (file, column) pair takes one column-pruned
+    aggregate over just the files that need it. Values are stored
+    through :func:`_stats_encode`, so temporal/decimal/binary keys are
+    JSON-safe — the encode failure used to surface as a json.dump
+    TypeError AFTER data files were written (orphaning them)."""
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    if not files:
-        return {}
-    df = spark.read.parquet(*[os.path.join(path, "data", f) for f in files])
+    out: dict = {}
+    todo = []
+    for f in files:
+        md = pq.ParquetFile(os.path.join(path, "data", f)).metadata
+        if md.num_rows == 0:
+            continue
+        fields = {
+            x["name"]: x
+            for x in json.loads(md.metadata[_SPARK_SCHEMA_KEY])["fields"]
+        }
+        got = {c: _footer_minmax(md, fields.get(c)) for c in cols}
+        if None in got.values():
+            todo.append(f)
+        else:
+            out[f] = {c: [_stats_encode(v) for v in s] for c, s in got.items()}
+    if not todo:
+        return out
+    df = spark.read.parquet(*[os.path.join(path, "data", f) for f in todo])
     aggs = []
     for c in cols:
         aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
     rows = (
         df.groupBy(F.col("_metadata.file_name").alias("f")).agg(*aggs).collect()
     )
-    return {
-        r["f"]: {
+    for r in rows:
+        out[r["f"]] = {
             c: [_stats_encode(r[f"lo_{c}"]), _stats_encode(r[f"hi_{c}"])]
             for c in cols
         }
-        for r in rows
-    }
+    return out
 
 
 _BLOOM_K, _BLOOM_M = 3, 1020
@@ -508,8 +574,9 @@ def snapshot_write(
     logical, not physical). Retries the manifest publish on a lost race.
     ``meta`` keys are recorded in the manifest (e.g. the streaming sink's
     ``batch_id``); ``stats_cols`` records per-file min/max for those
-    columns, which :func:`snapshot_merge` uses for copy-on-write file
-    pruning (carried-forward files keep their recorded stats);
+    columns, which :func:`snapshot_merge` (on its leading key) and
+    :func:`snapshot_scan` use to skip files (carried-forward files keep
+    their recorded stats);
     ``bloom_cols`` records per-file Bloom lanes for point-lookup file
     skipping (:func:`snapshot_lookup`). ``check`` is an ad-hoc CHECK
     expression for this batch; table-level constraints registered via
@@ -696,6 +763,38 @@ def vacuum(
     return sorted(deleted)
 
 
+def _orderable(v) -> bool:
+    """Whether ``v`` takes part in a total order: NULL and NaN do not."""
+    return v is not None and v == v
+
+
+def _may_hold(s, ckeys) -> bool:
+    """Whether a file whose recorded ``[lo, hi]`` is ``s`` can hold one of
+    the sorted keys ``ckeys``. No key list (``None``), no stats, or stats
+    that do not order mean it may."""
+    import bisect
+
+    if ckeys is None or s is None:
+        return True
+    lo, hi = _stats_decode(s[0]), _stats_decode(s[1])
+    if not (_orderable(lo) and _orderable(hi)):
+        return True
+    i = bisect.bisect_left(ckeys, lo)
+    return i < len(ckeys) and ckeys[i] <= hi
+
+
+def _empty_read(spark, path: str, name: str) -> DataFrame:
+    """A zero-row read of data file ``name``, with the Spark schema its
+    footer records: no schema-inference job, and no scan once optimized."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    f = os.path.join(path, "data", name)
+    kv = pq.ParquetFile(f).metadata.metadata
+    schema = StructType.fromJson(json.loads(kv[_SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(f).limit(0)
+
+
 def snapshot_merge(
     spark,
     path: str,
@@ -704,177 +803,95 @@ def snapshot_merge(
     *,
     seq_col: str = "seq",
     op_col: str = "op",
+    max_change_keys: int = 100_000,
     max_retries: int = 10,
 ) -> int:
     """MERGE INTO for the versioned table: apply a keyed upsert/delete log
-    (:func:`operators.diff.apply_cdc` semantics — highest ``seq`` per key
-    wins, 'D' deletes, later 'U' resurrects) onto the latest snapshot and
-    commit the result as one atomic overwrite version. Readers see either
-    the pre-merge or post-merge table, never a mix; the pre-merge version
-    stays time-travelable. Copy-on-write at table granularity — the
-    honest minimal form; per-file copy-on-write needs file↔key pruning
-    stats (the Delta/Iceberg refinement, same commit protocol).
+    (:func:`operators.diff.apply_cdc` over ``keys`` — highest ``seq`` per
+    key wins, 'D' deletes, later 'U' resurrects) onto the latest snapshot
+    and commit the result as one atomic ``"merge"`` version. Readers see
+    the pre-merge or the post-merge table, never a mix; the pre-merge
+    version stays time-travelable. Merging into a path with no version
+    creates the table (Delta's create-on-first-merge).
 
-    Concurrency: the merged result is only valid against the exact base
-    version it was read from, so a commit landing in between RESTARTS
-    the merge from the new latest (same contract as
-    :func:`snapshot_merge_pruned`) — publishing the stale result would
-    silently drop the racer's rows. ``max_retries`` conflicts →
-    :class:`ConcurrentSnapshotError`."""
+    Copy-on-write per FILE, pruned on ``keys[0]`` (Delta's min/max data
+    skipping): ``changes`` is materialized once, and its distinct leading
+    keys are collected once. A file is hot when its recorded ``[lo, hi]``
+    for ``keys[0]`` contains one of them; only hot files are read (with
+    their deletion vectors applied) and rewritten, and every cold file is
+    carried forward BY NAME with its stats, row count, deletion vector and
+    Bloom. Every file is hot when it has no stats, when the change set
+    holds more than ``max_change_keys`` leading keys (a driver-size
+    guard), or when a leading key is NULL or NaN — the whole-table
+    rewrite is the degenerate case, with the same result. Every merge
+    records ``keys[0]`` stats for the files it writes, so a table built by
+    merges prunes from its second merge on.
+
+    Concurrency: the hot/cold split is only valid against the exact
+    version it was computed from, so a commit landing in between
+    RESTARTS the merge from the new latest version — publishing the stale
+    result would silently drop the racer's rows. The abandoned attempt's
+    data files are unreferenced and reclaimed by :func:`vacuum`.
+    ``max_retries`` conflicts → :class:`ConcurrentSnapshotError`."""
     from .operators.diff import apply_cdc
+    from .planmode import checkpoint
+
+    lead = keys[0]
+    changes = checkpoint(changes)
+    ckeys = None  # every file is hot
+    if _versions(path):  # a new table has no file to prune
+        # a short log's leading keys come back without a shuffle; a long
+        # one pays for DISTINCT to learn whether it is over the guard
+        n = max_change_keys + 1
+        rows = changes.select(lead).limit(n).collect()
+        if len(rows) == n:
+            rows = changes.select(lead).distinct().limit(n).collect()
+        found = {r[0] for r in rows}
+        if len(found) < n and all(map(_orderable, found)):
+            ckeys = sorted(found)
 
     for _ in range(max_retries):
         vs = _versions(path)
         base_version = vs[-1] if vs else None
-        if base_version is None:
-            # MERGE into a not-yet-created table: base is empty with the
-            # change log's row schema (Delta's create-on-first-merge shape)
+        latest = _read_manifest(path, base_version) if vs else {"files": []}
+        files, stats = latest["files"], latest.get("stats", {})
+        hot, cold = [], []
+        for f in files:
+            may = _may_hold(stats.get(f, {}).get(lead), ckeys)
+            (hot if may else cold).append(f)
+        if hot:
+            base = _dv_apply_read(spark, path, latest, hot)
+        elif files:  # nothing to rewrite: no rows, the table's schema
+            base = _empty_read(spark, path, files[0])
+        else:  # create-on-first-merge: the change log's row shape
             base = changes.drop(seq_col, op_col).limit(0)
-        else:
-            base = snapshot_read(spark, path, version=base_version)
         merged = apply_cdc(
             base, changes, keys, seq_col=seq_col, op_col=op_col
         ).drop(seq_col)
-        new_files, counts = _write_data_files(merged, path)
-
-        class _Conflict(Exception):
-            pass
-
-        def build(latest_m):
-            latest_v = latest_m.get("version") if latest_m else None
-            if latest_v != base_version:
-                raise _Conflict  # someone committed since the base read
-            return (new_files, "overwrite", None, {}, counts)
-
-        try:
-            return _publish(path, build)
-        except _Conflict:
-            continue  # restart from the new latest version
-    raise ConcurrentSnapshotError(
-        f"merge at {path} lost {max_retries} publish races; giving up"
-    )
-
-
-def snapshot_merge_pruned(
-    spark,
-    path: str,
-    changes: DataFrame,
-    key: str,
-    *,
-    seq_col: str = "seq",
-    op_col: str = "op",
-    max_change_keys: int = 100_000,
-    max_retries: int = 10,
-) -> int:
-    """Per-FILE copy-on-write MERGE: using the manifest's recorded
-    min/max stats for ``key`` (``snapshot_write(stats_cols=[key])``),
-    only files whose key range can contain a changed key are rewritten;
-    every other file is carried forward BY NAME — at 100 TB with a
-    clustered key this turns a full-table rewrite into touching a few
-    files, which is the entire point of Delta/Iceberg MERGE.
-
-    The changed-key set is collected when ≤ ``max_change_keys`` (exact
-    per-file membership against the [lo, hi] ranges — range overlap
-    alone would touch every file between min and max changed key);
-    larger change sets, or files with no recorded stats, degrade
-    conservatively to "touched". Same apply_cdc semantics as
-    :func:`snapshot_merge`; inserts of unseen keys land in the rewritten
-    file set. One atomic 'merge' commit; pre-merge version time-travels.
-
-    Concurrency: the hot/cold split is only valid against the exact
-    version it was computed from, so a conflicting commit (the latest
-    manifest moved while this merge was writing) RESTARTS the whole
-    merge from the new latest version — re-split, re-read, re-apply.
-    Patching the carried-file list in the publish retry (the previous
-    behavior) silently dropped a racing append's files and any rows the
-    racer rewrote into new cold files: a lost update. The abandoned
-    attempt's data files are unreferenced and reclaimed by
-    :func:`vacuum`. After ``max_retries`` conflicts raises
-    :class:`ConcurrentSnapshotError` rather than live-locking.
-    """
-    import bisect
-
-    from .operators.diff import apply_cdc
-
-    for _ in range(max_retries):
-        vs = _versions(path)
-        if not vs:
-            raise FileNotFoundError(f"no snapshots at {path}")
-        base_version = vs[-1]
-        latest = _read_manifest(path, base_version)
-        files, stats = latest["files"], latest.get("stats", {})
-        counts = latest.get("row_counts", {})
-
-        n_keys = changes.select(key).distinct().count()
-        if n_keys > max_change_keys:
-            return snapshot_merge(
-                spark, path, changes, [key], seq_col=seq_col, op_col=op_col
-            )
-        ckeys = sorted(
-            r[key] for r in changes.select(key).distinct().collect()
-        )
-
-        def touched(f: str) -> bool:
-            s = stats.get(f, {}).get(key)
-            if s is None or s[0] is None:
-                return True  # no stats recorded -> conservative rewrite
-            lo, hi = _stats_decode(s[0]), _stats_decode(s[1])
-            i = bisect.bisect_left(ckeys, lo)
-            return i < len(ckeys) and ckeys[i] <= hi
-
-        hot = [f for f in files if touched(f)]
-        cold = [f for f in files if f not in set(hot)]
-        if hot:
-            # apply any deletion vectors on the hot side — the rewrite
-            # materializes them; cold files keep theirs (carried below)
-            if latest.get("dvs"):
-                hot_df = _dv_apply_read(spark, path, latest, hot)
-            else:
-                hot_df = spark.read.parquet(
-                    *[os.path.join(path, "data", f) for f in hot]
-                )
-        else:
-            hot_df = snapshot_read(spark, path, version=base_version).limit(0)
-        merged = apply_cdc(
-            hot_df, changes, [key], seq_col=seq_col, op_col=op_col
-        ).drop(seq_col)
         new_files, new_counts = _write_data_files(merged, path)
-        new_stats = _file_stats(spark, path, new_files, [key])
-
-        class _Conflict(Exception):
-            pass
+        new_stats = _file_stats(spark, path, new_files, [lead])
 
         def build(latest_m):
-            if latest_m is None or latest_m.get("version") != base_version:
+            if (latest_m or {}).get("version") != base_version:
                 raise _Conflict  # someone committed since the split
-            # carry DV state for the cold files only (hot rewrites just
-            # materialized theirs); no dirty cold files -> DV-free version
-            cold_dv = {
-                f: c
-                for f, c in latest.get("dv_counts", {}).items()
-                if f in set(cold)
-            }
-            dv_meta = (
-                {"dvs": latest["dvs"], "dv_counts": cold_dv}
-                if cold_dv
-                else {}
-            )
-            cold_blooms = {
-                f: b
-                for f, b in latest.get("blooms", {}).items()
-                if f in set(cold)
-            }
-            if cold_blooms:
-                dv_meta["blooms"] = cold_blooms
-            dv_meta = dv_meta or None
+            keep = set(cold)
+
+            def carry(d: dict) -> dict:
+                return {f: x for f, x in d.items() if f in keep}
+
+            meta = {}
+            dv_counts = carry(latest.get("dv_counts", {}))
+            if dv_counts:  # hot rewrites just materialized theirs
+                meta.update(dvs=latest["dvs"], dv_counts=dv_counts)
+            blooms = carry(latest.get("blooms", {}))
+            if blooms:
+                meta["blooms"] = blooms
             return (
                 cold + new_files,
                 "merge",
-                dv_meta,
-                {**{f: s for f, s in stats.items() if f in set(cold)},
-                 **new_stats},
-                {**{f: n for f, n in counts.items() if f in set(cold)},
-                 **new_counts},
+                meta or None,
+                {**carry(stats), **new_stats},
+                {**carry(latest.get("row_counts", {})), **new_counts},
             )
 
         try:
@@ -985,9 +1002,6 @@ def snapshot_delete_dv(
         finally:
             dv_set.unpersist()
 
-        class _Conflict(Exception):
-            pass
-
         def build(latest_m):
             if latest_m is None or latest_m.get("version") != base_version:
                 raise _Conflict
@@ -1035,9 +1049,6 @@ def snapshot_purge_dv(spark, path: str, *, max_retries: int = 10) -> int:
         clean = [f for f in files if not dv_counts.get(f)]
         rows = _dv_apply_read(spark, path, m, dirty)
         new_files, new_counts = _write_data_files(rows, path)
-
-        class _Conflict(Exception):
-            pass
 
         def build(latest_m):
             if latest_m is None or latest_m.get("version") != base_version:
@@ -1184,7 +1195,7 @@ def snapshot_scan(
     """Data-skipping read: open ONLY the files whose recorded [min, max]
     for ``col`` intersects [lo, hi] (manifest stats from
     ``snapshot_write(stats_cols=...)``), then apply the exact predicate —
-    the reader-side twin of :func:`snapshot_merge_pruned`'s pruning, and
+    the reader-side twin of :func:`snapshot_merge`'s pruning, and
     the manifest-level form of parquet footer skipping: with a clustered
     ``col`` a selective scan opens a handful of files out of thousands.
     Files without stats are read conservatively. Same rows as
@@ -1310,7 +1321,7 @@ def snapshot_optimize(
     remain time-travelable; a reader mid-scan of vN is untouched).
     ``stats_cols`` defaults to ``zorder_cols``, so the rewritten files'
     manifests carry the min/max ranges that make :func:`snapshot_scan`
-    and :func:`snapshot_merge_pruned` effective — clustering is what
+    and :func:`snapshot_merge` effective — clustering is what
     turns those stats from decoration into pruning.
     """
     from pyspark.sql import functions as F

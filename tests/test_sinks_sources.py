@@ -55,6 +55,38 @@ def test_append_dedup_keyed_unique_index_semantics(spark):
         assert spark.read.parquet(p).count() == 3
 
 
+def test_append_dedup_keyed_unreadable_sink_raises(spark, tmp_path):
+    """A sink that exists but cannot be read raises instead of being
+    taken for a first write (which would append without dedup), and
+    nothing is appended; a sink holding no data file is a first write."""
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    keys = ["location_id", "timestamp"]
+    df = spark.createDataFrame(
+        [("a", 1, "t1", 1.0)], ["_id", "location_id", "timestamp", "v"]
+    )
+    p = str(tmp_path / "silver")
+    os.makedirs(os.path.join(p, "_temporary"))
+    open(os.path.join(p, "_SUCCESS"), "w").close()
+    append_dedup_keyed(df, p, keys=keys)  # no data file yet: first write
+    assert spark.read.parquet(p).count() == 1
+
+    with open(os.path.join(p, "part-zzzzz.snappy.parquet"), "wb") as f:
+        f.write(b"PAR1 this is not parquet PAR1")
+
+    def data_files():
+        return sorted(f for f in os.listdir(p) if not f.startswith(("_", ".")))
+
+    before = data_files()
+    new_key = spark.createDataFrame(
+        [("b", 2, "t1", 2.0)], ["_id", "location_id", "timestamp", "v"]
+    )
+    with pytest.raises(Py4JJavaError, match="part-zzzzz"):
+        append_dedup_keyed(new_key, p, keys=keys)
+    assert data_files() == before
+
+
 def test_upsert_by_partition_idempotent(spark):
     """S6: keyed upsert as dynamic partition overwrite — rewriting a date
     replaces that date only."""

@@ -101,7 +101,7 @@ def test_snapshot_vacuum_collects_orphans_and_old_versions(spark, tmp_path):
 
 def test_snapshot_merge_upsert_delete_atomic(spark, tmp_path):
     """MERGE on the versioned table: upserts replace by key, deletes
-    remove, the merge is one atomic overwrite commit, and the pre-merge
+    remove, the merge is one atomic commit, and the pre-merge
     version remains time-travelable."""
     from etl_weather_jabar_spark.snapshots import snapshot_merge
 
@@ -177,7 +177,7 @@ def test_snapshot_merge_pruned_rewrites_only_touched_files(spark, tmp_path):
     manifest, only files whose key range contains a changed key are
     rewritten; the rest carry forward BY NAME (byte-identical), and the
     result equals a full-table merge."""
-    from etl_weather_jabar_spark.snapshots import snapshot_merge_pruned
+    from etl_weather_jabar_spark.snapshots import snapshot_merge
 
     path = str(tmp_path / "t")
     base = spark.range(0, 100).select(
@@ -197,7 +197,7 @@ def test_snapshot_merge_pruned_rewrites_only_touched_files(spark, tmp_path):
         [(10, "X", 1, "U"), (15, None, 1, "D"), (1000, "new", 1, "U")],
         ["k", "v", "seq", "op"],
     )
-    v = snapshot_merge_pruned(spark, path, changes, "k")
+    v = snapshot_merge(spark, path, changes, ["k"])
     assert v == 2
 
     got = {(r["k"], r["v"]) for r in snapshot_read(spark, path).collect()}
@@ -419,10 +419,10 @@ def test_snapshot_stream_sink_auto_optimize(spark, tmp_path):
 
 
 def test_snapshot_merge_pruned_falls_back_on_large_changeset(spark, tmp_path):
-    """Above max_change_keys the pruned merge degrades to the full-table
-    form (collecting a huge key set would be a driver hazard) — same
-    result, one overwrite commit."""
-    from etl_weather_jabar_spark.snapshots import snapshot_merge_pruned
+    """Above max_change_keys every file is hot (collecting a huge key
+    set would be a driver hazard): the whole table is rewritten, with
+    the same result, in one 'merge' commit."""
+    from etl_weather_jabar_spark.snapshots import snapshot_merge
 
     path = str(tmp_path / "t")
     base = spark.range(0, 50).select(
@@ -437,10 +437,13 @@ def test_snapshot_merge_pruned_falls_back_on_large_changeset(spark, tmp_path):
         F.lit(1).alias("seq"),
         F.lit("U").alias("op"),
     )
-    v = snapshot_merge_pruned(spark, path, changes, "k", max_change_keys=10)
+    v = snapshot_merge(spark, path, changes, ["k"], max_change_keys=10)
     assert v == 2
     hist = snapshot_history(path)
-    assert hist[-1]["op"] == "overwrite"  # full-merge fallback, not 'merge'
+    assert hist[-1]["op"] == "merge"
+    v1 = json.load(open(os.path.join(path, "_manifests", f"v{1:010d}.json")))
+    v2 = json.load(open(os.path.join(path, "_manifests", f"v{2:010d}.json")))
+    assert not set(v1["files"]) & set(v2["files"])  # nothing carried
     got = {(r["k"], r["v"]) for r in snapshot_read(spark, path).collect()}
     want = {(i, "X") for i in range(30)} | {
         (i, str(i)) for i in range(30, 50)
@@ -649,7 +652,7 @@ def test_snapshot_merge_pruned_restarts_on_concurrent_commit(
         return out
 
     monkeypatch.setattr(snap, "_file_stats", racing_stats)
-    v = snap.snapshot_merge_pruned(spark, path, changes, "k")
+    v = snap.snapshot_merge(spark, path, changes, ["k"])
     got = {(r["k"], r["v"]) for r in snap.snapshot_read(spark, path).collect()}
     want = {(1, "v1"), (2, "V2"), (3, "v3"), (4, "v4"), (5, "v5"), (6, "v6"),
             (100, "racer")}
@@ -725,7 +728,7 @@ def test_snapshot_count_metadata_only(spark, tmp_path):
     overwrite, and per-file merge, without reading any data file."""
     from etl_weather_jabar_spark.snapshots import (
         snapshot_count,
-        snapshot_merge_pruned,
+        snapshot_merge,
     )
 
     path = str(tmp_path / "t")
@@ -739,7 +742,7 @@ def test_snapshot_count_metadata_only(spark, tmp_path):
     changes = spark.createDataFrame(
         [(1, None, 1, "D"), (99, "new", 1, "I")], ["k", "v", "seq", "op"]
     )
-    snapshot_merge_pruned(spark, path, changes, "k")
+    snapshot_merge(spark, path, changes, ["k"])
     assert snapshot_count(path) == snapshot_read(spark, path).count()
     assert snapshot_count(path, version=1) == 12  # time travel counts too
 
@@ -966,7 +969,7 @@ def test_snapshot_merge_pruned_preserves_cold_dvs(spark, tmp_path):
     from etl_weather_jabar_spark.snapshots import (
         snapshot_count,
         snapshot_delete_dv,
-        snapshot_merge_pruned,
+        snapshot_merge,
     )
 
     path = str(tmp_path / "t")
@@ -986,7 +989,7 @@ def test_snapshot_merge_pruned_preserves_cold_dvs(spark, tmp_path):
         [(299, "nv", 1, "U"), (300, None, 1, "D")],
         ["k", "val", "seq", "op"],
     )
-    snapshot_merge_pruned(spark, path, changes, "k")
+    snapshot_merge(spark, path, changes, ["k"])
 
     got = {r["k"]: r["val"] for r in snapshot_read(spark, path).collect()}
     # cold DV deletions survived the merge
@@ -1214,3 +1217,224 @@ def test_snapshot_minmax_metadata_only_and_optimize_blooms(spark, tmp_path):
     n_files = 4
     picked = snapshot_lookup_files(path, "k", [5])
     assert len(picked) < n_files  # optimize-built blooms prune
+
+
+def _whole_table_merge(spark, path, changes, keys):
+    """The merge before file pruning, as the reference: apply_cdc over
+    the full snapshot, published as one overwrite version."""
+    from etl_weather_jabar_spark.operators.diff import apply_cdc
+
+    merged = apply_cdc(snapshot_read(spark, path), changes, keys).drop("seq")
+    return snapshot_write(merged, path, mode="overwrite")
+
+
+def test_snapshot_merge_matches_whole_table_merge(spark, tmp_path):
+    """The file-pruned merge gives the same table as the whole-table
+    merge after every step of one keyed history: new leading keys only,
+    updates and deletes inside one file's range, upsert-after-delete,
+    deletion vectors on hot and on cold files, files written without
+    stats, the two-column key (date, location_id), and change rows with
+    a NULL leading key (every file hot; this used to raise TypeError)."""
+    from etl_weather_jabar_spark.snapshots import (
+        snapshot_count,
+        snapshot_delete_dv,
+        snapshot_merge,
+    )
+
+    keys = ["date", "location_id"]
+    schema = "date STRING, location_id INT, v STRING"
+    ref, got = str(tmp_path / "ref"), str(tmp_path / "got")
+    base = spark.createDataFrame(
+        [(f"2024-01-{d:02d}", loc, f"d{d}l{loc}")
+         for d in range(1, 29) for loc in range(3)],
+        schema,
+    )
+    no_stats = spark.createDataFrame(
+        [(f"2024-03-{d:02d}", 0, "late") for d in range(1, 4)], schema
+    )
+    for p in (ref, got):
+        snapshot_write(
+            base.repartitionByRange(4, "date").sortWithinPartitions("date"),
+            p,
+            stats_cols=["date"],
+        )
+        snapshot_write(no_stats.coalesce(1), p)
+        # a DV in the first file (cold below) and in the third (hot in
+        # the fourth merge)
+        snapshot_delete_dv(
+            spark, p, "date IN ('2024-01-02', '2024-01-17')"
+        )
+
+    def manifest(p, v=None):
+        v = v or snapshot_history(p)[-1]["version"]
+        with open(os.path.join(p, "_manifests", f"v{v:010d}.json")) as f:
+            return json.load(f)
+
+    m1 = manifest(got, 1)
+    first, _, third, _ = sorted(
+        m1["files"], key=lambda f: m1["stats"][f]["date"][0]
+    )
+    assert set(manifest(got)["dv_counts"]) == {first, third}
+
+    def rows(p):
+        return sorted(map(tuple, snapshot_read(spark, p).collect()), key=repr)
+
+    steps = [
+        # new leading keys only: only the stats-less file is hot
+        [("2024-02-01", 0, "n0", 1, "U"), ("2024-02-01", 1, "n1", 1, "U")],
+        # updates and deletes inside one file's range
+        [("2024-01-03", 0, "u", 1, "U"), ("2024-01-03", 1, None, 1, "D"),
+         ("2024-01-04", 2, "u2", 1, "U")],
+        # upsert-after-delete within the log, and re-insert of a key the
+        # previous merge deleted
+        [("2024-01-25", 0, None, 1, "D"), ("2024-01-25", 0, "back", 2, "U"),
+         ("2024-01-03", 1, "again", 1, "U")],
+        # the DV-dirty third file is hot, the DV-dirty first file cold
+        [("2024-01-16", 1, "dv-hot", 1, "U")],
+        # NULL leading keys: every file hot; an insert, then its update
+        [(None, 1, "null-lead", 1, "U"), ("2024-01-10", 1, "x", 1, "U")],
+        [(None, 1, "null-lead-2", 1, "U"), (None, 2, None, 1, "D")],
+    ]
+    hot, n_files = [], []
+    for step in steps:
+        changes = spark.createDataFrame(
+            step, schema + ", seq INT, op STRING"
+        )
+        before = set(manifest(got)["files"])
+        _whole_table_merge(spark, ref, changes, keys)
+        snapshot_merge(spark, got, changes, keys)
+        after = manifest(got)
+        hot.append(before - set(after["files"]))
+        n_files.append(len(before))
+        assert after["op"] == "merge"
+        assert rows(got) == rows(ref), step
+        assert snapshot_count(got) == len(rows(ref))
+    # the stats-less file; the first file; the fourth file and step 1's
+    # file; the DV-dirty third file but not the DV-dirty first one; then
+    # every file, twice
+    assert [len(h) for h in hot[:3]] == [1, 1, 2], hot
+    assert third in hot[3] and first not in hot[3], hot
+    assert [len(h) for h in hot[4:]] == n_files[4:], (hot, n_files)
+    # the DV-deleted days stayed deleted through every merge
+    assert not {r[0] for r in rows(got)} & {"2024-01-02", "2024-01-17"}
+
+
+def test_snapshot_merge_evaluates_changes_once(spark, tmp_path, monkeypatch):
+    """The change frame is evaluated once per merge call — the hot/cold
+    split and the rewrite see the same rows, even across an OCC restart.
+    A Python UDF in the change frame counts its evaluations."""
+    import etl_weather_jabar_spark.snapshots as snap
+
+    path = str(tmp_path / "t")
+    snap.snapshot_write(
+        spark.createDataFrame(
+            [(i, f"v{i}") for i in range(1, 10)], ["k", "v"]
+        ).repartitionByRange(3, "k"),
+        path,
+        stats_cols=["k"],
+    )
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(v):
+        acc.add(1)
+        return v
+
+    bump = F.udf(tick, "string")
+    changes = spark.createDataFrame(
+        [(2, "V2", 1, "U"), (8, "V8", 1, "U"), (50, "new", 1, "U")],
+        ["k", "v", "seq", "op"],
+    ).withColumn("v", bump("v"))
+
+    real_stats = snap._file_stats
+    fired = {"n": 0}
+
+    def racing_stats(*a, **kw):
+        out = real_stats(*a, **kw)
+        if fired["n"] == 0:
+            fired["n"] += 1
+            snap.snapshot_write(
+                spark.createDataFrame([(100, "racer")], ["k", "v"]), path
+            )
+        return out
+
+    monkeypatch.setattr(snap, "_file_stats", racing_stats)
+    v = snap.snapshot_merge(spark, path, changes, ["k"])
+    assert fired["n"] == 1 and v == 3  # one restart happened
+    assert acc.value == 3
+    got = {r["k"]: r["v"] for r in snap.snapshot_read(spark, path).collect()}
+    assert (got[2], got[8], got[50], got[100]) == ("V2", "V8", "new", "racer")
+    assert len(got) == 11
+
+
+def _aggregate_stats(spark, path, files, cols):
+    """Per-file min/max by one Spark aggregate, as _file_stats computed
+    every column before footer stats."""
+    from etl_weather_jabar_spark.snapshots import _stats_encode
+
+    df = spark.read.parquet(*[os.path.join(path, "data", f) for f in files])
+    aggs = []
+    for c in cols:
+        aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
+    return {
+        r["f"]: {
+            c: [_stats_encode(r[f"lo_{c}"]), _stats_encode(r[f"hi_{c}"])]
+            for c in cols
+        }
+        for r in df.groupBy(F.col("_metadata.file_name").alias("f"))
+        .agg(*aggs)
+        .collect()
+    }
+
+
+def test_file_stats_footer_matches_aggregate(spark, tmp_path):
+    """Footer min/max equal Spark's aggregate on long, string and date
+    columns — on a file with some NULLs and on an all-NULL file — and are
+    read without a Spark job; timestamp, decimal and double columns keep
+    the aggregate's values."""
+    import datetime
+    import decimal
+
+    from etl_weather_jabar_spark.snapshots import _file_stats, _write_data_files
+
+    path = str(tmp_path / "t")
+    ts = datetime.datetime
+    rows = [
+        # part 0: values with some NULLs (non-ASCII strings order by bytes)
+        (0, 7, "zeta", datetime.date(1500, 1, 1), ts(2024, 1, 1, 3),
+         decimal.Decimal("1.50"), 1.5),
+        (0, -3, "été", datetime.date(2024, 3, 1), None,
+         decimal.Decimal("-2.25"), float("nan")),
+        (0, None, None, None, ts(2023, 5, 6), None, -0.0),
+        (0, 2**40, "a", datetime.date(1970, 1, 1), ts(2025, 1, 1),
+         decimal.Decimal("9.99"), 0.0),
+        # part 1: every value NULL
+        (1, None, None, None, None, None, None),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "p INT, l LONG, s STRING, d DATE, t TIMESTAMP, m DECIMAL(10,2), "
+        "f DOUBLE",
+    )
+    files, _ = _write_data_files(
+        df.repartitionByRange(2, "p").drop("p"), path
+    )
+    assert len(files) == 2
+    footer_cols = ["l", "s", "d"]
+    sc = spark.sparkContext
+    sc.setJobGroup("footer-stats", "footer stats")
+    try:
+        got = _file_stats(spark, path, files, footer_cols)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("footer-stats") == []
+    want = _aggregate_stats(spark, path, files, footer_cols)
+    assert got == want
+    assert [None, None] in [got[f]["s"] for f in files]  # the all-NULL file
+
+    def as_json(stats):  # NaN compares equal to itself only as text
+        return json.dumps(stats, sort_keys=True)
+
+    for cols in (["t", "m", "f"], footer_cols + ["t", "m", "f"]):
+        assert as_json(_file_stats(spark, path, files, cols)) == as_json(
+            _aggregate_stats(spark, path, files, cols)
+        )

@@ -323,53 +323,62 @@ def test_json_size_observability(spark):
     assert sorted(r["gz"] for r in again) == sorted((gz1, gz2))
 
 
-def test_incremental_recap_rewrites_only_affected_dates(spark, tmp_path):
-    """ST5 data-driven: new Silver rows for day 2 must rebuild ONLY day 2's
-    Gold partition; day 1's files stay byte-identical, and the result
-    equals a full recompute."""
+def test_recap_to_snapshot_carries_untouched_days_by_name(spark, tmp_path):
+    """ST5 data-driven: new Silver rows for day 2 rebuild ONLY day 2's
+    Gold docs; day 1's Gold files are carried forward by name (same
+    names, same mtimes), and the table equals a from-scratch recap."""
+    import json
     import os
 
-    from pyspark.sql import functions as F
+    from etl_weather_jabar_spark.plans.pipelines import recap_to_snapshot
+    from etl_weather_jabar_spark.snapshots import snapshot_read
 
-    from etl_weather_jabar_spark.plans.pipelines import incremental_recap
-    from tests.fixtures import silver_fixture
+    def shifted(hour):
+        return (
+            silver_fixture(spark)
+            .withColumn("date", F.lit("2024-02-02"))
+            .withColumn(
+                "timestamp",
+                F.regexp_replace("timestamp", "2024-02-01", "2024-02-02"),
+            )
+            .where(F.col("hour") == hour)
+        )
+
+    def files(table):
+        mdir = os.path.join(table, "_manifests")
+        with open(os.path.join(mdir, sorted(os.listdir(mdir))[-1])) as f:
+            names = json.load(f)["files"]
+        return {
+            n: os.path.getmtime(os.path.join(table, "data", n)) for n in names
+        }
 
     gold = str(tmp_path / "gold")
     day1 = silver_fixture(spark)
-    day2_v1 = (
-        day1.withColumn("date", F.lit("2024-02-02"))
-        .withColumn("timestamp", F.regexp_replace("timestamp", "2024-02-01", "2024-02-02"))
-        .where(F.col("hour") == "08")
-    )
-    silver_v1 = day1.unionByName(day2_v1)
-    incremental_recap(silver_v1, silver_v1, gold)
+    recap_to_snapshot(day1, day1, gold)
+    day1_files = files(gold)
+    day2_08, day2_09 = shifted("08"), shifted("09")
+    silver_v1 = day1.unionByName(day2_08)
+    recap_to_snapshot(silver_v1, day2_08, gold)
+    silver_v2 = silver_v1.unionByName(day2_09)
+    recap_to_snapshot(silver_v2, day2_09, gold)
 
-    def snap(date):
-        d = f"{gold}/date={date}"
-        return {f: os.path.getmtime(f"{d}/{f}") for f in os.listdir(d)}
-
-    day1_before = snap("2024-02-01")
-
-    # new batch: extra hour-09 rows for day 2 only
-    day2_new = (
-        day1.withColumn("date", F.lit("2024-02-02"))
-        .withColumn("timestamp", F.regexp_replace("timestamp", "2024-02-01", "2024-02-02"))
-        .where(F.col("hour") == "09")
-    )
-    silver_v2 = silver_v1.unionByName(day2_new)
-    incremental_recap(silver_v2, day2_new, gold)
-
-    assert snap("2024-02-01") == day1_before  # untouched partition intact
-    got = spark.read.parquet(gold)
+    now = files(gold)
+    assert {n: now[n] for n in day1_files if n in now} == day1_files
+    got = snapshot_read(spark, gold)
     assert got.where(F.col("date") == "2024-02-02").select(
         F.explode("hourly").alias("h")
     ).select("h.hour").distinct().count() == 2  # hours 08 + 09 now present
-    # equals a from-scratch full recompute
+    # equals a from-scratch recap of all of Silver
     full = str(tmp_path / "gold_full")
-    incremental_recap(silver_v2, silver_v2, full)
-    a = {tuple(r) for r in spark.read.parquet(gold).select("date", "location_id", F.size("hourly")).collect()}
-    b = {tuple(r) for r in spark.read.parquet(full).select("date", "location_id", F.size("hourly")).collect()}
-    assert a == b
+    recap_to_snapshot(silver_v2, silver_v2, full)
+
+    def docs(table):
+        return sorted(
+            repr(r.asDict(recursive=True))
+            for r in snapshot_read(spark, table).collect()
+        )
+
+    assert docs(gold) == docs(full)
 
 
 def test_haversine_and_nearest_station(spark):

@@ -18,8 +18,9 @@ tables:
   The predicate scan is corpus-sized but file-writing is NOT: expected
   to grow far slower than the rewrite (scan-bound, no shuffle, no
   data-file writes).
-* ``cow``   — ``snapshot_merge`` with 64 'D' change rows: the honest
-  table-granularity copy-on-write rewrite (every file rewritten).
+* ``cow``   — ``snapshot_merge`` with 64 'D' change rows: the
+  copy-on-write rewrite (the table records no stats, so every file is
+  hot and rewritten).
   Expected to grow linearly with the corpus.
 
 Also timed at every size: the post-delete full read with the DV
