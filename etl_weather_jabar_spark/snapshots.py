@@ -238,27 +238,55 @@ _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 # strings in the default collation (both order UTF-8 bytes unsigned) and
 # dates. INT96 timestamps carry no footer stats, pyarrow cannot decode
 # decimal stats, and float stats order NaN and -0.0 unlike Spark, so every
-# other type takes the aggregate job.
-_FOOTER_STATS_TYPES = {"byte", "short", "integer", "long", "string", "date"}
+# other type takes the aggregate job. Each maps to the parquet physical
+# type and the converted types a column of that Spark type is stored as.
+_FOOTER_STATS_TYPES = {
+    "byte": ("INT32", {"INT_8"}),
+    "short": ("INT32", {"INT_16"}),
+    "integer": ("INT32", {"NONE", "INT_32"}),
+    "long": ("INT64", {"NONE", "INT_64"}),
+    "string": ("BYTE_ARRAY", {"UTF8"}),
+    "date": ("INT32", {"DATE"}),
+}
+
+# The most keys a driver-side pruning pass collects (the driver-size guard
+# of :func:`snapshot_merge` and of ``sinks.append_dedup_keyed``).
+_MAX_DRIVER_KEYS = 100_000
+
+
+def _footer_fields(md) -> dict:
+    """``{name: field JSON}`` of the Spark schema recorded in one file's
+    parquet footer, or ``{}`` when none is (e.g. a file pyarrow wrote)."""
+    kv = md.metadata or {}
+    if _SPARK_SCHEMA_KEY not in kv:
+        return {}
+    return {x["name"]: x for x in json.loads(kv[_SPARK_SCHEMA_KEY])["fields"]}
 
 
 def _footer_minmax(md, field: dict | None):
     """``(lo, hi)`` of the top-level column ``field`` (its Spark schema
     JSON) from one file's parquet footer — ``(None, None)`` when every
     value is NULL — or ``None`` when the footer cannot give Spark's
-    answer."""
+    answer: the file lacks the column, or stores it as another type."""
     if (
         field is None
         or field["type"] not in _FOOTER_STATS_TYPES
         or "__COLLATIONS" in field.get("metadata", {})
         or (field["type"] == "date"
-            and b"org.apache.spark.legacyDateTime" in md.metadata)
+            and b"org.apache.spark.legacyDateTime" in (md.metadata or {}))
     ):
         return None
+    physical, converted = _FOOTER_STATS_TYPES[field["type"]]
     idx = next(
-        i for i in range(len(md.schema))
-        if md.schema.column(i).path == field["name"]
+        (i for i in range(len(md.schema))
+         if md.schema.column(i).path == field["name"]),
+        None,
     )
+    if idx is None:
+        return None
+    col = md.schema.column(idx)
+    if col.physical_type != physical or col.converted_type not in converted:
+        return None
     lo = hi = None
     for g in range(md.num_row_groups):
         rg = md.row_group(g)
@@ -290,10 +318,7 @@ def _file_stats(spark, path: str, files: list[str], cols: list[str]) -> dict:
         md = pq.ParquetFile(os.path.join(path, "data", f)).metadata
         if md.num_rows == 0:
             continue
-        fields = {
-            x["name"]: x
-            for x in json.loads(md.metadata[_SPARK_SCHEMA_KEY])["fields"]
-        }
+        fields = _footer_fields(md)
         got = {c: _footer_minmax(md, fields.get(c)) for c in cols}
         if None in got.values():
             todo.append(f)
@@ -803,7 +828,7 @@ def snapshot_merge(
     *,
     seq_col: str = "seq",
     op_col: str = "op",
-    max_change_keys: int = 100_000,
+    max_change_keys: int = _MAX_DRIVER_KEYS,
     max_retries: int = 10,
 ) -> int:
     """MERGE INTO for the versioned table: apply a keyed upsert/delete log

@@ -87,6 +87,217 @@ def test_append_dedup_keyed_unreadable_sink_raises(spark, tmp_path):
     assert data_files() == before
 
 
+def _reference_append_dedup_keyed(df, path, keys, order_col="_id"):
+    """The keyed append before footer pruning: every batch is anti-joined
+    against the key columns of every sink file."""
+    from etl_weather_jabar_spark.operators.dedup import dedupe_keep_first
+    from etl_weather_jabar_spark.sinks import _data_files
+
+    batch = dedupe_keep_first(df, keys, order_by=[order_col])
+    if not _data_files(path):
+        batch.write.mode("append").parquet(path)
+        return
+    existing = df.sparkSession.read.parquet(path).select(*keys)
+    batch.join(existing, on=keys, how="left_anti").write.mode("append").parquet(path)
+
+
+def _differential_appends(spark, tmp_path, monkeypatch, schema, keys, steps):
+    """Run ``steps`` through the pruned keyed append and the reference on
+    two sinks and require equal rows after each step. A step is
+    ``("batch", rows, want_hot)`` — ``want_hot`` names the sink files the
+    pruned append must read: ``"B<i>"`` for the file written by batch
+    ``i`` (1-based), or a pyarrow file's name — or ``("file", name,
+    write)``, where ``write(path)`` puts one pyarrow file into a sink.
+    The reference sink's schema is inferred from its first file by name,
+    a Spark-written ``part-0…`` file, so pyarrow files are named after it."""
+    import etl_weather_jabar_spark.sinks as sinks
+
+    new, ref = str(tmp_path / "new"), str(tmp_path / "ref")
+    seen = []
+    real = sinks._hot_files
+
+    def spy(*a):
+        hot = real(*a)
+        seen.append({os.path.basename(f) for f in hot})
+        return hot
+
+    monkeypatch.setattr(sinks, "_hot_files", spy)
+    label, n_batch = {}, 0
+    for kind, data, arg in steps:
+        if kind == "file":
+            for p in (new, ref):
+                os.makedirs(p, exist_ok=True)
+                arg(os.path.join(p, data))
+            label[data] = data
+            continue
+        n_batch += 1
+        before = {os.path.basename(f) for f in sinks._data_files(new)}
+        seen.clear()
+        df = spark.createDataFrame(data, schema)
+        sinks.append_dedup_keyed(df, new, keys=keys)
+        _reference_append_dedup_keyed(df, ref, keys=keys)
+        if arg is not None:
+            assert seen == [{label[x] for x in arg}], (n_batch, seen, label)
+        for f in {os.path.basename(f) for f in sinks._data_files(new)} - before:
+            label[f"B{n_batch}"] = f
+
+        def rows(p):
+            got = spark.read.schema(schema).parquet(p).collect()
+            return sorted((tuple(r) for r in got), key=repr)
+
+        assert rows(new) == rows(ref), n_batch
+
+
+def test_append_dedup_keyed_matches_full_sink_antijoin(spark, tmp_path, monkeypatch):
+    """The footer-pruned keyed append lands the same rows as the old
+    full-sink anti-join on a (long, string) key, through a disjoint tick
+    (no file read), collisions in one and in several files, keys on a
+    file's lo and hi, non-ASCII keys, NULL key components, in-batch
+    duplicates, a two-row-group file, a stats-less file, pyarrow files
+    with no Spark schema, a file lacking a key column and a replay that
+    makes every file hot."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = "_id string, location_id long, timestamp string, v double"
+    arrow = pa.schema([("_id", pa.string()), ("location_id", pa.int64()),
+                       ("timestamp", pa.string()), ("v", pa.float64())])
+
+    def pyarrow_file(rows, **kw):
+        cols = list(zip(*rows))
+        t = pa.table({f.name: list(c) for f, c in zip(arrow, cols)}, schema=arrow)
+        return lambda p: pq.write_table(t, p, **kw)
+
+    def nokey_file(p):  # lacks the timestamp key column
+        pq.write_table(pa.table({"_id": ["k1"], "location_id": pa.array([10], pa.int64()),
+                                 "v": [0.5]}), p)
+
+    b1 = [("a1", 1, "t100", 1.0), ("a2", 2, "t100", 2.0), ("a3", 3, "t100", 3.0),
+          ("a4", 1, "t110", 4.0), ("a6", 2, "t110", 5.0), ("a5", 2, "t110", 5.5),
+          ("a7", 3, "t110", 6.0), ("a8", None, "t100", 7.0), ("a9", 2, None, 8.0)]
+    b2 = [("b1", 1, "t200", 1.0), ("b2", 2, "t200", 2.0), ("b3", 3, "t210", 3.0),
+          ("b4", 5, "t2ü0", 4.0)]
+    b3 = [("c1", 2, "t110", 1.0), ("c2", 3, "t300", 2.0), ("c3", None, "t300", 3.0),
+          ("c4", 10, "t700", 4.0)]
+    b4 = [("d1", 1, "t100", 1.0), ("d2", 5, "t2ü0", 2.0), ("d3", 3, "t300", 3.0),
+          ("d4", 8, "t530", 4.0), ("d5", 9, "t600", 5.0), ("d7", 6, "t400", 6.0),
+          ("d6", 6, "t400", 6.5), ("d8", 6, None, 7.0)]
+    always = ["part-p-nostats.parquet", "part-p-nokey.parquet"]
+    _differential_appends(spark, tmp_path, monkeypatch, schema, ["location_id", "timestamp"], [
+        ("batch", b1, None),  # first write
+        ("batch", b2, []),  # disjoint: no file is read
+        ("file", "part-p-multi.parquet",
+         pyarrow_file([("m1", 7, "t500", 0.0), ("m2", 7, "t510", 0.0),
+                       ("m3", 8, "t520", 0.0), ("m4", 8, "t530", 0.0)], row_group_size=2)),
+        ("file", always[0], pyarrow_file([("n1", 9, "t600", 0.0)], write_statistics=False)),
+        ("file", always[1], nokey_file),
+        ("batch", b3, ["B1", *always]),  # collides inside one file
+        # lo/lo of B1, non-ASCII hi/hi of B2, B3, the multi-row-group
+        # file's second row group, and the stats-less file's key
+        ("batch", b4, ["B1", "B2", "B3", "part-p-multi.parquet", *always]),
+        ("batch", b4, ["B1", "B2", "B3", "B4", "part-p-multi.parquet", *always]),
+    ])
+
+
+def test_append_dedup_keyed_matches_full_sink_antijoin_date_key(
+    spark, tmp_path, monkeypatch
+):
+    """The same equality on a (date, long) key: a disjoint day reads no
+    file, keys on lo and hi read exactly the files they hit, a replay
+    reads every file. With Spark's listing-job threshold at one path,
+    two hot files already make the append read the whole sink."""
+    import datetime
+
+    def d(day):
+        return datetime.date(2024, 1, 1) + datetime.timedelta(days=day)
+
+    schema = "_id string, day date, location_id long, v double"
+    b1 = [("a1", d(0), 1, 1.0), ("a2", d(0), 2, 2.0), ("a3", d(1), 1, 3.0),
+          ("a4", d(1), 2, 4.0)]
+    b2 = [("b1", d(30), 1, 1.0), ("b2", d(30), 2, 2.0)]
+    b3 = [("c1", d(0), 1, 1.0), ("c2", d(30), 2, 2.0), ("c4", d(60), 3, 3.0),
+          ("c3", d(60), 3, 3.5), ("c5", None, 1, 4.0)]
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.conf.set(threshold, "1")
+    try:
+        _differential_appends(spark, tmp_path, monkeypatch, schema, ["day", "location_id"], [
+            ("batch", b1, None),
+            ("batch", b2, []),
+            ("batch", b3, ["B1", "B2"]),
+            ("batch", b3, ["B1", "B2", "B3"]),
+        ])
+    finally:
+        spark.conf.unset(threshold)
+
+
+def test_append_dedup_keyed_unprunable_key_skips_staging(spark, tmp_path, monkeypatch):
+    """A key type without exact footer stats (timestamp) anti-joins the
+    whole sink without staging the batch, landing the same rows as the
+    reference."""
+    import datetime
+
+    import etl_weather_jabar_spark.sinks as sinks
+
+    def staged(*_a):
+        raise AssertionError("the batch was staged")
+
+    monkeypatch.setattr(sinks, "_hot_files", staged)
+
+    def ts(m):
+        return datetime.datetime(2024, 1, 1) + datetime.timedelta(minutes=m)
+
+    schema = "_id string, ts timestamp, location_id long, v double"
+    b1 = [("a1", ts(0), 1, 1.0), ("a2", ts(10), 1, 2.0), ("a3", ts(10), None, 3.0)]
+    b2 = [("b2", ts(10), 1, 1.0), ("b1", ts(20), 1, 2.0), ("b0", ts(20), 1, 2.5)]
+    _differential_appends(spark, tmp_path, monkeypatch, schema, ["ts", "location_id"], [
+        ("batch", b1, None),
+        ("batch", b2, None),
+        ("batch", b2, None),
+    ])
+    assert not [f for f in os.listdir(tmp_path / "new") if f.startswith("_staging-")]
+
+
+def test_append_dedup_keyed_failure_leaves_nothing_behind(spark, tmp_path, monkeypatch):
+    """A keyed append that fails — on an unreadable sink file, or between
+    the staged write and the commit — leaves no staging directory and no
+    new visible data file."""
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    import etl_weather_jabar_spark.sinks as sinks
+
+    keys = ["location_id", "timestamp"]
+    cols = ["_id", "location_id", "timestamp", "v"]
+    p = str(tmp_path / "silver")
+    sinks.append_dedup_keyed(spark.createDataFrame([("a", 1, "t1", 1.0)], cols), p, keys=keys)
+
+    def listing():  # visible files and staging directories
+        return sorted(
+            f for f in os.listdir(p)
+            if f.startswith("_staging-") or not f.startswith(("_", "."))
+        )
+
+    new_key = spark.createDataFrame([("b", 2, "t2", 2.0)], cols)
+    bad = os.path.join(p, "part-zzzzz.snappy.parquet")
+    with open(bad, "wb") as f:
+        f.write(b"PAR1 this is not parquet PAR1")
+    before = listing()
+    with pytest.raises(Py4JJavaError, match="part-zzzzz"):
+        sinks.append_dedup_keyed(new_key, p, keys=keys)
+    assert listing() == before
+    os.remove(bad)
+
+    def fail(*_a):
+        raise RuntimeError("injected")
+
+    monkeypatch.setattr(sinks, "_hot_files", fail)
+    before = listing()
+    with pytest.raises(RuntimeError, match="injected"):
+        sinks.append_dedup_keyed(new_key, p, keys=keys)
+    assert listing() == before
+    assert spark.read.parquet(p).count() == 1
+
+
 def test_upsert_by_partition_idempotent(spark):
     """S6: keyed upsert as dynamic partition overwrite — rewriting a date
     replaces that date only."""
@@ -391,6 +602,37 @@ def test_append_zordered_with_frozen_bounds(spark, tmp_path):
     # a second optimize with the same bounds_path reuses the frozen stats
     optimize_zorder(spark, path, ["x", "y"], n_files=12, bits=8, bounds_path=bpath)
     assert spark.read.parquet(path).count() == 12000
+
+
+def test_optimize_zorder_corrupt_bounds_raises(spark, tmp_path):
+    """A frozen bounds file that cannot be read raises; it is neither
+    recomputed nor overwritten, and the table is not rewritten."""
+    import glob
+
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    from etl_weather_jabar_spark.sinks import optimize_zorder
+
+    path = str(tmp_path / "t")
+    bpath = str(tmp_path / "t_bounds")
+    spark.createDataFrame([(i, 7 * i % 64) for i in range(64)], ["x", "y"]).write.parquet(path)
+    optimize_zorder(spark, path, ["x", "y"], n_files=2, bits=4, bounds_path=bpath)
+    (bfile,) = glob.glob(os.path.join(bpath, "part-*.parquet"))
+    os.remove(os.path.join(bpath, f".{os.path.basename(bfile)}.crc"))
+    with open(bfile, "wb") as f:
+        f.write(b"PAR1 this is not parquet PAR1")
+
+    def state(p):
+        return {
+            f: open(os.path.join(p, f), "rb").read() for f in sorted(os.listdir(p))
+        }
+
+    table, bounds = state(path), state(bpath)
+    with pytest.raises(Py4JJavaError):
+        optimize_zorder(spark, path, ["x", "y"], n_files=2, bits=4, bounds_path=bpath)
+    assert state(path) == table
+    assert state(bpath) == bounds
 
 
 def test_orc_roundtrip_partition_pruning(spark, tmp_path):
