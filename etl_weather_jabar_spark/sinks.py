@@ -15,20 +15,24 @@ an anti-join, never a driver-side ``$nin`` list (SURVEY §4.2).
 
 Like a unique-index probe touches only its key's entry, the keyed append
 reads only the sink files that can collide (Delta's min/max data
-skipping, here from the parquet footers): a file is hot when one batch
-key with no NULL component lies inside the file's footer ``[lo, hi]`` on
-every key column. A file whose footer cannot answer — a missing or
-differently typed key column, a row group without stats, an unreadable
-footer — is hot; a key type without exact footer stats anti-joins the
-whole sink. The batch is staged once under ``<sink>/_staging-<uuid>``
-(hidden from readers); with no hot file its data files are renamed into
-the sink, otherwise the staged rows are anti-joined against the hot files
-and appended. The check and the commit are not atomic: two concurrent
-appenders can both insert one key.
+skipping, here from the parquet footers). The batch is written as given
+under ``<sink>/_staging-<uuid>`` (hidden from readers) and its keys are
+read back on the driver. A sink file is hot when one batch key with no
+NULL component lies inside the file's footer ``[lo, hi]`` on every key
+column. A file whose footer cannot answer — a missing or differently
+typed key column, a row group without stats, an unreadable footer — is
+hot; a key type without exact footer stats, or a collated string key,
+anti-joins the whole sink.
+When no two staged keys are equal and no file is hot, the staged files
+are renamed into the sink; otherwise the staged rows are deduplicated
+keep-first (only if keys repeat), anti-joined against the hot files (if
+any) and appended. The check and the commit are not atomic: two
+concurrent appenders can both insert one key.
 """
 
 from __future__ import annotations
 
+import bisect
 import os
 
 from pyspark.sql import DataFrame
@@ -93,14 +97,20 @@ def append_dedup_keyed(
     reference's insertion-order survivor, transform_raw_weather.py:92-97);
     against the existing sink, left-anti on the key columns.
 
-    Scale: the batch is written once; its keys are read back on the
-    driver and pruned against every sink file's footer, so a tick whose
-    keys are new reads no sink data at all. Only the hot files' key
-    columns are read, so the cost follows the files a batch overlaps, not
-    the sink's size. A batch that does collide pays the staged write on
-    top of the anti-join and its append. Key types without exact footer
-    stats skip the staging and anti-join the whole sink; above 100,000
-    staged rows every file is hot.
+    Scale: the batch is written once, as given, and its keys are read
+    back on the driver. A batch whose keys are distinct and new runs no
+    shuffle and reads no sink data: its staged files are renamed into
+    the sink. That holds for a tick only when its data repeats no key:
+    ``transform_stage`` deduplicates on the Bronze key (location,
+    ``dag_times.end``), not on this one, so a live doc ending at E and a
+    history doc whose logical date is E, for one station, repeat a key.
+    Each append opens every sink file's footer (about 50 ms at 148 files
+    on a 4-vCPU VM); only the hot files' key columns are read. A batch
+    that repeats a key or collides pays a second write (keep-first
+    and/or anti-join) on top of the staged one. Key types without exact
+    footer stats, and collated strings, skip the staging and anti-join
+    the whole sink; above 100,000 staged rows the batch is deduplicated
+    and every file is hot.
     """
     import shutil
     import uuid
@@ -111,37 +121,56 @@ def append_dedup_keyed(
     from .snapshots import _FOOTER_STATS_TYPES
 
     spark = df.sparkSession
-    batch = dedupe_keep_first(df, keys, order_by=[order_col])
+    # resolved up front (against the analyzed plan, no new analysis): the
+    # rename below never reads it, and a batch without it must fail
+    # whatever its keys
+    df[order_col]
     files = _data_files(path)
     if not files:  # first write: nothing to collide with
-        batch.write.mode("append").parquet(path)
+        dedupe_keep_first(df, keys, order_by=[order_col]).write.mode("append").parquet(path)
         return
     # any read error (a corrupt file, a schema clash) propagates: a sink
     # that cannot be read must not be appended to without dedup
-    if any(batch.schema[k].dataType.typeName() not in _FOOTER_STATS_TYPES for k in keys):
+    if any(
+        df.schema[k].dataType.typeName() not in _FOOTER_STATS_TYPES
+        # a collated string's equality is neither Python's nor its footer's
+        or "__COLLATIONS" in df.schema[k].jsonValue()["metadata"]
+        for k in keys
+    ):
         # footers cannot prune on these keys: anti-join the whole sink
+        batch = dedupe_keep_first(df, keys, order_by=[order_col])
         existing = spark.read.parquet(path).select(*keys)
         batch.join(existing, on=keys, how="left_anti").write.mode("append").parquet(path)
         return
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
     try:
-        batch.write.parquet(staging)
-        hot = _hot_files(files, _data_files(staging), batch.schema, keys)
-        if not hot:  # no batch key can be in the sink
+        df.write.parquet(staging)
+        staged = _data_files(staging)
+        batch_keys = _staged_keys(staged, keys)
+        # NULL components compare equal here, as in the window's partitions
+        repeats = batch_keys is None or len(set(batch_keys)) < len(batch_keys)
+        hot = _hot_files(files, batch_keys, df.schema, keys)
+        if not repeats and not hot:
             for name in os.listdir(staging):
                 if not name.startswith(("_", "._")):  # data files, their .crc
                     os.rename(os.path.join(staging, name), os.path.join(path, name))
             return
         # Spark lists more paths than this with a job of its own (0.8 s for
-        # 140 paths on a 4-vCPU VM); listing the whole sink is cheaper then
-        limit = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
-        staged = spark.read.schema(batch.schema).parquet(staging)
-        existing = (
-            spark.read.schema(StructType([batch.schema[k] for k in keys]))
-            .option("basePath", path)
-            .parquet(*(hot if len(hot) <= int(limit) else [path]))
+        # 140 paths on a 4-vCPU VM); listing their directory is cheaper then
+        limit = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+        # by file: Spark warns on a root directory named _staging-… (hidden)
+        new = spark.read.schema(df.schema).parquet(
+            *(staged if len(staged) <= limit else [staging])
         )
-        new = staged.join(existing, on=keys, how="left_anti")
+        if repeats:
+            new = dedupe_keep_first(new, keys, order_by=[order_col])
+        if hot:
+            existing = (
+                spark.read.schema(StructType([df.schema[k] for k in keys]))
+                .option("basePath", path)
+                .parquet(*(hot if len(hot) <= limit else [path]))
+            )
+            new = new.join(existing, on=keys, how="left_anti")
         new.write.mode("append").parquet(path)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
@@ -162,36 +191,51 @@ def _data_files(path: str) -> list[str]:
     return out
 
 
+def _staged_keys(staged: list[str], keys: list[str]) -> list[tuple] | None:
+    """The key of every row in the ``staged`` files, NULL components
+    included, or ``None`` when the driver cannot tell keys apart as Spark
+    does: more rows than the driver guard, or dates written with legacy
+    rebasing."""
+    import pyarrow.parquet as pq
+
+    from .snapshots import _MAX_DRIVER_KEYS
+
+    parts = [pq.ParquetFile(f) for f in staged]
+    if (
+        sum(p.metadata.num_rows for p in parts) > _MAX_DRIVER_KEYS
+        # rebased dates read back differently outside Spark
+        or any(b"org.apache.spark.legacyDateTime" in (p.metadata.metadata or {})
+               for p in parts)
+    ):
+        return None
+    out = []
+    for p in parts:
+        t = p.read(columns=keys)
+        out += zip(*(t.column(k).to_pylist() for k in keys))
+    return out
+
+
 def _hot_files(
-    files: list[str], staged: list[str], schema, keys: list[str]
+    files: list[str], batch_keys: list[tuple] | None, schema, keys: list[str]
 ) -> list[str]:
-    """The sink ``files`` that may hold a key of the ``staged`` batch
-    files (whose Spark schema is ``schema``): those whose footer
+    """The sink ``files`` that may hold one of ``batch_keys`` (``None``:
+    every file), whose Spark schema is ``schema``: those whose footer
     ``[lo, hi]`` holds one NULL-free batch key on every key column, and
     every file whose footer cannot tell."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .snapshots import _MAX_DRIVER_KEYS, _footer_fields, _footer_minmax
+    from .snapshots import _footer_fields, _footer_minmax
 
-    parts = [pq.ParquetFile(f) for f in staged]
-    if sum(p.metadata.num_rows for p in parts) > _MAX_DRIVER_KEYS or any(
-        # rebased dates read back differently outside Spark
-        b"org.apache.spark.legacyDateTime" in (p.metadata.metadata or {})
-        for p in parts
-    ):
+    if batch_keys is None:
         return files
-    batch_keys = []
-    for p in parts:
-        t = p.read(columns=keys)
-        batch_keys += zip(*(t.column(k).to_pylist() for k in keys))
     # a key with a NULL component never equals a sink key: always appended
-    batch_keys = [k for k in batch_keys if None not in k]
-    if not batch_keys:
+    live = [k for k in batch_keys if None not in k]
+    if not live:
         return []
-    # the batch's own [lo, hi] per key column; a file outside it skips the
-    # per-key test (148 files, 311 keys on a 4-vCPU VM: 0.2 ms, not 50 ms)
-    box = [(min(c), max(c)) for c in zip(*batch_keys)]
+    # per key column, the live keys sorted on it and those sorted values
+    by_col = [sorted(live, key=lambda t, c=c: t[c]) for c in range(len(keys))]
+    values = [[t[c] for t in s] for c, s in enumerate(by_col)]
     fields = {k: schema[k].jsonValue() for k in keys}
 
     def ranges(f: str):
@@ -210,13 +254,21 @@ def _hot_files(
         return None if None in out else out
 
     def may_collide(rs) -> bool:
-        if any(
-            lo is None or lo > bhi or hi < blo  # lo None: every value NULL
-            for (lo, hi), (blo, bhi) in zip(rs, box)
-        ):
-            return False
+        """A file is cold when some column's ``[lo, hi]`` holds no batch
+        value; otherwise test the keys inside it on its narrowest column."""
+        best = None
+        for c, (lo, hi) in enumerate(rs):
+            if lo is None:  # every value NULL
+                return False
+            i = bisect.bisect_left(values[c], lo)
+            j = bisect.bisect_right(values[c], hi, i)
+            if i == j:
+                return False
+            if best is None or j - i < best[2] - best[1]:
+                best = (c, i, j)
+        c, i, j = best
         return any(
-            all(lo <= v <= hi for v, (lo, hi) in zip(k, rs)) for k in batch_keys
+            all(lo <= v <= hi for v, (lo, hi) in zip(k, rs)) for k in by_col[c][i:j]
         )
 
     hot = []

@@ -105,11 +105,15 @@ def _differential_appends(spark, tmp_path, monkeypatch, schema, keys, steps):
     """Run ``steps`` through the pruned keyed append and the reference on
     two sinks and require equal rows after each step. A step is
     ``("batch", rows, want_hot)`` — ``want_hot`` names the sink files the
-    pruned append must read: ``"B<i>"`` for the file written by batch
+    pruned append must read: ``"B<i>"`` for the files written by batch
     ``i`` (1-based), or a pyarrow file's name — or ``("file", name,
     write)``, where ``write(path)`` puts one pyarrow file into a sink.
+    A list of rows is one partition, so its batch lands one file; pass a
+    DataFrame for any other partitioning.
     The reference sink's schema is inferred from its first file by name,
     a Spark-written ``part-0…`` file, so pyarrow files are named after it."""
+    from pyspark.sql import DataFrame
+
     import etl_weather_jabar_spark.sinks as sinks
 
     new, ref = str(tmp_path / "new"), str(tmp_path / "ref")
@@ -128,24 +132,27 @@ def _differential_appends(spark, tmp_path, monkeypatch, schema, keys, steps):
             for p in (new, ref):
                 os.makedirs(p, exist_ok=True)
                 arg(os.path.join(p, data))
-            label[data] = data
+            label[data] = {data}
             continue
         n_batch += 1
         before = {os.path.basename(f) for f in sinks._data_files(new)}
         seen.clear()
-        df = spark.createDataFrame(data, schema)
+        if isinstance(data, DataFrame):
+            df = data
+        else:
+            df = spark.createDataFrame(data, schema).coalesce(1)
         sinks.append_dedup_keyed(df, new, keys=keys)
         _reference_append_dedup_keyed(df, ref, keys=keys)
         if arg is not None:
-            assert seen == [{label[x] for x in arg}], (n_batch, seen, label)
-        for f in {os.path.basename(f) for f in sinks._data_files(new)} - before:
-            label[f"B{n_batch}"] = f
+            assert seen == [set().union(*(label[x] for x in arg))], (n_batch, seen, label)
+        label[f"B{n_batch}"] = {os.path.basename(f) for f in sinks._data_files(new)} - before
 
         def rows(p):
             got = spark.read.schema(schema).parquet(p).collect()
             return sorted((tuple(r) for r in got), key=repr)
 
         assert rows(new) == rows(ref), n_batch
+    return label
 
 
 def test_append_dedup_keyed_matches_full_sink_antijoin(spark, tmp_path, monkeypatch):
@@ -255,6 +262,124 @@ def test_append_dedup_keyed_unprunable_key_skips_staging(spark, tmp_path, monkey
         ("batch", b2, None),
     ])
     assert not [f for f in os.listdir(tmp_path / "new") if f.startswith("_staging-")]
+
+
+def test_append_dedup_keyed_repeated_keys_match_full_sink_antijoin(
+    spark, tmp_path, monkeypatch
+):
+    """Staged keys that repeat are deduplicated keep-first after staging,
+    landing the reference's rows: with no hot file, with NULL key
+    components (equal to each other, as in the window), and across the
+    files of a batch spanning several partitions. A batch of distinct new
+    keys in several partitions lands one file per partition."""
+    schema = "_id string, location_id long, timestamp string, v double"
+    b1 = [("a1", 1, "t100", 1.0), ("a2", 2, "t100", 2.0)]
+    # the survivor comes second in the batch
+    b2 = [("b9", 5, "t500", 1.0), ("b1", 5, "t500", 2.0), ("b2", 6, "t500", 3.0)]
+    b3 = [("c9", None, "t600", 1.0), ("c1", None, "t600", 2.0), ("c8", 7, None, 3.0),
+          ("c2", 7, None, 4.0), ("c3", 7, "t600", 5.0)]
+    multi = [(f"d{i}", 10 + i, "t700", float(i)) for i in range(6)]
+    replay = [("e9", 10, "t700", 0.0), ("e1", 16, "t700", 0.0), ("e2", 16, "t700", 0.0),
+              ("e0", 11, "t700", 0.0)]
+    label = _differential_appends(
+        spark, tmp_path, monkeypatch, schema, ["location_id", "timestamp"], [
+            ("batch", b1, None),
+            ("batch", b2, []),
+            ("batch", b3, []),
+            ("batch", spark.createDataFrame(multi, schema).repartition(3), []),
+            ("batch", spark.createDataFrame(multi + replay, schema).repartition(2), ["B4"]),
+        ])
+    assert len(label["B4"]) > 1
+
+
+def test_append_dedup_keyed_collated_key_skips_staging(spark, tmp_path, monkeypatch):
+    """A UTF8_LCASE string key, whose equality is not Python's, anti-joins
+    the whole sink without staging the batch, so "A" and "a" of one
+    station are one key within the batch and against the sink."""
+    import etl_weather_jabar_spark.sinks as sinks
+
+    def staged(*_a):
+        raise AssertionError("the batch was staged")
+
+    monkeypatch.setattr(sinks, "_hot_files", staged)
+    schema = "_id string, location_id long, name string collate UTF8_LCASE, v double"
+    b1 = [("a1", 1, "x", 1.0)]
+    b2 = [("b2", 2, "A", 1.0), ("b1", 2, "a", 2.0), ("b3", 1, "X", 3.0)]
+    b3 = [("c1", 2, "a", 1.0), ("c2", 3, "Q", 2.0), ("c3", 4, "q", 3.0)]
+    _differential_appends(spark, tmp_path, monkeypatch, schema, ["location_id", "name"], [
+        ("batch", b1, None),
+        ("batch", b2, None),
+        ("batch", b3, None),
+    ])
+    assert not [f for f in os.listdir(tmp_path / "new") if f.startswith("_staging-")]
+    got = spark.read.schema(schema).parquet(str(tmp_path / "new"))
+    assert sorted(r["_id"] for r in got.collect()) == ["a1", "b1", "c2", "c3"]
+
+
+def test_append_dedup_keyed_over_driver_guard_matches_full_sink_antijoin(
+    spark, tmp_path, monkeypatch
+):
+    """Above the driver guard the staged keys are not compared on the
+    driver: the batch is deduplicated and every file is hot; at or below
+    it the same sink is pruned as usual."""
+    import etl_weather_jabar_spark.snapshots as snapshots
+
+    monkeypatch.setattr(snapshots, "_MAX_DRIVER_KEYS", 2)
+    schema = "_id string, location_id long, timestamp string, v double"
+    b1 = [("a1", 1, "t1", 1.0), ("a2", 2, "t1", 2.0), ("a0", 2, "t1", 3.0)]
+    b2 = [("b1", 5, "t5", 1.0), ("b2", 6, "t5", 2.0), ("b3", 7, "t5", 3.0)]
+    b3 = [("c2", 1, "t1", 1.0), ("c1", 8, "t8", 2.0)]
+    b4 = [("d3", 5, "t5", 0.0), ("d2", 9, "t9", 0.0), ("d1", 9, "t9", 0.5)]
+    _differential_appends(spark, tmp_path, monkeypatch, schema, ["location_id", "timestamp"], [
+        ("batch", b1, None),
+        ("batch", b2, ["B1"]),
+        ("batch", b3, ["B1"]),
+        ("batch", b4, ["B1", "B2", "B3"]),
+    ])
+
+
+def test_append_dedup_keyed_rereads_replaced_file(spark, tmp_path, monkeypatch):
+    """A sink file replaced at the same path with other keys is judged by
+    its new footer, so the batch colliding with its new keys finds it
+    hot."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = "_id string, location_id long, timestamp string, v double"
+
+    def swap(loc, ts):
+        t = pa.table({"_id": ["s"], "location_id": pa.array([loc], pa.int64()),
+                      "timestamp": [ts], "v": [0.0]})
+        return lambda p: pq.write_table(t, p)
+
+    name = "part-p-swap.parquet"
+    _differential_appends(spark, tmp_path, monkeypatch, schema, ["location_id", "timestamp"], [
+        ("batch", [("a1", 1, "t100", 1.0)], None),
+        ("file", name, swap(50, "t500")),
+        ("batch", [("b1", 60, "t600", 1.0)], []),
+        ("batch", [("c1", 61, "t610", 1.0)], []),
+        ("file", name, swap(70, "t700")),  # same path, other keys
+        ("batch", [("d1", 70, "t700", 1.0), ("d2", 71, "t710", 1.0)], [name]),
+    ])
+
+
+def test_append_dedup_keyed_missing_order_col_raises(spark, tmp_path):
+    """A batch without ``order_col`` raises on every path, also when its
+    keys are distinct and new and its staged files would be renamed, and
+    leaves the sink as it was."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    p = str(tmp_path / "silver")
+    append_dedup_keyed(
+        spark.createDataFrame([("a", 1, "t1", 1.0)], ["_id", "location_id", "timestamp", "v"]),
+        p, keys=["location_id", "timestamp"],
+    )
+    before = sorted(os.listdir(p))
+    no_id = spark.createDataFrame([(2, "t2", 2.0)], ["location_id", "timestamp", "v"])
+    with pytest.raises(AnalysisException, match="_id"):
+        append_dedup_keyed(no_id, p, keys=["location_id", "timestamp"])
+    assert sorted(os.listdir(p)) == before
 
 
 def test_append_dedup_keyed_failure_leaves_nothing_behind(spark, tmp_path, monkeypatch):

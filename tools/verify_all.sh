@@ -2,7 +2,8 @@
 # The full gate chain in one command — what every round-end certification
 # ran by hand. ~25 min on local[32]:
 #   oracle at sf0.001/0.01/0.1, adversarial-conf oracle at sf0.01,
-#   full pytest, bench, entry smoke. Exits nonzero on the first failure.
+#   full pytest, bench, perfbench output checks, entry smoke. Exits nonzero
+#   on the first failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -29,6 +30,18 @@ python -m pytest tests/ -q | tail -2
 
 echo "=== BENCH ==="
 python bench.py | tail -1
+
+echo "=== PERFBENCH OUTPUT CHECKS (5 s per workload) ==="
+for w in ingest_ticks recap_backfill headline_queries; do
+  line=$(python perfbench/run.py --workload "$w" --seconds 5 --trace 0 | tail -1) \
+    || { echo "PERFBENCH $w FAILED"; exit 1; }
+  python - "$w" "$line" <<'PY' || { echo "PERFBENCH $w FAILED"; exit 1; }
+import json, sys
+r = json.loads(sys.argv[2])
+assert r["correct"] is True and r["failed"] == 0, r
+print(sys.argv[1], "correct, 0 failed")
+PY
+done
 
 echo "=== ENTRY SMOKE ==="
 python - <<'PY'
