@@ -10,12 +10,13 @@ Layout:
     session     — SparkSession factory (AQE, Jakarta session TZ, tuned shuffle)
     schemas     — explicit StructTypes replacing the reference's implicit schema
     sources/    — parquet/json batch readers, streaming landing-dir reader
-    sinks       — append / keyed-dedup-append / partition-overwrite-upsert
+    sinks       — append / keyed-dedup-append / overwrite / bucketed tables
     operators/  — projections, filters, dedup, joins, aggregates, windows
     functions/  — scalar column functions (datetime, weather, text, vectors, hashing)
     plans/      — bronze→silver→gold pipeline compositions, incremental semantics
     streaming/  — Structured Streaming micro-batch variant (10-min windows,
-                  watermark late data, dedup-in-watermark, foreachBatch upsert)
+                  watermark late data, dedup-in-watermark, foreachBatch
+                  keyed merge into a snapshot table)
     ext/        — north-star extensions: exact/MinHash-LSH/SimHash dedup,
                   ANN similarity search, text quality, multimodal columns
 """

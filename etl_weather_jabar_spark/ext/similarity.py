@@ -1777,8 +1777,9 @@ def recluster_ivf_index(
     """Repair drift: refine the EXISTING centroids with ``iters`` Lloyd
     iterations over the full stored corpus (warm-start — no reseeding, so
     far cheaper and more stable than retraining from scratch) and rewrite
-    the inverted lists under the refined centroids. Atomic swap via
-    tmp-rename, same pattern as sinks.compact. Returns the new centroids.
+    the inverted lists under the refined centroids, written to
+    ``lists.tmp`` and swapped in by rmtree + rename (not atomic: a crash
+    between the two leaves no ``lists``). Returns the new centroids.
     """
     import os
     import shutil

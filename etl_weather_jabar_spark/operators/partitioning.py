@@ -136,7 +136,6 @@ def zorder_key(
     *,
     bits: int = 8,
     out_col: str = "zkey",
-    bounds: dict[str, tuple[int, int]] | None = None,
 ) -> "DataFrame":
     """Z-order (Morton) clustering key over 2+ integral columns — the
     multi-dimensional data-skipping layout (Delta/Iceberg OPTIMIZE ZORDER):
@@ -149,16 +148,8 @@ def zorder_key(
     mixture_resample's caps), then bucket bits are interleaved JVM-side.
     The physical write is ``repartitionByRange(out_col)`` +
     ``sortWithinPartitions(out_col)``: one shuffle, clustered files.
-
-    ``bounds=None`` derives bounds from the data (deterministic given the
-    data). Passing ``bounds={col: (lo, hi)}`` — e.g. from
-    :func:`compute_zorder_bounds` persisted at the first OPTIMIZE — makes
-    the layout APPEND-STABLE: the same value always lands in the same
-    bucket regardless of what else is in the batch, so incremental writes
-    cluster consistently with the existing files and never need a full
-    rewrite just because the data's min/max moved. Values outside frozen
-    bounds clamp into the edge buckets (the Delta behavior: stats stay
-    valid, pruning on the edge bucket is merely coarser).
+    Bounds come from the data, so the key is deterministic given the
+    data; a NULL value gives a NULL key.
     """
     from pyspark.sql import functions as F
 
@@ -166,35 +157,13 @@ def zorder_key(
         raise ValueError("zorder needs >= 2 columns")
     if bits * len(cols) > 62:
         raise ValueError("bits * len(cols) must fit in a bigint")
-    if bounds is not None:
-        missing = [c for c in cols if c not in bounds]
-        if missing:
-            raise ValueError(f"bounds missing for columns: {missing}")
-        d = df
-        for c in cols:
-            lo, hi = int(bounds[c][0]), int(bounds[c][1])
-            d = d.withColumn(f"__lo_{c}", F.lit(lo).cast("bigint")).withColumn(
-                f"__hi_{c}", F.lit(hi).cast("bigint")
-            )
-    else:
-        aggs = []
-        for c in cols:
-            aggs.append(F.min(F.col(c).cast("bigint")).alias(f"__lo_{c}"))
-            aggs.append(F.max(F.col(c).cast("bigint")).alias(f"__hi_{c}"))
-        d = df.crossJoin(F.broadcast(df.agg(*aggs)))
-    # clamp before bucketing: no-op for data-derived bounds, and the
-    # frozen-bounds contract for appended out-of-range values. Nested IF
-    # rather than LEAST/GREATEST — those SKIP nulls, which would fold a
-    # NULL value into the low bucket instead of propagating a NULL key.
-    def _clamped(c: str) -> str:
-        x = f"CAST(`{c}` AS BIGINT)"
-        return (
-            f"IF({x} < `__lo_{c}`, `__lo_{c}`,"
-            f" IF({x} > `__hi_{c}`, `__hi_{c}`, {x}))"
-        )
-
+    aggs = []
+    for c in cols:
+        aggs.append(F.min(F.col(c).cast("bigint")).alias(f"__lo_{c}"))
+        aggs.append(F.max(F.col(c).cast("bigint")).alias(f"__hi_{c}"))
+    d = df.crossJoin(F.broadcast(df.agg(*aggs)))
     bucket_exprs = [
-        f"((({_clamped(c)} - `__lo_{c}`) * {2 ** bits})"
+        f"(((CAST(`{c}` AS BIGINT) - `__lo_{c}`) * {2 ** bits})"
         f" DIV (`__hi_{c}` - `__lo_{c}` + 1))"
         for c in cols
     ]
@@ -202,37 +171,6 @@ def zorder_key(
     return d.withColumn(out_col, F.expr(z).cast("bigint")).drop(
         *[f"__lo_{c}" for c in cols], *[f"__hi_{c}" for c in cols]
     )
-
-
-def compute_zorder_bounds(df: "DataFrame", cols: list[str]) -> dict[str, tuple[int, int]]:
-    """Data-derived ``{col: (lo, hi)}`` for :func:`zorder_key`'s frozen
-    mode — one tiny aggregate, collected once (2×len(cols) bigints).
-    Persist with :func:`save_zorder_bounds` next to the table so later
-    appends reuse the first OPTIMIZE's layout."""
-    from pyspark.sql import functions as F
-
-    row = df.agg(
-        *[F.min(F.col(c).cast("bigint")).alias(f"lo_{c}") for c in cols],
-        *[F.max(F.col(c).cast("bigint")).alias(f"hi_{c}") for c in cols],
-    ).collect()[0]
-    return {c: (row[f"lo_{c}"], row[f"hi_{c}"]) for c in cols}
-
-
-def save_zorder_bounds(spark, bounds: dict[str, tuple[int, int]], path: str) -> None:
-    """Persist frozen z-order bounds as a 1-row-per-column parquet stats
-    table (the durable side of the append-stable layout contract)."""
-    spark.createDataFrame(
-        [(c, int(lo), int(hi)) for c, (lo, hi) in sorted(bounds.items())],
-        schema="col STRING, lo BIGINT, hi BIGINT",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_zorder_bounds(spark, path: str) -> dict[str, tuple[int, int]]:
-    """Bounds back from :func:`save_zorder_bounds`."""
-    return {
-        r["col"]: (r["lo"], r["hi"])
-        for r in spark.read.parquet(path).collect()
-    }
 
 
 def key_distribution(df: "DataFrame", keys: list[str], top_k: int = 10):

@@ -5,8 +5,8 @@ algorithms (connected components, BFS, PageRank) cut lineage with
 ``localCheckpoint`` every round and poll a convergence scalar, and the
 MinHash candidate set is checkpointed because two later joins consume
 it. That is the right execution shape — but a caller who only wants the
-PLAN (CLI ``--explain``, ``tools/plan_audit.py`` regenerating PLANS.md,
-interactive plan inspection) should not pay for running the queries.
+PLAN (CLI ``--explain``, ``tools/plan_audit.py`` writing PLANS.md on
+demand, interactive plan inspection) should not pay for running the queries.
 
 ``plan_only()`` is a thread-local context manager; inside it:
 

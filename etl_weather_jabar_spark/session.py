@@ -43,8 +43,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(n))
-        # Idempotent keyed upsert (reference daily_compile_weather.py:136-142)
-        # maps to dynamic partition overwrite (SURVEY §2.1 S6).
+        # Dynamic partition overwrite: a partitionBy(...).mode("overwrite")
+        # write replaces only the partitions it writes. The ext index
+        # writes of that form run under it (ext/search.py shard postings,
+        # ext/similarity.py IVF lists).
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # Arrow for the few pandas-UDF paths (multimodal, fallback mode agg).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

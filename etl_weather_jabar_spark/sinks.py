@@ -1,4 +1,4 @@
-"""Sinks: append, keyed-dedup append, partition-overwrite upsert.
+"""Sinks: append, keyed-dedup append, overwrite.
 
 Maps the reference's Mongo write modes (SURVEY §2.1 S5-S8):
 
@@ -6,7 +6,8 @@ Maps the reference's Mongo write modes (SURVEY §2.1 S5-S8):
 * unique index + duplicate-key-tolerant
   insert (transform_raw_weather.py:62-76,107-111, ST4) → :func:`append_dedup_keyed`
 * ``update_one($set) else insert_one``
-  keyed upsert (daily_compile_weather.py:136-142, S6)  → :func:`upsert_by_partition`
+  keyed upsert (daily_compile_weather.py:136-142, S6)  →
+  ``plans.pipelines.recap_to_snapshot`` / ``snapshots.snapshot_merge``
 * ``delete_many({})`` truncate (init_master_location.py:20, S8) → :func:`overwrite`
 
 Spark has no unique constraints, so uniqueness is enforced *on write*
@@ -16,7 +17,7 @@ an anti-join, never a driver-side ``$nin`` list (SURVEY §4.2).
 Like a unique-index probe touches only its key's entry, the keyed append
 reads only the sink files that can collide (Delta's min/max data
 skipping, here from the parquet footers). The batch is written as given
-under ``<sink>/_staging-<uuid>`` (hidden from readers) and its keys are
+under ``<sink>/_staging-<uuid>/in`` (hidden from readers) and its keys are
 read back on the driver. A sink file is hot when one batch key with no
 NULL component lies inside the file's footer ``[lo, hi]`` on every key
 column. A file whose footer cannot answer — a missing or differently
@@ -26,8 +27,10 @@ anti-joins the whole sink.
 When no two staged keys are equal and no file is hot, the staged files
 are renamed into the sink; otherwise the staged rows are deduplicated
 keep-first (only if keys repeat), anti-joined against the hot files (if
-any) and appended. The check and the commit are not atomic: two
-concurrent appenders can both insert one key.
+any), staged again under ``_staging-<uuid>/out`` and renamed. A staged
+file with no row is never renamed, so a replayed or empty batch adds no
+file. The check and the commit are not atomic: two concurrent appenders
+can both insert one key.
 """
 
 from __future__ import annotations
@@ -144,23 +147,20 @@ def append_dedup_keyed(
         return
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
     try:
-        df.write.parquet(staging)
-        staged = _data_files(staging)
-        batch_keys = _staged_keys(staged, keys)
+        df.write.parquet(f"{staging}/in")
+        staged = _data_files(f"{staging}/in")
+        batch_keys, counts = _staged_keys(staged, keys)
         # NULL components compare equal here, as in the window's partitions
         repeats = batch_keys is None or len(set(batch_keys)) < len(batch_keys)
         hot = _hot_files(files, batch_keys, df.schema, keys)
         if not repeats and not hot:
-            for name in os.listdir(staging):
-                if not name.startswith(("_", "._")):  # data files, their .crc
-                    os.rename(os.path.join(staging, name), os.path.join(path, name))
+            _commit_staged(staged, path, counts)
             return
         # Spark lists more paths than this with a job of its own (0.8 s for
         # 140 paths on a 4-vCPU VM); listing their directory is cheaper then
         limit = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
-        # by file: Spark warns on a root directory named _staging-… (hidden)
         new = spark.read.schema(df.schema).parquet(
-            *(staged if len(staged) <= limit else [staging])
+            *(staged if len(staged) <= limit else [f"{staging}/in"])
         )
         if repeats:
             new = dedupe_keep_first(new, keys, order_by=[order_col])
@@ -171,7 +171,8 @@ def append_dedup_keyed(
                 .parquet(*(hot if len(hot) <= limit else [path]))
             )
             new = new.join(existing, on=keys, how="left_anti")
-        new.write.mode("append").parquet(path)
+        new.write.parquet(f"{staging}/out")
+        _commit_staged(_data_files(f"{staging}/out"), path)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 
@@ -191,28 +192,50 @@ def _data_files(path: str) -> list[str]:
     return out
 
 
-def _staged_keys(staged: list[str], keys: list[str]) -> list[tuple] | None:
+def _commit_staged(
+    staged: list[str], path: str, counts: dict[str, int] | None = None
+) -> None:
+    """Rename the ``staged`` data files, and their checksums, into the
+    sink at ``path``, skipping every file that holds no row. ``counts``
+    maps each file to its row count; without it, the footers are read."""
+    import pyarrow.parquet as pq
+
+    for f in staged:
+        n = counts[f] if counts else pq.ParquetFile(f).metadata.num_rows
+        if not n:
+            continue
+        d, name = os.path.split(f)
+        os.rename(f, os.path.join(path, name))
+        crc = os.path.join(d, f".{name}.crc")
+        if os.path.exists(crc):
+            os.rename(crc, os.path.join(path, f".{name}.crc"))
+
+
+def _staged_keys(
+    staged: list[str], keys: list[str]
+) -> tuple[list[tuple] | None, dict[str, int]]:
     """The key of every row in the ``staged`` files, NULL components
     included, or ``None`` when the driver cannot tell keys apart as Spark
     does: more rows than the driver guard, or dates written with legacy
-    rebasing."""
+    rebasing; and each file's row count, from its footer."""
     import pyarrow.parquet as pq
 
     from .snapshots import _MAX_DRIVER_KEYS
 
     parts = [pq.ParquetFile(f) for f in staged]
+    counts = {f: p.metadata.num_rows for f, p in zip(staged, parts)}
     if (
-        sum(p.metadata.num_rows for p in parts) > _MAX_DRIVER_KEYS
+        sum(counts.values()) > _MAX_DRIVER_KEYS
         # rebased dates read back differently outside Spark
         or any(b"org.apache.spark.legacyDateTime" in (p.metadata.metadata or {})
                for p in parts)
     ):
-        return None
+        return None, counts
     out = []
     for p in parts:
         t = p.read(columns=keys)
         out += zip(*(t.column(k).to_pylist() for k in keys))
-    return out
+    return out, counts
 
 
 def _hot_files(
@@ -279,41 +302,6 @@ def _hot_files(
     return hot
 
 
-def upsert_by_partition(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    dedup_keys: list[str] | None = None,
-) -> None:
-    """Idempotent keyed upsert via dynamic partition overwrite (S6).
-
-    The reference upserts Gold docs keyed (date, location_id)
-    (daily_compile_weather.py:136-142). Here: partition by ``date`` and
-    dynamically overwrite only the partitions present in ``df`` — replaying a
-    day is idempotent. Granularity is the partition (date), coarser than the
-    reference's (date, location) key; ``dedup_keys`` guarantees one row per
-    key within the rewritten partition (documented divergence, SURVEY §7.2).
-    """
-    out = df.dropDuplicates(dedup_keys) if dedup_keys else df
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
-
-
-def quarantine_split(
-    df: DataFrame, good_predicate, quarantine_path: str | None = None
-) -> DataFrame:
-    """P10 error-row rejection (fetch_weather.py:60-62,131-133): rows failing
-    the predicate go to a quarantine sink (if given); clean rows flow on."""
-    bad = df.where(~good_predicate)
-    if quarantine_path is not None:
-        bad.write.mode("append").parquet(quarantine_path)
-    return df.where(good_predicate)
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,
@@ -337,134 +325,3 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table_name)
-
-
-def compact(
-    spark,
-    path: str,
-    target_file_mb: int = 128,
-    partition_cols: list[str] | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet dataset into files sized
-    for efficient scans, returning the new file count.
-
-    Micro-batch sinks (the reference appends 27 docs every 10 minutes —
-    SURVEY §2.1 S5) accrete thousands of KB-sized files; at 100 TB that
-    means listing/open overhead dominating scan time and task counts in
-    the millions. Compaction reads the dataset once, coalesces to
-    ceil(bytes / target) files (repartition — a shuffle — when partition
-    columns are given, so each output partition dir gets its own right-
-    sized files), and atomically replaces via overwrite. Run it as the
-    maintenance companion of append sinks, off the query path.
-    """
-    import math
-
-    size = 0
-    for root, _dirs, files in os.walk(path):
-        size += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    n_files = max(1, math.ceil(size / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    out = df.repartition(n_files, *partition_cols) if partition_cols else df.coalesce(n_files)
-    tmp = path.rstrip("/") + ".compact.tmp"
-    w = out.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(tmp)
-    import shutil
-
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    return n_files
-
-
-def optimize_zorder(
-    spark,
-    path: str,
-    zorder_cols: list[str],
-    n_files: int = 8,
-    bits: int = 8,
-    bounds_path: str | None = None,
-) -> int:
-    """OPTIMIZE-style table maintenance: rewrite a parquet dataset
-    Z-order-clustered on ``zorder_cols`` into ``n_files`` right-sized
-    files (compaction + multi-dimensional clustering in one pass — the
-    Delta/Iceberg ``OPTIMIZE ... ZORDER BY`` shape).
-
-    Plan: compute the Morton key (operators/partitioning.py::zorder_key),
-    ``repartitionByRange`` on it (range partitioner samples split points
-    → balanced files), sort within partitions, drop the key, atomically
-    swap via the same tmp-rename as :func:`compact`. After the rewrite
-    every file's min/max stats are narrow in EVERY z-ordered column, so
-    scans filtering on any of them skip most files — the test measures
-    exactly that via the `_metadata` file column.
-
-    With ``bounds_path`` the layout is APPEND-STABLE: the first OPTIMIZE
-    computes the per-column min/max and persists it there; every later
-    OPTIMIZE (and :func:`append_zordered`) reuses the frozen bounds, so a
-    value buckets identically across rewrites and incremental appends —
-    re-clustering never reshuffles rows merely because the corpus
-    min/max drifted.
-    """
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from .operators.partitioning import (
-        compute_zorder_bounds,
-        load_zorder_bounds,
-        save_zorder_bounds,
-        zorder_key,
-    )
-
-    df = spark.read.parquet(path)
-    bounds = None
-    if bounds_path is not None and _data_files(bounds_path):
-        # a bounds file that cannot be read raises: recomputing it would
-        # silently move the frozen layout
-        bounds = load_zorder_bounds(spark, bounds_path)
-    elif bounds_path is not None:
-        bounds = compute_zorder_bounds(df, zorder_cols)
-        save_zorder_bounds(spark, bounds, bounds_path)
-    z = zorder_key(df, zorder_cols, bits=bits, bounds=bounds)
-    tmp = path.rstrip("/") + ".zorder.tmp"
-    (
-        z.repartitionByRange(n_files, F.col("zkey"))
-        .sortWithinPartitions("zkey")
-        .drop("zkey")
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    return n_files
-
-
-def append_zordered(
-    df,
-    path: str,
-    zorder_cols: list[str],
-    bounds_path: str,
-    n_files: int = 1,
-    bits: int = 8,
-) -> None:
-    """Incremental write into a z-ordered table WITHOUT a full rewrite:
-    cluster the new batch by the table's FROZEN bounds (``bounds_path``
-    from :func:`optimize_zorder`) and append. Because the bucketing is
-    bounds-stable, the new files' min/max stats line up with the existing
-    layout — pruning quality degrades only with file count, which the
-    periodic :func:`compact` / :func:`optimize_zorder` pass restores.
-    Out-of-range values clamp into edge buckets (stats remain valid).
-    """
-    from pyspark.sql import functions as F
-
-    from .operators.partitioning import load_zorder_bounds, zorder_key
-
-    bounds = load_zorder_bounds(df.sparkSession, bounds_path)
-    z = zorder_key(df, zorder_cols, bits=bits, bounds=bounds)
-    (
-        z.repartitionByRange(n_files, F.col("zkey"))
-        .sortWithinPartitions("zkey")
-        .drop("zkey")
-        .write.mode("append")
-        .parquet(path)
-    )

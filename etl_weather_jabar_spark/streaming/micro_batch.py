@@ -10,7 +10,8 @@ The reference fakes streaming with Airflow cron every 10 minutes
 * ST3 late data / backfill       → ``withWatermark`` (no separate history
   code path — late rows just join their event-time window)
 * ST4 exactly-once / idempotent  → ``dropDuplicates`` within the watermark +
-  idempotent foreachBatch partition-overwrite sink
+  a foreachBatch sink that MERGEs each batch by key
+  (``snapshots.snapshot_merge``)
 * ST7 no-future guard            → filter ts <= current_timestamp
 """
 
@@ -90,16 +91,26 @@ def stream_windowed_agg(
 def write_upsert_foreach_batch(
     agg: DataFrame, path: str, checkpoint: str
 ):
-    """ST4/S6: idempotent sink — each micro-batch dynamically overwrites the
-    date partitions it touches (replays are safe)."""
+    """ST4/S6: idempotent keyed sink — each micro-batch is one
+    :func:`~etl_weather_jabar_spark.snapshots.snapshot_merge` into the
+    snapshot table at ``path`` (read it with ``snapshot_read``), keyed by
+    (``date``, ``location_id``, window start). Update mode emits only the
+    windows a batch changed; the merge replaces exactly those rows, so
+    the day's other windows survive. A replayed batch re-merges the same
+    rows."""
+    from ..snapshots import snapshot_merge
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        (
+        if batch.isEmpty():
+            return
+        changes = (
             batch.withColumn("date", F.date_format("window.start", "yyyy-MM-dd"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("date")
-            .parquet(path)
+            # base rows sit at seq 0, so a batch's changes start at 1
+            .withColumn("seq", F.lit(batch_id + 1))
+            .withColumn("op", F.lit("U"))
+        )
+        snapshot_merge(
+            batch.sparkSession, path, changes, ["date", "location_id", "window.start"]
         )
 
     return (

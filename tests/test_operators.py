@@ -372,6 +372,12 @@ def test_zorder_key_buckets_and_interleave(spark):
     assert out[(15, 15)] == 255
     assert out[(15, 0)] == 0b01010101  # x bits only (positions 0,2,4,6)
     assert out[(0, 15)] == 0b10101010  # y bits only (positions 1,3,5,7)
+    # a NULL value gives a NULL key, not the low bucket
+    nulls = spark.createDataFrame(
+        [(0, 0), (15, 15), (None, 5)], "x INT, y INT"
+    )
+    row = zorder_key(nulls, ["x", "y"], bits=4).where("x IS NULL").collect()[0]
+    assert row["zkey"] is None
     # neighbors in both dims share high bits: locality in the key space
     import pytest as _p
 
@@ -423,57 +429,6 @@ def test_zorder_key_three_columns(spark):
     assert out[(15, 0, 0)] == 0b001001001001  # x owns slots 0,3,6,9
     assert out[(0, 15, 0)] == 0b010010010010  # y owns slots 1,4,7,10
     assert out[(0, 0, 15)] == 0b100100100100  # z owns slots 2,5,8,11
-
-
-def test_zorder_key_frozen_bounds_append_stable(spark):
-    """Frozen-bounds mode: a row's key is batch-independent (append
-    stability), out-of-range values clamp into edge buckets, and NULLs
-    propagate to a NULL key instead of folding into the low bucket."""
-    from etl_weather_jabar_spark.operators.partitioning import (
-        compute_zorder_bounds,
-        load_zorder_bounds,
-        save_zorder_bounds,
-        zorder_key,
-    )
-
-    base = spark.createDataFrame([(0, 0), (15, 15), (7, 9)], ["x", "y"])
-    bounds = compute_zorder_bounds(base, ["x", "y"])
-    assert bounds == {"x": (0, 15), "y": (0, 15)}
-
-    # same row, different batch composition -> same key under frozen bounds
-    frozen_a = {
-        (r["x"], r["y"]): r["zkey"]
-        for r in zorder_key(base, ["x", "y"], bits=4, bounds=bounds).collect()
-    }
-    widened = spark.createDataFrame([(7, 9), (100, -3)], ["x", "y"])
-    frozen_b = {
-        (r["x"], r["y"]): r["zkey"]
-        for r in zorder_key(widened, ["x", "y"], bits=4, bounds=bounds).collect()
-    }
-    assert frozen_a[(7, 9)] == frozen_b[(7, 9)]
-    # data-derived bounds on the widened batch would move (7,9)'s bucket
-    derived = {
-        (r["x"], r["y"]): r["zkey"]
-        for r in zorder_key(widened, ["x", "y"], bits=4).collect()
-    }
-    assert derived[(7, 9)] != frozen_b[(7, 9)]
-    # clamping: (100,-3) lands in the (hi, lo) corner bucket
-    assert frozen_b[(100, -3)] == frozen_a[(15, 15)] - 0b10101010  # x=15,y=0
-    # NULL propagates
-    nulls = spark.createDataFrame([(None, 5)], "x INT, y INT")
-    row = zorder_key(nulls, ["x", "y"], bits=4, bounds=bounds).collect()[0]
-    assert row["zkey"] is None
-    # persistence round-trip
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        save_zorder_bounds(spark, bounds, f"{d}/b")
-        assert load_zorder_bounds(spark, f"{d}/b") == bounds
-    # missing bound for a requested column is an explicit error
-    import pytest as _p
-
-    with _p.raises(ValueError):
-        zorder_key(base, ["x", "y"], bits=4, bounds={"x": (0, 15)})
 
 
 def test_key_distribution_diagnoses_skew(spark):

@@ -14,8 +14,6 @@ from etl_weather_jabar_spark.sinks import (
     append,
     append_dedup_keyed,
     overwrite,
-    quarantine_split,
-    upsert_by_partition,
 )
 from etl_weather_jabar_spark.sources.jsonsrc import read_master_location
 
@@ -423,36 +421,31 @@ def test_append_dedup_keyed_failure_leaves_nothing_behind(spark, tmp_path, monke
     assert spark.read.parquet(p).count() == 1
 
 
-def test_upsert_by_partition_idempotent(spark):
-    """S6: keyed upsert as dynamic partition overwrite — rewriting a date
-    replaces that date only."""
-    v1 = spark.createDataFrame(
-        [("2024-02-01", 1, 10.0), ("2024-02-02", 1, 20.0)],
-        ["date", "location_id", "v"],
-    )
-    with tempfile.TemporaryDirectory() as d:
-        p = f"{d}/gold"
-        upsert_by_partition(v1, p, ["date"], dedup_keys=["date", "location_id"])
-        v2 = spark.createDataFrame(
-            [("2024-02-02", 1, 99.0)], ["date", "location_id", "v"]
-        )
-        upsert_by_partition(v2, p, ["date"], dedup_keys=["date", "location_id"])
-        # partition values come back type-inferred (DateType) — normalize
-        got = {str(r["date"]): r["v"] for r in spark.read.parquet(p).collect()}
-        assert got == {"2024-02-01": 10.0, "2024-02-02": 99.0}
+def test_append_dedup_keyed_replay_and_empty_batch_add_no_file(spark, tmp_path):
+    """A replayed tick, whose every key is in the sink, and an empty batch
+    add no file to the sink, not even an empty one, and the sink keeps
+    the reference's rows."""
+    import etl_weather_jabar_spark.sinks as sinks
 
+    schema = "_id string, location_id long, timestamp string, v double"
+    keys = ["location_id", "timestamp"]
+    tick = spark.createDataFrame(
+        [("a", 1, "t1", 1.0), ("b", 2, "t1", 2.0)], schema
+    ).coalesce(1)
+    empty = spark.createDataFrame([], schema)
+    new, ref = str(tmp_path / "new"), str(tmp_path / "ref")
+    sinks.append_dedup_keyed(tick, new, keys=keys)
+    _reference_append_dedup_keyed(tick, ref, keys=keys)
+    before = sorted(sinks._data_files(new))
+    for batch in (tick, empty):
+        sinks.append_dedup_keyed(batch, new, keys=keys)
+        _reference_append_dedup_keyed(batch, ref, keys=keys)
+        assert sorted(sinks._data_files(new)) == before
 
-def test_quarantine_split(spark):
-    """P10: error rows split off to a quarantine sink
-    (fetch_weather.py:60-62,131-133)."""
-    df = spark.createDataFrame(
-        [(1, None), (2, "boom"), (3, None)], ["id", "error"]
-    )
-    with tempfile.TemporaryDirectory() as d:
-        q = f"{d}/quarantine"
-        clean = quarantine_split(df, F.col("error").isNull(), q)
-        assert {r["id"] for r in clean.collect()} == {1, 3}
-        assert {r["id"] for r in spark.read.parquet(q).collect()} == {2}
+    def rows(p):
+        return sorted(tuple(r) for r in spark.read.schema(schema).parquet(p).collect())
+
+    assert rows(new) == rows(ref)
 
 
 def test_read_master_location(spark):
@@ -584,7 +577,6 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from etl_weather_jabar_spark.sinks import upsert_by_partition
     from etl_weather_jabar_spark.sources.parquet import load_table
 
     sf = "/root/testdata/sf0.001"
@@ -594,7 +586,7 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
         .limit(2000)
     )
     out = str(tmp_path / "by_date")
-    upsert_by_partition(ev, out, ["date"])
+    ev.write.partitionBy("date").parquet(out)
     dates = sorted(d for d in os.listdir(out) if d.startswith("date="))
     assert len(dates) > 1
     pick = dates[0].split("=", 1)[1]
@@ -605,159 +597,6 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     )[1].split("]")[0]
     got = df.select(F.countDistinct("date")).collect()[0][0]
     assert got == 1
-
-
-def test_compact_small_files(spark, tmp_path):
-    from etl_weather_jabar_spark.sinks import compact
-    from etl_weather_jabar_spark.sources.parquet import load_table
-
-    path = str(tmp_path / "accreted")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").limit(600)
-    # simulate micro-batch accretion: 30 tiny appends
-    for i in range(30):
-        ev.where(F.col("event_id") % 30 == i).write.mode("append").parquet(path)
-    import glob
-
-    before = len(glob.glob(path + "/*.parquet"))
-    rows_before = spark.read.parquet(path).count()
-    n = compact(spark, path, target_file_mb=128)
-    after = len(glob.glob(path + "/*.parquet"))
-    assert before >= 30 and after == n == 1
-    assert spark.read.parquet(path).count() == rows_before
-
-
-def test_optimize_zorder_clusters_both_dimensions(spark, tmp_path):
-    """After OPTIMIZE-ZORDER, each output file's min/max range is a small
-    slice of the domain in BOTH clustered columns — the file-stats
-    pruning property — while a plain single-column sort only achieves it
-    for the leading column."""
-    import random
-
-    from etl_weather_jabar_spark.sinks import optimize_zorder
-
-    rng = random.Random(7)
-    rows = [(rng.randrange(1024), rng.randrange(1024)) for _ in range(20000)]
-    path = str(tmp_path / "t")
-    spark.createDataFrame(rows, ["x", "y"]).repartition(8).write.parquet(path)
-
-    def avg_span(col):
-        per_file = (
-            spark.read.parquet(path)
-            .groupBy(F.col("_metadata.file_name").alias("f"))
-            .agg((F.max(col) - F.min(col)).alias("span"))
-            .collect()
-        )
-        return sum(r["span"] for r in per_file) / len(per_file)
-
-    # random layout: every file spans ~the whole domain in both dims
-    assert avg_span("x") > 900 and avg_span("y") > 900
-    # ADVICE r3: the loosened 12..16/520 gate also widened the window a
-    # real clustering regression could slip through. The one observed
-    # fold came from AQE's input split feeding the range sampler — pin
-    # AQE off for the rewrite so the boundary sample is deterministic,
-    # and restore the tight ==16 / 450 asserts.
-    saved = spark.conf.get("spark.sql.adaptive.enabled", None)
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        n = optimize_zorder(spark, path, ["x", "y"], n_files=16, bits=8)
-    finally:
-        if saved is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", saved)
-    assert n == 16
-    got = spark.read.parquet(path)
-    assert got.count() == 20000
-    per_file = (
-        got.select(F.col("_metadata.file_name").alias("f")).distinct().count()
-    )
-    assert per_file == 16
-    # z-ordered layout: files cover a fraction of the domain in BOTH
-    # dims — ideal is ~256/file at 16 files; 450 allows boundary overlap
-    # while still far below the ~1000 random span
-    assert avg_span("x") < 450 and avg_span("y") < 450
-
-
-def test_append_zordered_with_frozen_bounds(spark, tmp_path):
-    """The incremental side of OPTIMIZE-ZORDER: the first optimize freezes
-    per-column bounds; append_zordered clusters later batches by those
-    SAME bounds, so appended files keep narrow per-file min/max spans that
-    line up with the existing layout — no full-table rewrite per batch."""
-    import random
-
-    from etl_weather_jabar_spark.sinks import append_zordered, optimize_zorder
-
-    rng = random.Random(11)
-    path = str(tmp_path / "t")
-    bpath = str(tmp_path / "t_bounds")
-    base = [(rng.randrange(1024), rng.randrange(1024)) for _ in range(8000)]
-    spark.createDataFrame(base, ["x", "y"]).repartition(4).write.parquet(path)
-    optimize_zorder(spark, path, ["x", "y"], n_files=8, bits=8, bounds_path=bpath)
-    files_before = {
-        r["f"]
-        for r in spark.read.parquet(path)
-        .select(F.col("_metadata.file_name").alias("f"))
-        .distinct()
-        .collect()
-    }
-
-    batch = [(rng.randrange(1024), rng.randrange(1024)) for _ in range(4000)]
-    append_zordered(
-        spark.createDataFrame(batch, ["x", "y"]), path, ["x", "y"], bpath,
-        n_files=4,
-    )
-    got = spark.read.parquet(path)
-    assert got.count() == 12000
-    # appended files (not present before) are themselves narrow in both dims
-    per_file = (
-        got.groupBy(F.col("_metadata.file_name").alias("f"))
-        .agg(
-            (F.max("x") - F.min("x")).alias("sx"),
-            (F.max("y") - F.min("y")).alias("sy"),
-        )
-        .collect()
-    )
-    new = [r for r in per_file if r["f"] not in files_before]
-    assert new, "append produced no new files"
-    # a file whose zkey range straddles a Morton quadrant boundary can span
-    # a full dimension, so the pruning-relevant metric is the AVERAGE span:
-    # an unclustered 4000-row batch puts ~1020 in both dims in every file;
-    # 4 z-ordered ranges (random split points → ~2 straddlers) land ~500-750
-    avg_sx = sum(r["sx"] for r in new) / len(new)
-    avg_sy = sum(r["sy"] for r in new) / len(new)
-    assert avg_sx < 880 and avg_sy < 880, (avg_sx, avg_sy)
-    # a second optimize with the same bounds_path reuses the frozen stats
-    optimize_zorder(spark, path, ["x", "y"], n_files=12, bits=8, bounds_path=bpath)
-    assert spark.read.parquet(path).count() == 12000
-
-
-def test_optimize_zorder_corrupt_bounds_raises(spark, tmp_path):
-    """A frozen bounds file that cannot be read raises; it is neither
-    recomputed nor overwritten, and the table is not rewritten."""
-    import glob
-
-    import pytest
-    from py4j.protocol import Py4JJavaError
-
-    from etl_weather_jabar_spark.sinks import optimize_zorder
-
-    path = str(tmp_path / "t")
-    bpath = str(tmp_path / "t_bounds")
-    spark.createDataFrame([(i, 7 * i % 64) for i in range(64)], ["x", "y"]).write.parquet(path)
-    optimize_zorder(spark, path, ["x", "y"], n_files=2, bits=4, bounds_path=bpath)
-    (bfile,) = glob.glob(os.path.join(bpath, "part-*.parquet"))
-    os.remove(os.path.join(bpath, f".{os.path.basename(bfile)}.crc"))
-    with open(bfile, "wb") as f:
-        f.write(b"PAR1 this is not parquet PAR1")
-
-    def state(p):
-        return {
-            f: open(os.path.join(p, f), "rb").read() for f in sorted(os.listdir(p))
-        }
-
-    table, bounds = state(path), state(bpath)
-    with pytest.raises(Py4JJavaError):
-        optimize_zorder(spark, path, ["x", "y"], n_files=2, bits=4, bounds_path=bpath)
-    assert state(path) == table
-    assert state(bpath) == bounds
 
 
 def test_orc_roundtrip_partition_pruning(spark, tmp_path):

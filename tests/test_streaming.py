@@ -70,49 +70,86 @@ def test_stream_windowed_agg_shape(spark):
         assert {"window", "location_id", "temp_avg", "n_obs"} <= cols
 
 
-def test_foreach_batch_upsert_is_idempotent(spark, tmp_path):
-    """ST4/S6 end-to-end: the streaming foreachBatch partition-overwrite
-    sink lands the same rows when the whole stream replays from scratch."""
-    import pandas as pd
-
+def _run_upsert_stream(spark, src, ckpt, out, **options):
+    """Drive ``write_upsert_foreach_batch`` over the CSV files in ``src``
+    with ``availableNow``; the sink's rows, read back with
+    ``snapshot_read``, by (location_id, window start)."""
+    from etl_weather_jabar_spark.snapshots import snapshot_read
     from etl_weather_jabar_spark.streaming.micro_batch import (
-        stream_windowed_agg,
         write_upsert_foreach_batch,
     )
 
+    stream = (
+        spark.readStream.schema(
+            "event_ts TIMESTAMP, location_id LONG, temp_c DOUBLE, precip_mm DOUBLE"
+        )
+        .options(**options)
+        .csv(str(src))
+    )
+    agg = stream_windowed_agg(stream, window="10 minutes", watermark="1 hour")
+    q = (
+        write_upsert_foreach_batch(agg, out, ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    return {
+        (r["location_id"], str(r["window"]["start"])): (r["temp_avg"], r["n_obs"])
+        for r in snapshot_read(spark, out).collect()
+    }
+
+
+def _write_obs(path, rows):
+    import pandas as pd
+
+    pd.DataFrame(
+        rows, columns=["event_ts", "location_id", "temp_c", "precip_mm"]
+    ).to_csv(path, index=False, header=False)
+
+
+def test_foreach_batch_upsert_is_idempotent(spark, tmp_path):
+    """ST4/S6 end-to-end: the streaming foreachBatch keyed-merge sink
+    lands the same rows when the whole stream replays from scratch."""
     src = tmp_path / "landing"
     src.mkdir()
-    rows = [
+    _write_obs(src / "obs.csv", [
         ("2024-04-01 08:01:00", 1, 30.0, 0.0),
         ("2024-04-01 08:04:00", 1, 32.0, 1.5),
         ("2024-04-01 08:14:00", 1, 31.0, 0.0),
-    ]
-    pd.DataFrame(
-        rows, columns=["event_ts", "location_id", "temp_c", "precip_mm"]
-    ).to_csv(src / "obs.csv", index=False, header=False)
+    ])
 
-    def run(ckpt, out):
-        stream = spark.readStream.schema(
-            "event_ts TIMESTAMP, location_id LONG, temp_c DOUBLE, precip_mm DOUBLE"
-        ).csv(str(src))
-        agg = stream_windowed_agg(stream, window="10 minutes", watermark="1 hour")
-        q = (
-            write_upsert_foreach_batch(agg, out, ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {
-            (r["location_id"], str(r["window"]["start"])): (
-                r["temp_avg"], r["n_obs"]
-            )
-            for r in spark.read.parquet(out).collect()
-        }
-
-    first = run(str(tmp_path / "ck1"), str(tmp_path / "out1"))
-    replay = run(str(tmp_path / "ck2"), str(tmp_path / "out2"))
+    first = _run_upsert_stream(spark, src, str(tmp_path / "ck1"), str(tmp_path / "out1"))
+    replay = _run_upsert_stream(spark, src, str(tmp_path / "ck2"), str(tmp_path / "out2"))
     assert first == replay and len(first) == 2
     assert any(n == 2 for (_, n) in first.values())  # 08:00 window has 2 obs
+
+
+def test_foreach_batch_upsert_keeps_untouched_windows(spark, tmp_path):
+    """A later micro-batch that emits another window of a date leaves the
+    date's earlier windows in the sink: update mode emits only the changed
+    window, and the sink merges it by key instead of replacing the date.
+    A full replay from a fresh checkpoint lands the same table."""
+    import os
+
+    src = tmp_path / "landing"
+    src.mkdir()
+    _write_obs(src / "a.csv", [
+        ("2024-04-01 08:01:00", 1, 30.0, 0.0),
+        ("2024-04-01 08:04:00", 1, 32.0, 1.5),
+    ])
+    _write_obs(src / "b.csv", [("2024-04-01 08:24:00", 1, 31.0, 0.0)])
+    os.utime(src / "a.csv", (1_000_000_000, 1_000_000_000))  # a.csv first
+
+    def run(n):
+        return _run_upsert_stream(
+            spark, src, str(tmp_path / f"ck{n}"), str(tmp_path / f"out{n}"),
+            maxFilesPerTrigger=1,
+        )
+
+    first = run(1)
+    # the 08:00 window (2 obs), then the 08:20 one
+    assert [n for _, (_, n) in sorted(first.items())] == [2, 1]
+    assert run(2) == first  # a full replay from a fresh checkpoint
 
 
 def test_drop_duplicates_within_watermark_api(spark):
