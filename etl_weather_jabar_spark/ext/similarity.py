@@ -1650,16 +1650,35 @@ def save_ivf_index(
     assigned.hint("rebalance", "cid").write.partitionBy("cid").mode(
         "overwrite"
     ).parquet(f"{path}/lists")
+    from .search import _fs_and_path
+
+    _write_ivf_centroids(spark, cents, path)
+    # the index just written supersedes every recluster generation
+    fs, gens, _ = _fs_and_path(spark, f"{path}/gens")
+    fs.delete(gens, True)
+    return cents
+
+
+def _write_ivf_centroids(spark, cents, d: str) -> None:
     spark.createDataFrame(
         [(int(c), [float(x) for x in v]) for c, v in cents],
         schema="cid INT, cv ARRAY<DOUBLE>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    return cents
+    ).write.mode("overwrite").parquet(f"{d}/centroids")
+
+
+def _ivf_live(spark, path: str) -> str:
+    """The directory holding the IVF index's live ``lists`` and
+    ``centroids``: its newest committed recluster generation
+    ``<path>/gens/g%06d``, or ``path`` before the first recluster."""
+    from .search import _committed_dirs
+
+    gens = _committed_dirs(spark, f"{path}/gens")
+    return gens[max(gens, key=_gen_number)] if gens else path
 
 
 def load_ivf_centroids(spark, path: str) -> list[tuple[int, list[float]]]:
     """Centroids back from ``save_ivf_index`` (n_clusters × dim — KB)."""
-    rows = spark.read.parquet(f"{path}/centroids").collect()
+    rows = spark.read.parquet(f"{_ivf_live(spark, path)}/centroids").collect()
     return sorted((r["cid"], list(r["cv"])) for r in rows)
 
 
@@ -1681,7 +1700,8 @@ def ivf_topk_indexed(
     the candidates. Same results as :func:`ivf_topk` with the same
     centroids; none of the training or assignment work is repeated.
     """
-    cents = load_ivf_centroids(spark, path)
+    live = _ivf_live(spark, path)
+    cents = load_ivf_centroids(spark, live)  # a generation holds no gens
     wq = Window.partitionBy(query_id_col).orderBy(
         F.col("__sim").desc(), F.col("cid").asc()
     )
@@ -1696,7 +1716,7 @@ def ivf_topk_indexed(
     )
     probe_cids = sorted({r["cid"] for r in q.select("cid").distinct().collect()})
     lists = (
-        spark.read.parquet(f"{path}/lists")
+        spark.read.parquet(f"{live}/lists")
         .where(F.col("cid").isin(probe_cids))
         .withColumnRenamed(vec_col, "__cvec")
     )
@@ -1731,11 +1751,12 @@ def append_to_ivf_index(
     only as the data distribution drifts, which :func:`ivf_index_stats`
     measures and :func:`recluster_ivf_index` repairs.
     """
-    cents = load_ivf_centroids(new_rows.sparkSession, path)
+    live = _ivf_live(new_rows.sparkSession, path)
+    cents = load_ivf_centroids(new_rows.sparkSession, live)
     assigned = _assign_nearest(spread(new_rows), cents, id_col, vec_col)
     assigned.hint("rebalance", "cid").write.partitionBy("cid").mode(
         "append"
-    ).parquet(f"{path}/lists")
+    ).parquet(f"{live}/lists")
 
 
 def ivf_index_stats(spark, path: str, vec_col: str = "embedding") -> DataFrame:
@@ -1749,8 +1770,9 @@ def ivf_index_stats(spark, path: str, vec_col: str = "embedding") -> DataFrame:
     One partition-parallel scan of the lists joined to the broadcast
     centroids; output is n_clusters rows.
     """
-    cents = load_ivf_centroids(spark, path)
-    lists = spark.read.parquet(f"{path}/lists")
+    live = _ivf_live(spark, path)
+    cents = load_ivf_centroids(spark, live)
+    lists = spark.read.parquet(f"{live}/lists")
     # _scored_against_centroids crosses against ALL centroids; keep only
     # each row's own list's centroid score
     scored = _scored_against_centroids(
@@ -1777,15 +1799,26 @@ def recluster_ivf_index(
     """Repair drift: refine the EXISTING centroids with ``iters`` Lloyd
     iterations over the full stored corpus (warm-start — no reseeding, so
     far cheaper and more stable than retraining from scratch) and rewrite
-    the inverted lists under the refined centroids, written to
-    ``lists.tmp`` and swapped in by rmtree + rename (not atomic: a crash
-    between the two leaves no ``lists``). Returns the new centroids.
+    the inverted lists under the refined centroids. Lists and centroids
+    are written together as a new generation ``<path>/gens/g%06d``,
+    published by one atomic ``_committed`` create (as
+    :func:`compact_vector_index` publishes its generations), so a crash
+    at any step leaves the old index or the new one live, never lists
+    that do not match their centroids. After the commit the superseded
+    state is deleted, with any generation a failed recluster left.
+    Returns the new centroids.
     """
-    import os
-    import shutil
+    from .search import _fs_and_path
 
-    cents = load_ivf_centroids(spark, path)
-    vecs = spark.read.parquet(f"{path}/lists").select(id_col, vec_col).persist()
+    live = _ivf_live(spark, path)
+    cents = load_ivf_centroids(spark, live)
+    vecs = spark.read.parquet(f"{live}/lists").select(id_col, vec_col).persist()
+    fs, groot, jvm = _fs_and_path(spark, f"{path}/gens")
+    fs.mkdirs(groot)
+    # numbered above every generation dir, committed or left by a crash
+    taken = [_gen_number(st.getPath().getName())
+             for st in fs.listStatus(groot) if st.isDirectory()]
+    gdir = f"{path}/gens/g%06d" % (max(taken, default=-1) + 1)
     try:
         for _ in range(iters):
             assigned = _assign_nearest(vecs, cents, id_col, vec_col).select(
@@ -1809,18 +1842,18 @@ def recluster_ivf_index(
                 for cid, prev in cents
             ]
         assigned = _assign_nearest(vecs, cents, id_col, vec_col)
-        tmp_lists = f"{path}/lists.tmp"
         assigned.hint("rebalance", "cid").write.partitionBy("cid").mode(
             "overwrite"
-        ).parquet(tmp_lists)
+        ).parquet(f"{gdir}/lists")
     finally:
         vecs.unpersist()
-    shutil.rmtree(f"{path}/lists")
-    os.rename(tmp_lists, f"{path}/lists")
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in cents],
-        schema="cid INT, cv ARRAY<DOUBLE>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_ivf_centroids(spark, cents, gdir)
+    fs.create(jvm.org.apache.hadoop.fs.Path(gdir, "_committed")).close()
+    # superseded: the state save_ivf_index wrote, and every older generation
+    superseded = [f"{path}/lists", f"{path}/centroids"]
+    superseded += [f"{path}/gens/g%06d" % n for n in taken]
+    for d in superseded:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
     return cents
 
 

@@ -10,16 +10,16 @@ Semantics pinned from the reference (SURVEY §7.2 watch-list):
 * A4: averages rounded to 2 dp (daily_compile_weather.py:71,74,75).
 * A9: the Gold recap is one grouped pass per station-day — a single
   ``collect_list(struct)`` + ``array_sort`` per (date, location), from which
-  array functions build the nested hourly and minute docs. Ordering is
-  explicit, never relied on from shuffle order.
+  array functions build the nested hourly and minute docs. The expressions
+  are SQL text, built at import and parsed per call. Ordering is explicit,
+  never relied on from shuffle order.
 """
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, StructType
 
 from ..schemas import DAILY_RECAP, MINUTE_DOC
 
@@ -169,76 +169,88 @@ def standardize(
     )
 
 
-def _present(rows: Column, field: str) -> Column:
+def _ddl(t: DataType) -> str:
+    """``t`` as a SQL type, keeping its fields' NOT NULL."""
+    if isinstance(t, ArrayType):
+        return f"ARRAY<{_ddl(t.elementType)}>"
+    if isinstance(t, StructType):
+        return "STRUCT<" + ", ".join(
+            f"`{f.name}`: {_ddl(f.dataType)}{'' if f.nullable else ' NOT NULL'}"
+            for f in t.fields
+        ) + ">"
+    return t.simpleString()
+
+
+def _present(rows: str, field: str) -> str:
     """The non-null ``field`` values of an array of row structs."""
-    return F.array_compact(F.transform(rows, lambda r: r[field]))
+    return f"array_compact(transform({rows}, r -> r.`{field}`))"
 
 
-def _avg2(vals: Column) -> Column:
+def _avg2(vals: str) -> str:
     """A4: ``round(avg, 2)``, summing from 0.0 as Spark's ``avg`` does."""
-    total = F.aggregate(vals, F.lit(0.0), lambda acc, v: acc + v.cast("double"))
-    return F.when(F.size(vals) > 0, F.round(total / F.size(vals), 2))
+    total = f"aggregate({vals}, 0.0D, (acc, v) -> acc + CAST(v AS DOUBLE))"
+    return f"CASE WHEN size({vals}) > 0 THEN round({total} / size({vals}), 2) END"
 
 
-def _first_mode(vals: Column) -> Column:
+def _first_mode(vals: str) -> str:
     """A6 over values in first-seen order: the first with the top count."""
-    count = lambda v: F.size(F.filter(vals, lambda w: w == v))  # noqa: E731
-    return F.aggregate(
-        F.array_distinct(vals), F.lit(None).cast("string"),
-        lambda best, v: F.when(best.isNull() | (count(v) > count(best)), v).otherwise(best),
+    def count(v):
+        return f"size(filter({vals}, w -> w = {v}))"
+
+    return (
+        f"aggregate(array_distinct({vals}), CAST(NULL AS STRING), (best, v) -> "
+        f"CASE WHEN best IS NULL OR {count('v')} > {count('best')} THEN v ELSE best END)"
     )
 
 
-def _data_points(rows: Column) -> Column:
+def _data_points(rows: str) -> str:
     """J4 + A9 inner level: a doc per row on the 00..50 grid (duplicates kept,
     off-grid minutes dropped), an all-null doc per empty slot
     (daily_compile_weather.py:34-58), in ``array_sort`` order."""
-    measures = MINUTE_DOC.fieldNames()[1:]
+    hits = f"filter({rows}, r -> r.`minute` = m)"
+    # an empty slot becomes one null row, whose fields all read null
+    padded = f"CASE WHEN size({hits}) > 0 THEN {hits} ELSE array(NULL) END"
+    doc = ", ".join(f"r.`{c}` AS `{c}`" for c in MINUTE_DOC.fieldNames()[1:])
+    grid = ", ".join(f"'{m:02d}'" for m in range(0, 60, 10))
+    return (
+        f"array_sort(flatten(transform(array({grid}), "
+        f"m -> transform({padded}, r -> struct(m AS `minute`, {doc})))))"
+    )
 
-    def slot(m):
-        hits = F.filter(rows, lambda r: r["minute"] == m)
-        # an empty slot becomes one null row, whose fields all read null
-        padded = F.when(F.size(hits) > 0, hits).otherwise(F.array(F.lit(None)))
-        return F.transform(padded, lambda r: F.struct(m.alias("minute"), *[r[c] for c in measures]))
 
-    grid = F.array(*[F.lit(f"{m:02d}") for m in range(0, 60, 10)])
-    return F.array_sort(F.flatten(F.transform(grid, slot)))
+def _hour_doc(g: str) -> str:
+    """One hour's doc from ``g``, a struct of the hour and its rows."""
+    rs = f"{g}.`rows`"
+    temps = _present(rs, "temp")
+    return f"""struct(
+        {g}.`hour` AS `hour`,
+        array_contains(`hours`, '23') AS `full_recap`,
+        {_avg2(temps)} AS `temp_avg`,
+        array_min({temps}) AS `temp_min`,
+        array_max({temps}) AS `temp_max`,
+        {_avg2(_present(rs, "humidity"))} AS `humidity_avg`,
+        {_avg2(_present(rs, "wind_kph"))} AS `wind_avg_kph`,
+        {_first_mode(_present(rs, "wind_dir"))} AS `dominant_wind_dir`,
+        aggregate({_present(rs, "precip_mm")}, 0.0D, (acc, v) -> acc + v) AS `precip_mm`,
+        {_data_points(rs)} AS `data_points`)"""
 
 
-@functools.lru_cache(maxsize=1)
-def _recap_columns(jvm) -> tuple[Column, Column, Column]:
-    """The recap's ``rows``, ``hours`` and ``hourly`` expressions. They name
-    only grouped columns, so they are built once per JVM (the cache key):
-    their ~1,400 py4j calls cost more than running a day's recap."""
-    row = F.struct("hour", "minute", "wind_dir", F.col("temp_c").alias("temp"),
-                   "humidity", "wind_kph", "precip_mm")
-    rows = F.array_sort(F.collect_list(row))
-    # array_compact types the hours non-null, as HOUR_DOC's ``hour`` is
-    hours = F.array_compact(F.array_distinct(F.transform("rows", lambda r: r["hour"])))
-
-    def hour_doc(g):  # g: {hour, rows of that hour}
-        rs = g["rows"]
-        temps = _present(rs, "temp")
-        return F.struct(
-            g["hour"].alias("hour"),
-            F.array_contains("hours", "23").alias("full_recap"),
-            _avg2(temps).alias("temp_avg"),
-            F.array_min(temps).alias("temp_min"),
-            F.array_max(temps).alias("temp_max"),
-            _avg2(_present(rs, "humidity")).alias("humidity_avg"),
-            _avg2(_present(rs, "wind_kph")).alias("wind_avg_kph"),
-            _first_mode(_present(rs, "wind_dir")).alias("dominant_wind_dir"),
-            F.aggregate(_present(rs, "precip_mm"), F.lit(0.0), lambda a, v: a + v)
-            .alias("precip_mm"),
-            _data_points(rs).alias("data_points"),
-        )
-
-    by_hour = F.transform("hours", lambda h: F.struct(
-        h.alias("hour"), F.filter("rows", lambda r: r["hour"] == h).alias("rows")))
-    # the cast widens nullability to DAILY_RECAP's; ``when`` makes the array
-    # itself nullable, as the schema has it
-    hourly = F.transform(by_hour, hour_doc).cast(DAILY_RECAP["hourly"].dataType)
-    return rows, hours, F.when(F.size("hours") > 0, hourly)
+# The recap's three expressions as SQL text, built once here and parsed per
+# call: a few JVM calls, where the same expressions as Columns cost ~1,400.
+# ``rows`` is the station-day's rows, sorted; they name only grouped columns.
+_RECAP_ROWS = (
+    "array_sort(collect_list(struct(`hour`, `minute`, `wind_dir`, `temp_c` AS `temp`, "
+    "`humidity`, `wind_kph`, `precip_mm`))) AS `rows`"
+)
+# array_compact types the hours non-null, as HOUR_DOC's ``hour`` is
+_RECAP_HOURS = "array_compact(array_distinct(transform(`rows`, r -> r.`hour`))) AS `hours`"
+# the cast widens nullability to DAILY_RECAP's; the CASE makes the array
+# itself nullable, as the schema has it
+_RECAP_HOURLY = (
+    "CASE WHEN size(`hours`) > 0 THEN CAST(transform("
+    "transform(`hours`, h -> struct(h AS `hour`, filter(`rows`, r -> r.`hour` = h) AS `rows`)), "
+    f"g -> {_hour_doc('g')}) AS {_ddl(DAILY_RECAP['hourly'].dataType)}) END AS `hourly`"
+)
 
 
 def daily_recap(obs: DataFrame) -> DataFrame:
@@ -249,10 +261,9 @@ def daily_recap(obs: DataFrame) -> DataFrame:
     A4/A5/A8 aggregates, the A6 wind mode (ties to the earliest minute, then
     the smallest value), the grid-aligned ``data_points`` (J4/A9) and the W2
     ``full_recap`` flag (hour 23 present). The schema is DAILY_RECAP."""
-    rows, hours, hourly = _recap_columns(obs.sparkSession.sparkContext._jvm)
-    day = obs.groupBy("date", "location_id", "location_name").agg(rows.alias("rows"))
-    return day.withColumn("hours", hours).select(
-        "date", "location_id", "location_name", hourly.alias("hourly"))
+    day = obs.groupBy("date", "location_id", "location_name").agg(F.expr(_RECAP_ROWS))
+    return day.selectExpr("*", _RECAP_HOURS).selectExpr(
+        "date", "location_id", "location_name", _RECAP_HOURLY)
 
 
 def exact_distinct_bitmap(

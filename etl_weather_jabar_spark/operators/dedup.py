@@ -16,8 +16,27 @@ map-side-combines nothing, so for heavily-duplicated keys prefer
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import re
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# one part of a column name: a backtick-quoted run (a doubled backtick is
+# one backtick) or a run of anything but dots and backticks
+_PART = r"`((?:[^`]|``)*)`|([^.`]+)"
+
+
+def _sql_name(name: str) -> str:
+    """``name``, in the syntax ``F.col`` reads (dots step into struct
+    fields, backticks quote a part that holds dots, a doubled backtick
+    inside them is one backtick), as SQL text naming the same column,
+    every part quoted: ``"location.id"`` → ``"`location`.`id`"``."""
+    if not re.fullmatch(rf"(?:{_PART})(?:\.(?:{_PART}))*", name):
+        raise ValueError(f"not a column name: {name!r}")
+    # a quoted part is already SQL text; a bare one holds no backtick
+    return ".".join(
+        m[0] if m[1] is not None else f"`{m[0]}`" for m in re.finditer(_PART, name)
+    )
 
 
 def dedupe_keep_first(
@@ -27,12 +46,14 @@ def dedupe_keep_first(
 
     Faithful form of the reference's ``ids[1:]`` delete
     (transform_raw_weather.py:92-97): survivor = lowest ``_id``.
+    The window is SQL text, so the plan builds in a few JVM calls
+    whatever the number of keys.
     """
-    order = order_by or ["_id"]
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).asc() for c in order])
+    part = ", ".join(_sql_name(k) for k in keys)
+    order = ", ".join(f"{_sql_name(c)} ASC" for c in order_by or ["_id"])
     return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
+        df.selectExpr("*", f"row_number() OVER (PARTITION BY {part} ORDER BY {order}) AS __rn")
+        .where("__rn = 1")
         .drop("__rn")
     )
 

@@ -23,13 +23,14 @@ NULL component lies inside the file's footer ``[lo, hi]`` on every key
 column. A file whose footer cannot answer — a missing or differently
 typed key column, a row group without stats, an unreadable footer — is
 hot; a key type without exact footer stats, or a collated string key,
-anti-joins the whole sink.
+anti-joins the whole sink, and a first write deduplicates the batch
+alone, each staging only its result under ``_staging-<uuid>/out``.
 When no two staged keys are equal and no file is hot, the staged files
 are renamed into the sink; otherwise the staged rows are deduplicated
 keep-first (only if keys repeat), anti-joined against the hot files (if
 any), staged again under ``_staging-<uuid>/out`` and renamed. A staged
 file with no row is never renamed, so a replayed or empty batch adds no
-file. The check and the commit are not atomic: two concurrent appenders
+file on any path. The check and the commit are not atomic: two concurrent appenders
 can both insert one key.
 """
 
@@ -111,9 +112,11 @@ def append_dedup_keyed(
     on a 4-vCPU VM); only the hot files' key columns are read. A batch
     that repeats a key or collides pays a second write (keep-first
     and/or anti-join) on top of the staged one. Key types without exact
-    footer stats, and collated strings, skip the staging and anti-join
-    the whole sink; above 100,000 staged rows the batch is deduplicated
-    and every file is hot.
+    footer stats, and collated strings, are not staged as given: the
+    batch is deduplicated and anti-joined against the whole sink, as is
+    a first write's batch against nothing; above 100,000 staged rows the
+    batch is deduplicated and every file is hot. Every path stages what
+    it appends and renames only the files that hold rows.
     """
     import shutil
     import uuid
@@ -129,48 +132,49 @@ def append_dedup_keyed(
     # whatever its keys
     df[order_col]
     files = _data_files(path)
-    if not files:  # first write: nothing to collide with
-        dedupe_keep_first(df, keys, order_by=[order_col]).write.mode("append").parquet(path)
-        return
     # any read error (a corrupt file, a schema clash) propagates: a sink
     # that cannot be read must not be appended to without dedup
-    if any(
+    whole = bool(files) and any(
         df.schema[k].dataType.typeName() not in _FOOTER_STATS_TYPES
         # a collated string's equality is neither Python's nor its footer's
         or "__COLLATIONS" in df.schema[k].jsonValue()["metadata"]
         for k in keys
-    ):
-        # footers cannot prune on these keys: anti-join the whole sink
-        batch = dedupe_keep_first(df, keys, order_by=[order_col])
-        existing = spark.read.parquet(path).select(*keys)
-        batch.join(existing, on=keys, how="left_anti").write.mode("append").parquet(path)
-        return
+    )
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
     try:
-        df.write.parquet(f"{staging}/in")
-        staged = _data_files(f"{staging}/in")
-        batch_keys, counts = _staged_keys(staged, keys)
-        # NULL components compare equal here, as in the window's partitions
-        repeats = batch_keys is None or len(set(batch_keys)) < len(batch_keys)
-        hot = _hot_files(files, batch_keys, df.schema, keys)
-        if not repeats and not hot:
-            _commit_staged(staged, path, counts)
-            return
-        # Spark lists more paths than this with a job of its own (0.8 s for
-        # 140 paths on a 4-vCPU VM); listing their directory is cheaper then
-        limit = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
-        new = spark.read.schema(df.schema).parquet(
-            *(staged if len(staged) <= limit else [f"{staging}/in"])
-        )
-        if repeats:
-            new = dedupe_keep_first(new, keys, order_by=[order_col])
-        if hot:
-            existing = (
-                spark.read.schema(StructType([df.schema[k] for k in keys]))
-                .option("basePath", path)
-                .parquet(*(hot if len(hot) <= limit else [path]))
+        if not files or whole:
+            # a first write has nothing to collide with; footers cannot
+            # prune on the keys of ``whole``: anti-join the whole sink
+            new = dedupe_keep_first(df, keys, order_by=[order_col])
+            if whole:
+                existing = spark.read.parquet(path).select(*keys)
+                new = new.join(existing, on=keys, how="left_anti")
+        else:
+            df.write.parquet(f"{staging}/in")
+            staged = _data_files(f"{staging}/in")
+            batch_keys, counts = _staged_keys(staged, keys)
+            # NULL components compare equal here, as in the window's partitions
+            repeats = batch_keys is None or len(set(batch_keys)) < len(batch_keys)
+            hot = _hot_files(files, batch_keys, df.schema, keys)
+            if not repeats and not hot:
+                _commit_staged(staged, path, counts)
+                return
+            # Spark lists more paths than this with a job of its own (0.8 s
+            # for 140 paths on a 4-vCPU VM); listing their directory is
+            # cheaper then
+            limit = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+            new = spark.read.schema(df.schema).parquet(
+                *(staged if len(staged) <= limit else [f"{staging}/in"])
             )
-            new = new.join(existing, on=keys, how="left_anti")
+            if repeats:
+                new = dedupe_keep_first(new, keys, order_by=[order_col])
+            if hot:
+                existing = (
+                    spark.read.schema(StructType([df.schema[k] for k in keys]))
+                    .option("basePath", path)
+                    .parquet(*(hot if len(hot) <= limit else [path]))
+                )
+                new = new.join(existing, on=keys, how="left_anti")
         new.write.parquet(f"{staging}/out")
         _commit_staged(_data_files(f"{staging}/out"), path)
     finally:

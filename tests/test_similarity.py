@@ -220,12 +220,113 @@ def test_ivf_append_stats_recluster(spark, tmp_path):
     new_cents = recluster_ivf_index(spark, path, iters=2)
     assert len(new_cents) == 8
     assert load_ivf_centroids(spark, path) == sorted(new_cents)
-    assert spark.read.parquet(f"{path}/lists").count() == 223
+    assert sum(r["n"] for r in ivf_index_stats(spark, path).collect()) == 223
     hits2 = {
         r["vec_id"]
         for r in ivf_topk_indexed(spark, path, queries, k=5, n_probe=4).collect()
     }
     assert {1000, 1001, 1002} <= hits2
+
+
+def test_ivf_recluster_crash_leaves_old_or_new_index(spark, tmp_path, monkeypatch):
+    """A recluster that fails at any of its writes, its commit or its
+    deletes leaves the old index or the new one: centroids and the top-k
+    answer both match the index before the recluster, or both match a
+    recluster that ran to the end. Reclustering an old index again after
+    a failure lands the same new index."""
+    import os
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import etl_weather_jabar_spark.ext.search as search
+    from etl_weather_jabar_spark.ext.similarity import (
+        append_to_ivf_index,
+        ivf_topk_indexed,
+        load_ivf_centroids,
+        recluster_ivf_index,
+        save_ivf_index,
+    )
+
+    corpus = _corpus(spark)
+    base = str(tmp_path / "base")
+    save_ivf_index(corpus, base, n_clusters=4, iters=1)
+    rng = random.Random(5)  # drifted vectors, so that reclustering moves centroids
+    append_to_ivf_index(spark.createDataFrame(
+        [(3000 + i, [rng.gauss(2, 1) for _ in range(16)]) for i in range(30)], SCHEMA
+    ), base)
+    queries = corpus.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+    def state(path):
+        hits = ivf_topk_indexed(spark, path, queries, k=5, n_probe=2).collect()
+        return load_ivf_centroids(spark, path), sorted(tuple(r) for r in hits)
+
+    before = state(base)
+    done = str(tmp_path / "done")
+    shutil.copytree(base, done)
+    recluster_ivf_index(spark, done, iters=1)
+    after = state(done)
+    assert after[0] != before[0]
+
+    step = {"n": 0, "fail_at": 0}
+
+    def tick():
+        step["n"] += 1
+        if step["n"] == step["fail_at"]:
+            raise RuntimeError(f"injected at step {step['n']}")
+
+    real_parquet, real_fs = DataFrameWriter.parquet, search._fs_and_path
+
+    def parquet(self, *a, **kw):
+        tick()
+        return real_parquet(self, *a, **kw)
+
+    class Fs:  # the Hadoop file system, failing at its create and delete
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            op = getattr(self.fs, name)
+            if name not in ("create", "delete"):
+                return op
+
+            def failing(*a):
+                tick()
+                return op(*a)
+
+            return failing
+
+    def fs_and_path(*a):
+        fs, p, jvm = real_fs(*a)
+        return Fs(fs), p, jvm
+
+    fail_at = 0
+    while True:
+        fail_at += 1
+        path = str(tmp_path / f"crash{fail_at}")
+        shutil.copytree(base, path)
+        step.update(n=0, fail_at=fail_at)
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        monkeypatch.setattr(search, "_fs_and_path", fs_and_path)
+        try:
+            recluster_ivf_index(spark, path, iters=1)
+            failed = False
+        except RuntimeError:
+            failed = True
+        monkeypatch.undo()
+        if not failed:
+            break
+        got = state(path)
+        assert got in (before, after), fail_at
+        if got == before:  # failed before its commit: a retry completes
+            recluster_ivf_index(spark, path, iters=1)
+            assert state(path) == after, fail_at
+            # and deletes what the failed one left
+            assert len(os.listdir(os.path.join(path, "gens"))) == 1, fail_at
+    # two writes, the commit and two deletes
+    assert fail_at == 6
 
 
 def test_streaming_ivf_index_maintenance(spark, tmp_path):

@@ -448,6 +448,42 @@ def test_append_dedup_keyed_replay_and_empty_batch_add_no_file(spark, tmp_path):
     assert rows(new) == rows(ref)
 
 
+def test_append_dedup_keyed_first_write_and_whole_sink_add_no_empty_file(spark, tmp_path):
+    """The paths that do not stage the batch as given — a first write,
+    and a key type without footer stats (timestamp), which anti-joins the
+    whole sink — commit no 0-row file: not for an empty first batch, nor
+    for a replayed batch; and the sink keeps the reference's rows."""
+    import datetime
+
+    import pyarrow.parquet as pq
+
+    import etl_weather_jabar_spark.sinks as sinks
+
+    def rows_per_file(p):
+        return sorted(pq.ParquetFile(f).metadata.num_rows for f in sinks._data_files(p))
+
+    def rows(p, schema):
+        return sorted(tuple(r) for r in spark.read.schema(schema).parquet(p).collect())
+
+    for schema, keys, batches in [
+        ("_id string, location_id long, timestamp string, v double",
+         ["location_id", "timestamp"],
+         [[], [("a", 1, "t1", 1.0)], [("b", 1, "t1", 2.0), ("c", 2, "t1", 3.0)]]),
+        ("_id string, ts timestamp, v double",
+         ["ts"],
+         [[("a", datetime.datetime(2024, 1, 1), 1.0)]] * 2),
+    ]:
+        new, ref = str(tmp_path / f"new{len(keys)}"), str(tmp_path / f"ref{len(keys)}")
+        for batch in batches:
+            df = spark.createDataFrame(batch, schema).coalesce(1)
+            sinks.append_dedup_keyed(df, new, keys=keys)
+            _reference_append_dedup_keyed(df, ref, keys=keys)
+            assert 0 not in rows_per_file(new)
+            assert rows(new, schema) == rows(ref, schema)
+        assert not [f for f in os.listdir(new) if f.startswith("_staging-")]
+    assert rows_per_file(new) == [1]
+
+
 def test_read_master_location(spark):
     """S3: multiline JSON dimension load with explicit schema
     (init_master_location.py:23-28)."""

@@ -2,7 +2,7 @@
 # The full gate chain in one command — what every round-end certification
 # ran by hand. ~25 min on local[32]:
 #   oracle at sf0.001/0.01/0.1, adversarial-conf oracle at sf0.01,
-#   full pytest, bench, perfbench output checks, entry smoke. Exits nonzero
+#   full pytest, perfbench output checks, entry smoke. Exits nonzero
 #   on the first failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -27,9 +27,6 @@ echo "0 mismatches"
 
 echo "=== PYTEST ==="
 python -m pytest tests/ -q | tail -2
-
-echo "=== BENCH ==="
-python bench.py | tail -1
 
 echo "=== PERFBENCH OUTPUT CHECKS (5 s per workload) ==="
 for w in ingest_ticks recap_backfill headline_queries; do
