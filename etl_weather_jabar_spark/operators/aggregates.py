@@ -9,8 +9,9 @@ Semantics pinned from the reference (SURVEY §7.2 watch-list):
   tie-break, not Spark's arbitrary-tie ``F.mode``.
 * A4: averages rounded to 2 dp (daily_compile_weather.py:71,74,75).
 * A9: the Gold recap is one grouped pass per station-day — a single
-  ``collect_list(struct)`` + ``array_sort`` per (date, location), from which
-  array functions build the nested hourly and minute docs. The expressions
+  ``collect_list(struct)`` + ``array_sort`` per (date, location_id), from
+  which array functions build the nested hourly and minute docs; the doc
+  takes the name of the day's latest named row. The expressions
   are SQL text, built at import and parsed per call. Ordering is explicit,
   never relied on from shuffle order.
 """
@@ -242,6 +243,13 @@ _RECAP_ROWS = (
     "array_sort(collect_list(struct(`hour`, `minute`, `wind_dir`, `temp_c` AS `temp`, "
     "`humidity`, `wind_kph`, `precip_mm`))) AS `rows`"
 )
+# The station-day's name: that of its latest named row, the greatest on a
+# tie. Gold is keyed on (date, location_id), so the name cannot be a
+# grouping key: two names in one day would give two docs for one key.
+_RECAP_NAME = (
+    "max(CASE WHEN `location_name` IS NOT NULL THEN struct(`timestamp`, `location_name`) END)"
+    ".`location_name` AS `location_name`"
+)
 # array_compact types the hours non-null, as HOUR_DOC's ``hour`` is
 _RECAP_HOURS = "array_compact(array_distinct(transform(`rows`, r -> r.`hour`))) AS `hours`"
 # the cast widens nullability to DAILY_RECAP's; the CASE makes the array
@@ -255,13 +263,16 @@ _RECAP_HOURLY = (
 
 def daily_recap(obs: DataFrame) -> DataFrame:
     """The Gold assembly (daily_compile_weather.py:96-134) as one groupBy per
-    (date, location) — a single shuffle — collecting the station-day's rows
-    (at most 24 × 6) sorted by (hour, minute, wind_dir, ...). Array functions
-    then build, per hour with rows (empty hours skipped, :123-124), the
-    A4/A5/A8 aggregates, the A6 wind mode (ties to the earliest minute, then
-    the smallest value), the grid-aligned ``data_points`` (J4/A9) and the W2
-    ``full_recap`` flag (hour 23 present). The schema is DAILY_RECAP."""
-    day = obs.groupBy("date", "location_id", "location_name").agg(F.expr(_RECAP_ROWS))
+    (date, location_id) — a single shuffle — collecting the station-day's
+    rows (at most 24 × 6) sorted by (hour, minute, wind_dir, ...). Array
+    functions then build, per hour with rows (empty hours skipped,
+    :123-124), the A4/A5/A8 aggregates, the A6 wind mode (ties to the
+    earliest minute, then the smallest value), the grid-aligned
+    ``data_points`` (J4/A9) and the W2 ``full_recap`` flag (hour 23
+    present). ``location_name`` is the name on the day's latest row that
+    has one (the greatest name on a tie), so a renamed station still gets
+    one doc per day. The schema is DAILY_RECAP."""
+    day = obs.groupBy("date", "location_id").agg(F.expr(_RECAP_NAME), F.expr(_RECAP_ROWS))
     return day.selectExpr("*", _RECAP_HOURS).selectExpr(
         "date", "location_id", "location_name", _RECAP_HOURLY)
 

@@ -98,19 +98,21 @@ def recap_to_snapshot(
     find-by-(date,location) then $set-or-insert) onto the TRANSACTIONAL
     table. The new Silver rows name the work (the reference gets it from
     Airflow's sensor schedule, daily_compile_weather.py:153-155): their
-    distinct dates (tiny, broadcast) left-semi prune the full Silver,
-    one recap plan rebuilds only those days, and the rows MERGE into the
-    snapshot table keyed by (date, location_id). The merge prunes on
-    ``date``, so only Gold files holding a recapped day are rewritten;
-    every other day's files carry forward by name. One atomic version per
-    run, replay-idempotent (same input → same resulting table state),
-    pre-merge versions time-travelable. Returns the new version number.
+    distinct dates are collected, and a literal ``date IN (...)`` filter
+    prunes the full Silver (statically on date-partitioned Silver, by
+    parquet pushdown on flat Silver). One recap plan rebuilds only those
+    days, and the rows MERGE into the snapshot table keyed by (date,
+    location_id). The merge prunes on ``date``, so only Gold files
+    holding a recapped day are rewritten; every other day's files carry
+    forward by name, and a day new to Gold takes the merge's insert-only
+    path. One atomic version per run, replay-idempotent (same input →
+    same resulting table state), pre-merge versions time-travelable.
+    Returns the new version number.
     """
     from ..snapshots import snapshot_merge
 
-    affected = silver_new.select("date").distinct()
-    scoped = silver_all.join(F.broadcast(affected), on="date", how="left_semi")
-    recap = daily_recap(scoped)
+    dates = [r[0] for r in silver_new.select("date").distinct().collect()]
+    recap = daily_recap(silver_all.where(F.col("date").isin(dates)))
     changes = recap.withColumn("seq", F.lit(1)).withColumn("op", F.lit("U"))
     return snapshot_merge(
         silver_all.sparkSession, gold_table, changes, list(keys)

@@ -124,7 +124,7 @@ def append_dedup_keyed(
     from pyspark.sql.types import StructType
 
     from .operators.dedup import dedupe_keep_first
-    from .snapshots import _FOOTER_STATS_TYPES
+    from .snapshots import _exact_keys
 
     spark = df.sparkSession
     # resolved up front (against the analyzed plan, no new analysis): the
@@ -134,12 +134,7 @@ def append_dedup_keyed(
     files = _data_files(path)
     # any read error (a corrupt file, a schema clash) propagates: a sink
     # that cannot be read must not be appended to without dedup
-    whole = bool(files) and any(
-        df.schema[k].dataType.typeName() not in _FOOTER_STATS_TYPES
-        # a collated string's equality is neither Python's nor its footer's
-        or "__COLLATIONS" in df.schema[k].jsonValue()["metadata"]
-        for k in keys
-    )
+    whole = bool(files) and not _exact_keys([df.schema[k] for k in keys])
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
     try:
         if not files or whole:

@@ -90,11 +90,19 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(f)
 
 
-def _write_data_files(df: DataFrame, path: str) -> tuple[list[str], dict]:
+def _write_data_files(
+    df: DataFrame, path: str, keep_empty: bool = True
+) -> tuple[list[str], dict]:
     """Write ``df`` into immutable data files; returns (names, per-file
     row counts). Files exist but are invisible until a manifest names
     them. Row counts come from the parquet footers (no data scan) and
-    feed the manifest, making COUNT(*) a metadata-only operation."""
+    feed the manifest, making COUNT(*) a metadata-only operation.
+
+    A file with no row is dropped (Spark writes one for an empty
+    partition 0): it would carry no stats and make every later merge
+    rewrite it. When no file holds a row, the first is kept only if
+    ``keep_empty`` — the version would otherwise list no file, and
+    :func:`snapshot_read` refuses an empty version."""
     import pyarrow.parquet as pq
 
     data_dir = os.path.join(path, "data")
@@ -102,13 +110,17 @@ def _write_data_files(df: DataFrame, path: str) -> tuple[list[str], dict]:
     commit = uuid.uuid4().hex[:12]
     staging = os.path.join(path, f"_staging-{commit}")
     df.write.mode("overwrite").parquet(staging)
+    parts = sorted(glob.glob(os.path.join(staging, "*.parquet")))
+    counts = [pq.ParquetFile(p).metadata.num_rows for p in parts]
+    keep = [i for i, n in enumerate(counts) if n]
+    if not keep and parts and keep_empty:
+        keep = [0]
     new_files, row_counts = [], {}
-    for i, part in enumerate(sorted(glob.glob(os.path.join(staging, "*.parquet")))):
+    for i in keep:
         name = f"{commit}-part{i:04d}.parquet"
-        target = os.path.join(data_dir, name)
-        os.rename(part, target)
+        os.rename(parts[i], os.path.join(data_dir, name))
         new_files.append(name)
-        row_counts[name] = pq.ParquetFile(target).metadata.num_rows
+        row_counts[name] = counts[i]
     shutil.rmtree(staging)
     return new_files, row_counts
 
@@ -248,6 +260,24 @@ _FOOTER_STATS_TYPES = {
     "string": ("BYTE_ARRAY", {"UTF8"}),
     "date": ("INT32", {"DATE"}),
 }
+
+
+def _collated(field) -> bool:
+    """Whether the StructField ``field`` is a string with a collation,
+    whose equality and order are neither Python's nor its footer's."""
+    return "__COLLATIONS" in field.jsonValue()["metadata"]
+
+
+def _exact_keys(fields) -> bool:
+    """Whether the driver and parquet footers compare the values of the
+    StructFields ``fields`` as Spark does: integer, date and
+    default-collation string columns. Python's equality differs on NaN
+    and -0.0, and the other types lack exact footer stats."""
+    return all(
+        f.dataType.typeName() in _FOOTER_STATS_TYPES and not _collated(f)
+        for f in fields
+    )
+
 
 # The most keys a driver-side pruning pass collects (the driver-size guard
 # of :func:`snapshot_merge` and of ``sinks.append_dedup_keyed``).
@@ -614,7 +644,14 @@ def snapshot_write(
     if check is not None:
         checks["<batch check>"] = check
     _enforce_constraints(df, checks)
-    new_files, counts = _write_data_files(df, path)
+    vs = _versions(path)
+    # an empty batch appended to a listed file adds no file
+    alone = (
+        mode == "overwrite"
+        or not vs
+        or not _read_manifest(path, vs[-1])["files"]
+    )
+    new_files, counts = _write_data_files(df, path, keep_empty=alone)
     stats = (
         _file_stats(df.sparkSession, path, new_files, stats_cols)
         if stats_cols
@@ -840,17 +877,27 @@ def snapshot_merge(
     creates the table (Delta's create-on-first-merge).
 
     Copy-on-write per FILE, pruned on ``keys[0]`` (Delta's min/max data
-    skipping): ``changes`` is materialized once, and its distinct leading
-    keys are collected once. A file is hot when its recorded ``[lo, hi]``
-    for ``keys[0]`` contains one of them; only hot files are read (with
-    their deletion vectors applied) and rewritten, and every cold file is
-    carried forward BY NAME with its stats, row count, deletion vector and
-    Bloom. Every file is hot when it has no stats, when the change set
-    holds more than ``max_change_keys`` leading keys (a driver-size
-    guard), or when a leading key is NULL or NaN — the whole-table
-    rewrite is the degenerate case, with the same result. Every merge
-    records ``keys[0]`` stats for the files it writes, so a table built by
-    merges prunes from its second merge on.
+    skipping): ``changes`` is materialized once, and its keys are
+    collected once. A file is hot when its recorded ``[lo, hi]`` for
+    ``keys[0]`` contains one of the leading keys; only hot files are read
+    (with their deletion vectors applied) and rewritten, and every cold
+    file is carried forward BY NAME with its stats, row count, deletion
+    vector and Bloom. Every file is hot when it has no stats, when the
+    change set holds more than ``max_change_keys`` keys (a driver-size
+    guard, above which the distinct leading keys are collected instead),
+    when a leading key is NULL or NaN, or when ``keys[0]`` is a collated
+    string (its order is not Python's) — the whole-table rewrite is the
+    degenerate case, with the same result. Every merge records ``keys[0]``
+    stats for the files it writes, so a table built by merges prunes from
+    its second merge on.
+
+    Insert-only path (Delta's insert-only MERGE): when no file is hot and
+    the driver sees no key twice in the log, the new files are the log's
+    'U' rows alone — no keep-last window, so no shuffle. The driver
+    judges repeats only where its equality is Spark's (integer, date and
+    default-collation string keys, :func:`_exact_keys`); any other key
+    type, or a log over the guard, takes ``apply_cdc``. The path writes
+    one file per non-empty partition of the materialized log.
 
     Concurrency: the hot/cold split is only valid against the exact
     version it was computed from, so a commit landing in between
@@ -858,22 +905,34 @@ def snapshot_merge(
     result would silently drop the racer's rows. The abandoned attempt's
     data files are unreferenced and reclaimed by :func:`vacuum`.
     ``max_retries`` conflicts → :class:`ConcurrentSnapshotError`."""
+    from pyspark.sql import functions as F
+
     from .operators.diff import apply_cdc
     from .planmode import checkpoint
 
     lead = keys[0]
     changes = checkpoint(changes)
+    # a short log's keys come back without a shuffle; a long one pays for
+    # DISTINCT to learn whether its leading keys are over the guard
+    n = max_change_keys + 1
+    key_cols = changes.select(*keys)  # keys may name nested fields
+    fields = key_cols.schema.fields
+    rows = key_cols.limit(n).collect()
+    # NULL components compare equal here, as in apply_cdc's partitions
+    unique = (
+        len(rows) < n and _exact_keys(fields) and len(set(rows)) == len(rows)
+    )
+    if len(rows) == n:
+        rows = changes.select(lead).distinct().limit(n).collect()
+    found = {r[0] for r in rows}
     ckeys = None  # every file is hot
-    if _versions(path):  # a new table has no file to prune
-        # a short log's leading keys come back without a shuffle; a long
-        # one pays for DISTINCT to learn whether it is over the guard
-        n = max_change_keys + 1
-        rows = changes.select(lead).limit(n).collect()
-        if len(rows) == n:
-            rows = changes.select(lead).distinct().limit(n).collect()
-        found = {r[0] for r in rows}
-        if len(found) < n and all(map(_orderable, found)):
-            ckeys = sorted(found)
+    # a collated leading key orders unlike its Python strings
+    if (
+        not _collated(fields[0])
+        and len(found) < n
+        and all(map(_orderable, found))
+    ):
+        ckeys = sorted(found)
 
     for _ in range(max_retries):
         vs = _versions(path)
@@ -890,10 +949,18 @@ def snapshot_merge(
             base = _empty_read(spark, path, files[0])
         else:  # create-on-first-merge: the change log's row shape
             base = changes.drop(seq_col, op_col).limit(0)
-        merged = apply_cdc(
-            base, changes, keys, seq_col=seq_col, op_col=op_col
-        ).drop(seq_col)
-        new_files, new_counts = _write_data_files(merged, path)
+        if hot or not unique:
+            merged = apply_cdc(
+                base, changes, keys, seq_col=seq_col, op_col=op_col
+            ).drop(seq_col)
+        else:  # every key is new to the table and once in the log
+            cols = [c for c in base.columns if c not in (seq_col, op_col)]
+            merged = base.select(*cols).unionByName(
+                changes.where(F.col(op_col) == "U").select(*cols)
+            )
+        new_files, new_counts = _write_data_files(
+            merged, path, keep_empty=not cold
+        )
         new_stats = _file_stats(spark, path, new_files, [lead])
 
         def build(latest_m):
@@ -1073,7 +1140,9 @@ def snapshot_purge_dv(spark, path: str, *, max_retries: int = 10) -> int:
         dirty = [f for f in files if dv_counts.get(f)]
         clean = [f for f in files if not dv_counts.get(f)]
         rows = _dv_apply_read(spark, path, m, dirty)
-        new_files, new_counts = _write_data_files(rows, path)
+        new_files, new_counts = _write_data_files(
+            rows, path, keep_empty=not clean
+        )
 
         def build(latest_m):
             if latest_m is None or latest_m.get("version") != base_version:

@@ -130,7 +130,9 @@ def _reference_daily_recap(obs):
     by_hour = F.transform("hours", lambda h: F.struct(
         h.alias("hour"), F.filter("rows", lambda r: r["hour"] == h).alias("rows")))
     hourly = F.transform(by_hour, hour_doc).cast(DAILY_RECAP["hourly"].dataType)
-    day = obs.groupBy("date", "location_id", "location_name").agg(rows.alias("rows"))
+    named = F.when(F.col("location_name").isNotNull(), F.struct("timestamp", "location_name"))
+    day = obs.groupBy("date", "location_id").agg(
+        F.max(named)["location_name"].alias("location_name"), rows.alias("rows"))
     return day.withColumn("hours", hours).select(
         "date", "location_id", "location_name",
         F.when(F.size("hours") > 0, hourly).alias("hourly"))

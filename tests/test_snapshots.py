@@ -1438,3 +1438,144 @@ def test_file_stats_footer_matches_aggregate(spark, tmp_path):
         assert as_json(_file_stats(spark, path, files, cols)) == as_json(
             _aggregate_stats(spark, path, files, cols)
         )
+
+
+def _window_merges(monkeypatch):
+    """A list that grows by one each time a merge runs apply_cdc's
+    keep-last window (the insert-only path does not)."""
+    import etl_weather_jabar_spark.operators.diff as diff
+
+    calls, real = [], diff.apply_cdc
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(diff, "apply_cdc", counting)
+    return calls
+
+
+def _row_counts(path):
+    """The latest version's ``{file: rows}``."""
+    v = snapshot_history(path)[-1]["version"]
+    with open(os.path.join(path, "_manifests", f"v{v:010d}.json")) as f:
+        return json.load(f)["row_counts"]
+
+
+def test_snapshot_commits_list_no_empty_file(spark, tmp_path, monkeypatch):
+    """No write or merge lists a 0-row file next to others: a one-row
+    write whose empty partition 0 Spark still writes, an empty merge, a
+    merge that only deletes absent keys, and an empty append. A 0-row
+    file has no stats and would be hot to every later merge; after each
+    case a new key's merge takes the insert-only path. A table whose
+    rows are all gone keeps one empty file, so its version reads."""
+    from etl_weather_jabar_spark.snapshots import snapshot_count, snapshot_merge
+
+    windows = _window_merges(monkeypatch)
+    log = "k INT, v STRING, seq INT, op STRING"
+    path = str(tmp_path / "t")
+    # partition 0 of the two holds no row
+    one = spark.range(0, 2, 1, 2).where("id = 1").selectExpr(
+        "CAST(id AS INT) AS k", "'a' AS v"
+    )
+    steps = [
+        lambda: snapshot_write(one, path, stats_cols=["k"]),
+        lambda: snapshot_merge(spark, path, spark.createDataFrame([], log), ["k"]),
+        lambda: snapshot_merge(
+            spark, path, spark.createDataFrame([(50, None, 1, "D")], log), ["k"]
+        ),
+        lambda: snapshot_write(spark.createDataFrame([], "k INT, v STRING"), path),
+    ]
+    for i, step in enumerate(steps):
+        step()
+        assert all(_row_counts(path).values()), (i, _row_counts(path))
+        before = len(windows)
+        snapshot_merge(
+            spark, path, spark.createDataFrame([(100 + i, "new", 1, "U")], log), ["k"]
+        )
+        assert len(windows) == before, i  # insert-only
+        assert all(_row_counts(path).values()), i
+    got = sorted(map(tuple, snapshot_read(spark, path).collect()))
+    assert got == [(1, "a"), (100, "new"), (101, "new"), (102, "new"), (103, "new")]
+    # every row deleted: one empty file stays listed
+    snapshot_merge(
+        spark, path,
+        spark.createDataFrame([(k, None, 1, "D") for k, _ in got], log), ["k"],
+    )
+    assert list(_row_counts(path).values()) == [0]
+    assert snapshot_read(spark, path).count() == snapshot_count(path) == 0
+    empty = str(tmp_path / "empty")
+    snapshot_write(spark.createDataFrame([], "k INT, v STRING"), empty)
+    assert list(_row_counts(empty).values()) == [0]
+    assert snapshot_read(spark, empty).columns == ["k", "v"]
+
+
+def test_snapshot_merge_insert_only_matches_whole_table_merge(
+    spark, tmp_path, monkeypatch
+):
+    """The insert-only path lands the same table as the whole-table merge,
+    and it is taken only when no file is hot and the driver, with Spark's
+    equality, sees no key twice: a new table, new leading keys onto a
+    table with stats, a 'D' for an absent key and NULL non-leading key
+    components take it; a repeated key (NULL components equal), an
+    update, a log over the guard, a NULL leading key, and timestamp
+    (nested, as the streaming upsert's), collated-string and NaN-able
+    double keys take the window."""
+    import datetime
+
+    from etl_weather_jabar_spark.snapshots import snapshot_merge
+
+    windows = _window_merges(monkeypatch)
+
+    def run(name, schema, keys, steps):
+        ref, got = str(tmp_path / f"{name}_ref"), str(tmp_path / f"{name}_got")
+        # the reference merges onto an empty table, this one creates it
+        snapshot_write(spark.createDataFrame([], schema), ref)
+        for step, window, kw in steps:
+            changes = spark.createDataFrame(step, schema + ", seq INT, op STRING")
+            _whole_table_merge(spark, ref, changes, keys)
+            before = len(windows)
+            snapshot_merge(spark, got, changes, keys, **kw)
+            assert (len(windows) > before) == window, (name, step)
+            assert sorted(map(repr, snapshot_read(spark, got).collect())) == sorted(
+                map(repr, snapshot_read(spark, ref).collect())
+            ), (name, step)
+            assert all(_row_counts(got).values()), (name, step)
+
+    run("date_loc", "date STRING, location_id INT, v STRING", ["date", "location_id"], [
+        # a new table
+        ([("2024-02-01", 1, "a", 1, "U"), ("2024-02-01", 2, "b", 1, "U")], False, {}),
+        # new leading keys onto a table with stats, a 'D' for an absent key
+        ([("2024-02-02", 1, "c", 1, "U"), ("2024-02-03", 1, None, 1, "D")], False, {}),
+        # NULL non-leading key components, each once
+        ([("2024-02-04", None, "d", 1, "U"), ("2024-02-05", None, "e", 1, "U")], False, {}),
+        # a repeated key; a repeated key with a NULL component; 'U' then 'D'
+        ([("2024-02-06", 1, "f", 1, "U"), ("2024-02-06", 1, "g", 2, "U")], True, {}),
+        ([("2024-02-07", None, "h", 1, "U"), ("2024-02-07", None, "i", 2, "U")], True, {}),
+        ([("2024-02-08", 1, "j", 1, "U"), ("2024-02-08", 1, None, 2, "D")], True, {}),
+        # an update of a stored key: its file is hot
+        ([("2024-02-01", 1, "A", 1, "U")], True, {}),
+        # new keys over the guard
+        ([("2024-03-01", 1, "k", 1, "U"), ("2024-03-02", 1, "l", 1, "U")], True,
+         {"max_change_keys": 1}),
+        # a NULL leading key: every file hot
+        ([(None, 1, "m", 1, "U")], True, {}),
+    ])
+    # the streaming upsert's key: a date and a nested timestamp
+    ts = datetime.datetime
+    run("ts", "d STRING, w STRUCT<start: TIMESTAMP>, v STRING", ["d", "w.start"], [
+        ([("2024-02-01", (ts(2024, 2, 1, 10),), "a", 1, "U"),
+          ("2024-02-01", (ts(2024, 2, 1, 11),), "b", 1, "U")], True, {}),
+        ([("2024-02-02", (ts(2024, 2, 2, 10),), "c", 1, "U")], True, {}),
+    ])
+    run("collated", "s STRING COLLATE UTF8_LCASE, v INT", ["s"], [
+        # 'x' and 'X' are one key to Spark, two to Python
+        ([("x", 1, 1, "U"), ("X", 2, 2, "U"), ("B", 3, 1, "U")], True, {}),
+        ([("b", 4, 1, "U")], True, {}),
+    ])
+    nan = float("nan")
+    run("double", "d DOUBLE, v STRING", ["d"], [
+        ([(nan, "a", 1, "U"), (nan, "b", 2, "U"), (0.0, "c", 1, "U"),
+          (-0.0, "d", 2, "U")], True, {}),
+        ([(2.5, "e", 1, "U")], True, {}),
+    ])

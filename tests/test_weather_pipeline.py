@@ -141,7 +141,11 @@ def _three_branch_recap(obs):
     from etl_weather_jabar_spark.operators.joins import grid_align, minute_grid
 
     keys = ["date", "location_id", "hour"]
-    hours = obs.groupBy("date", "location_id", "location_name", "hour").agg(
+    # the name of the station-day's latest named row, the greatest on a tie
+    named = F.when(F.col("location_name").isNotNull(), F.struct("timestamp", "location_name"))
+    names = obs.groupBy("date", "location_id").agg(
+        F.max(named)["location_name"].alias("location_name"))
+    hours = obs.groupBy("date", "location_id", "hour").agg(
         F.round(F.avg("temp_c"), 2).alias("temp_avg"),
         F.min("temp_c").alias("temp_min"),
         F.max("temp_c").alias("temp_max"),
@@ -174,7 +178,8 @@ def _three_branch_recap(obs):
         "full_recap",
         F.max(F.col("hour") == F.lit("23")).over(Window.partitionBy("date", "location_id")),
     )
-    return hourly.groupBy("date", "location_id", "location_name").agg(
+    return hourly.join(names, ["date", "location_id"]).groupBy(
+        "date", "location_id", "location_name").agg(
         F.array_sort(
             F.collect_list(
                 F.struct(
@@ -486,3 +491,72 @@ def test_recap_to_snapshot_idempotent_merge(spark, tmp_path):
         ).collect()
     } == keys1
     assert [h["version"] for h in snapshot_history(gold)] == [1, 2]
+
+
+def test_recap_one_doc_per_station_day_across_a_rename(spark, tmp_path):
+    """A9: one Gold doc per (date, location_id), the merge's key. A day
+    whose rows carry two names (hours 08 and 10 as "Bandung", 09 and 11
+    as "Kota Bandung") gives one doc holding every hour, named by the
+    day's latest row; a replay leaves the same table."""
+    from etl_weather_jabar_spark.plans.pipelines import recap_to_snapshot
+    from etl_weather_jabar_spark.snapshots import snapshot_read
+
+    base = silver_fixture(spark).limit(1)
+    silver = None
+    for hour, name in (("08", "Bandung"), ("09", "Kota Bandung"),
+                       ("10", "Bandung"), ("11", "Kota Bandung")):
+        part = (base.withColumn("hour", F.lit(hour))
+                .withColumn("timestamp", F.lit(f"2024-02-01 {hour}:00:00"))
+                .withColumn("_id", F.lit(f"r{hour}"))
+                .withColumn("location_name", F.lit(name)))
+        silver = part if silver is None else silver.unionByName(part)
+    docs = daily_recap(silver).collect()
+    assert len(docs) == 1
+    assert docs[0]["location_name"] == "Kota Bandung"
+    assert [h["hour"] for h in docs[0]["hourly"]] == ["08", "09", "10", "11"]
+
+    gold = str(tmp_path / "gold")
+
+    def table():
+        return sorted(repr(r.asDict(recursive=True))
+                      for r in snapshot_read(spark, gold).collect())
+
+    recap_to_snapshot(silver, silver, gold)
+    first = table()
+    assert len(first) == 1 and "'hour': '11'" in first[0]
+    recap_to_snapshot(silver, silver, gold)
+    assert table() == first
+
+
+def test_recap_to_snapshot_new_day_plans_no_shuffle(spark, tmp_path, monkeypatch):
+    """A recap day new to Gold, onto a new table and onto a table holding
+    another day, is written without an Exchange or a Window: the recap's
+    groupBy runs when the merge materializes its log, and the merge's
+    insert-only path needs no keep-last window. A replayed day rewrites
+    its file through the window. Checked on the write's executed plan."""
+    import etl_weather_jabar_spark.snapshots as snap
+    from etl_weather_jabar_spark.plans.pipelines import recap_to_snapshot
+
+    written, real = [], snap._write_data_files
+
+    def capture(df, *a, **kw):
+        written.append(df)
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(snap, "_write_data_files", capture)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    day1 = silver_fixture(spark)
+    day2 = (day1.withColumn("date", F.lit("2024-02-02"))
+            .withColumn("timestamp", F.regexp_replace("timestamp", "2024-02-01", "2024-02-02")))
+    silver = day1.unionByName(day2)
+    gold = str(tmp_path / "gold")
+    recap_to_snapshot(silver, day1, gold)
+    recap_to_snapshot(silver, day2, gold)
+    recap_to_snapshot(silver, day2, gold)
+    assert len(written) == 3
+    for df in written[:2]:
+        assert "Exchange" not in plan(df) and "Window" not in plan(df), plan(df)
+    assert "Window" in plan(written[2])
