@@ -116,22 +116,10 @@ def idempotent_view_commit(
     This is the commit body the streaming materialized-view query
     (``queries.stream_matview_orders``) runs inside foreachBatch —
     extracted so replay idempotency is directly unit-testable."""
-    from ..snapshots import (
-        _read_manifest,
-        _versions,
-        snapshot_read,
-        snapshot_write,
-    )
+    from ..snapshots import _resolve, snapshot_read, snapshot_write
 
-    try:
-        vs = _versions(view_tbl)
-        applied = (
-            list(_read_manifest(view_tbl, vs[-1]).get("applied_batch_ids", []))
-            if vs
-            else []
-        )
-    except FileNotFoundError:
-        applied = []
+    _, m = _resolve(view_tbl, missing_ok=True)
+    applied = list((m or {}).get("applied_batch_ids", []))
     if int(batch_id) in applied:
         return False
     delta = delta_agg(batch, keys, op_col=op_col, measures=measures)

@@ -9,7 +9,7 @@ can hold a changed key and carries every other file forward by name.
 Layout::
 
     <table>/data/<commit>-partNNNN.parquet   immutable data files
-    <table>/dv/<commit>-dvNNNN.parquet       deletion-vector sidecars
+    <table>/dv/<commit>-partNNNN.parquet     deletion-vector sidecars
     <table>/_manifests/v{N:010d}.json        full file listing per version
 
 A commit writes its data files first, then publishes a manifest naming
@@ -19,6 +19,15 @@ later commit (snapshot isolation), and `version=` gives time travel.
 Publication is `open(path, "x")` — atomic on POSIX; a concurrent writer
 that loses the race re-resolves and retries against the next version
 (optimistic concurrency, single winner per version).
+
+The protocol has one helper per rule. :func:`_resolve` names a version
+and its manifest, or raises FileNotFoundError. :func:`_read_files` reads
+listed files with the deletion vectors (DVs) applied. :func:`_may_hold`
+prunes a file by its recorded ``[lo, hi]``; collated strings record no
+stats or Bloom (:func:`_prunable`). :func:`_occ` restarts an operation
+when another commit lands first. :func:`_carry` keeps the per-file
+entries of the files a commit keeps; a rewrite records stats on the
+columns its base records (:func:`_stats_cols`).
 
 Scale notes: the manifest is O(live files) JSON — fine into the tens of
 thousands of files; production formats (Delta/Iceberg) switch to delta
@@ -90,8 +99,67 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(f)
 
 
+def _resolve(
+    path: str, version: int | None = None, *, missing_ok: bool = False
+) -> tuple[int | None, dict | None]:
+    """The one resolver: ``(version, manifest)`` of ``version``, by
+    default the latest. A path with no version raises FileNotFoundError,
+    or gives ``(None, None)`` when ``missing_ok``; a version that is not
+    retained always raises it."""
+    vs = _versions(path)
+    if not vs:
+        if missing_ok:
+            return None, None
+        raise FileNotFoundError(f"no snapshots at {path}")
+    v = vs[-1] if version is None else version
+    if v not in vs:
+        raise FileNotFoundError(f"version {v} not retained at {path} (have {vs})")
+    return v, _read_manifest(path, v)
+
+
+def _manifests(path: str, after: int = 0):
+    """``(version, manifest)`` of every retained version newer than
+    ``after``, oldest first."""
+    for v in _versions(path):
+        if v > after:
+            yield v, _read_manifest(path, v)
+
+
+# The per-file maps of a manifest, ``{file: entry}``. Each names only files
+# its own version lists; the table-level ``dvs`` list goes with dv_counts.
+_PER_FILE = ("stats", "row_counts", "blooms", "dv_counts")
+
+
+def _carry(m: dict | None, files: list[str], new: dict | None = None) -> dict:
+    """The one carry rule: the manifest entries of a commit listing
+    ``files`` onto the base manifest ``m``. Each per-file map keeps the
+    base's entries of the listed files, and ``new``'s maps add (or
+    replace) the entries of the files the commit writes. The ``dvs``
+    list — ``new``'s, else the base's — is kept while a listed file has
+    a DV. ``stats`` and ``row_counts`` are always present; an empty
+    Bloom or DV map is left out."""
+    keep, new = set(files), new or {}
+    out: dict = {"files": files}
+    for k in _PER_FILE:
+        d = {f: x for f, x in (m or {}).get(k, {}).items() if f in keep}
+        d.update(new.get(k, {}))
+        if d or k in ("stats", "row_counts"):
+            out[k] = d
+    if out.get("dv_counts"):
+        out["dvs"] = new.get("dvs") or m["dvs"]
+    return out
+
+
+def _stats_cols(m: dict | None, cols=()) -> list[str]:
+    """The columns a commit onto manifest ``m`` records stats on:
+    ``cols``, then each column ``m`` records stats on — so a rewritten
+    file prunes as the files it replaces did."""
+    recorded = [c for s in (m or {}).get("stats", {}).values() for c in s]
+    return list(dict.fromkeys([*cols, *recorded]))
+
+
 def _write_data_files(
-    df: DataFrame, path: str, keep_empty: bool = True
+    df: DataFrame, path: str, keep_empty: bool = True, subdir: str = "data"
 ) -> tuple[list[str], dict]:
     """Write ``df`` into immutable data files; returns (names, per-file
     row counts). Files exist but are invisible until a manifest names
@@ -102,10 +170,11 @@ def _write_data_files(
     partition 0): it would carry no stats and make every later merge
     rewrite it. When no file holds a row, the first is kept only if
     ``keep_empty`` — the version would otherwise list no file, and
-    :func:`snapshot_read` refuses an empty version."""
+    :func:`snapshot_read` refuses an empty version. Deletion-vector sets
+    are written the same way into ``subdir="dv"``."""
     import pyarrow.parquet as pq
 
-    data_dir = os.path.join(path, "data")
+    data_dir = os.path.join(path, subdir)
     os.makedirs(data_dir, exist_ok=True)
     commit = uuid.uuid4().hex[:12]
     staging = os.path.join(path, f"_staging-{commit}")
@@ -125,49 +194,30 @@ def _write_data_files(
     return new_files, row_counts
 
 
-def _write_dv_files(df: DataFrame, path: str) -> list[str]:
-    """Write a deletion-vector set — (file string, pos bigint) rows — as
-    immutable parquet under ``<table>/dv/``; returns the names. Like data
-    files, DV files are invisible until a manifest's ``dvs`` list names
-    them. The set is coalesced to one file: DVs are small by contract
-    (row-level deletes); a production format shards one bitmap per data
-    file, same protocol."""
-    dv_dir = os.path.join(path, "dv")
-    os.makedirs(dv_dir, exist_ok=True)
-    commit = uuid.uuid4().hex[:12]
-    staging = os.path.join(path, f"_dvstaging-{commit}")
-    df.coalesce(1).write.mode("overwrite").parquet(staging)
-    names = []
-    for i, part in enumerate(
-        sorted(glob.glob(os.path.join(staging, "*.parquet")))
-    ):
-        name = f"{commit}-dv{i:04d}.parquet"
-        os.rename(part, os.path.join(dv_dir, name))
-        names.append(name)
-    shutil.rmtree(staging)
-    return names
+def _paths(path: str, subdir: str, names: list[str]) -> list[str]:
+    """The paths of the files ``names`` under ``<table>/<subdir>/``."""
+    return [os.path.join(path, subdir, n) for n in names]
 
 
-def _read_dv_set(spark, path: str, dv_names: list[str]) -> DataFrame:
-    return spark.read.parquet(
-        *[os.path.join(path, "dv", d) for d in dv_names]
-    )
-
-
-def _dv_apply_read(
+def _read_files(
     spark,
     path: str,
     m: dict,
     files: list[str],
     merge_schema: bool = False,
 ) -> DataFrame:
-    """Read the given manifest files with the manifest's deletion vectors
-    applied. Files with no recorded deletions take the plain scan path
-    untouched; dirty files are read with ``_metadata`` row positions and
+    """The one read: the given files of manifest ``m`` with its deletion
+    vectors applied. A DV set — (file string, pos bigint) rows — is
+    parquet under ``<table>/dv/``, named by the manifest's ``dvs`` list.
+    Files with no recorded deletions take the plain scan path untouched;
+    dirty files are read with ``_metadata`` row positions and
     anti-joined against the (broadcast) DV set — the scan stays
-    shuffle-free because the DV side is small by contract."""
+    shuffle-free because the DV side is small by contract. An empty
+    ``files`` raises FileNotFoundError: the version is empty."""
     from pyspark.sql import functions as F
 
+    if not files:
+        raise FileNotFoundError(f"version {m['version']} is empty")
     dv_counts = m.get("dv_counts", {})
     dirty = [f for f in files if dv_counts.get(f)]
     clean = [f for f in files if not dv_counts.get(f)]
@@ -176,15 +226,11 @@ def _dv_apply_read(
         reader = reader.option("mergeSchema", "true")
     parts = []
     if clean:
-        parts.append(
-            reader.parquet(*[os.path.join(path, "data", f) for f in clean])
-        )
+        parts.append(reader.parquet(*_paths(path, "data", clean)))
     if dirty:
-        df = reader.parquet(
-            *[os.path.join(path, "data", f) for f in dirty]
-        )
+        df = reader.parquet(*_paths(path, "data", dirty))
         cols = df.columns
-        dv = _read_dv_set(spark, path, m["dvs"]).select(
+        dv = spark.read.parquet(*_paths(path, "dv", m["dvs"])).select(
             F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
         )
         parts.append(
@@ -262,10 +308,10 @@ _FOOTER_STATS_TYPES = {
 }
 
 
-def _collated(field) -> bool:
-    """Whether the StructField ``field`` is a string with a collation,
+def _collated(field: dict) -> bool:
+    """Whether the field JSON ``field`` is a string with a collation,
     whose equality and order are neither Python's nor its footer's."""
-    return "__COLLATIONS" in field.jsonValue()["metadata"]
+    return "__COLLATIONS" in field.get("metadata", {})
 
 
 def _exact_keys(fields) -> bool:
@@ -274,7 +320,8 @@ def _exact_keys(fields) -> bool:
     default-collation string columns. Python's equality differs on NaN
     and -0.0, and the other types lack exact footer stats."""
     return all(
-        f.dataType.typeName() in _FOOTER_STATS_TYPES and not _collated(f)
+        f.dataType.typeName() in _FOOTER_STATS_TYPES
+        and not _collated(f.jsonValue())
         for f in fields
     )
 
@@ -301,7 +348,7 @@ def _footer_minmax(md, field: dict | None):
     if (
         field is None
         or field["type"] not in _FOOTER_STATS_TYPES
-        or "__COLLATIONS" in field.get("metadata", {})
+        or _collated(field)
         or (field["type"] == "date"
             and b"org.apache.spark.legacyDateTime" in (md.metadata or {}))
     ):
@@ -329,6 +376,21 @@ def _footer_minmax(md, field: dict | None):
     return lo, hi
 
 
+def _prunable(path: str, files: list[str], cols: list[str]) -> list[str]:
+    """The columns of ``cols`` that manifest stats and Blooms may
+    describe: all but collated strings, whose order and equality are
+    neither Python's (:func:`_may_hold`) nor those of their CAST(… AS
+    STRING) (the Bloom's hash). The files of one commit share a schema,
+    which the first file's footer records."""
+    import pyarrow.parquet as pq
+
+    if not files or not cols:
+        return []
+    md = pq.ParquetFile(os.path.join(path, "data", files[0])).metadata
+    fields = _footer_fields(md)
+    return [c for c in cols if not _collated(fields.get(c, {}))]
+
+
 def _file_stats(spark, path: str, files: list[str], cols: list[str]) -> dict:
     """Per-file min/max of ``cols``: ``{file: {col: [lo, hi]}}`` (the
     manifest-side analogue of parquet footer stats, queryable without
@@ -338,11 +400,15 @@ def _file_stats(spark, path: str, files: list[str], cols: list[str]) -> dict:
     aggregate over just the files that need it. Values are stored
     through :func:`_stats_encode`, so temporal/decimal/binary keys are
     JSON-safe — the encode failure used to surface as a json.dump
-    TypeError AFTER data files were written (orphaning them)."""
+    TypeError AFTER data files were written (orphaning them). Collated
+    string columns get no stats (:func:`_prunable`)."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    cols = _prunable(path, files, cols)
     out: dict = {}
+    if not cols:
+        return out
     todo = []
     for f in files:
         md = pq.ParquetFile(os.path.join(path, "data", f)).metadata
@@ -356,7 +422,7 @@ def _file_stats(spark, path: str, files: list[str], cols: list[str]) -> dict:
             out[f] = {c: [_stats_encode(v) for v in s] for c, s in got.items()}
     if not todo:
         return out
-    df = spark.read.parquet(*[os.path.join(path, "data", f) for f in todo])
+    df = spark.read.parquet(*_paths(path, "data", todo))
     aggs = []
     for c in cols:
         aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
@@ -395,18 +461,18 @@ def _file_blooms(
     to "no pruning", never to wrong answers. Manifest-inline lanes are
     the small-table form; at very large file counts a production format
     moves the bitmap into per-file sidecars (parquet stores it in the
-    footer), same probe protocol."""
+    footer), same probe protocol. Collated string columns get no Bloom
+    (:func:`_prunable`)."""
     from functools import reduce
 
     from pyspark.sql import functions as F
 
     from .ext.heavy_hitters import _bloom_pos
 
-    if not files or not cols:
+    cols = _prunable(path, files, cols)
+    if not cols:
         return {}
-    df = spark.read.parquet(
-        *[os.path.join(path, "data", f) for f in files]
-    ).select(
+    df = spark.read.parquet(*_paths(path, "data", files)).select(
         F.col("_metadata.file_name").alias("f"),
         *[F.col(c).cast("string").alias(c) for c in cols],
     )
@@ -470,12 +536,14 @@ def snapshot_lookup_files(
     bloom_cols=...)``) — pure metadata, no Spark session. Files without
     a recorded Bloom for ``col`` are returned conservatively. No false
     negatives (Bloom guarantee); a point lookup of an absent key prunes
-    to zero files with probability (1 − fp_rate)^files."""
-    vs = _versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no snapshots at {path}")
-    v = vs[-1] if version is None else version
-    m = _read_manifest(path, v)
+    to zero files with probability (1 − fp_rate)^files. A collated
+    string column has no Bloom, so every file is returned."""
+    return _bloom_pick(_resolve(path, version)[1], col, values)
+
+
+def _bloom_pick(m: dict, col: str, values) -> list[str]:
+    """The files of manifest ``m`` whose Bloom for ``col`` admits one of
+    ``values``; a file with no Bloom for ``col`` may hold any."""
     blooms = m.get("blooms", {})
 
     def may(f: str) -> bool:
@@ -497,51 +565,45 @@ def snapshot_lookup(
     predicates on clustered columns; the Bloom prunes POINT lookups on
     columns no layout clusters — the Delta/Iceberg bloom-filter-index
     analogue. Same rows as ``snapshot_read(...).where(col.isin(values))``
-    by construction (no false negatives). 100 TB: pruning is a
+    by construction (no false negatives). A collated string column has
+    no Bloom, so every file is read. 100 TB: pruning is a
     driver-side manifest walk (k md5s per file × value); the read
     touches the surviving files only."""
     from pyspark.sql import functions as F
 
-    vs = _versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no snapshots at {path}")
-    v = vs[-1] if version is None else version
-    m = _read_manifest(path, v)
-    picked = snapshot_lookup_files(path, col, values, version=v)
-    if not picked:
-        return snapshot_read(spark, path, version=v).where(F.lit(False))
-    if m.get("dvs"):
-        df = _dv_apply_read(spark, path, m, picked)
-    else:
-        df = spark.read.parquet(
-            *[os.path.join(path, "data", f) for f in picked]
-        )
-    return df.where(F.col(col).isin(list(values)))
+    _, m = _resolve(path, version)
+    picked = _bloom_pick(m, col, values)
+    pred = F.col(col).isin(list(values)) if picked else F.lit(False)
+    return _read_files(spark, path, m, picked or m["files"]).where(pred)
 
 
-def _publish(path: str, build) -> int:
+_ANY = object()  # _publish's base: a commit valid onto any latest version
+
+
+def _publish(path: str, op: str, build, base=_ANY) -> int:
     """Atomically publish the next version. ``build(latest_manifest)``
-    returns ``(files, op, meta, stats)`` and is re-invoked on a lost
-    create-if-absent race, so an append that loses includes the winner's
-    files on retry (no lost update)."""
+    returns the manifest entries (:func:`_carry`'s, plus any meta) and is
+    re-invoked on a lost create-if-absent race, so an append that loses
+    includes the winner's files on retry (no lost update). A commit
+    computed from version ``base`` raises ``_Conflict`` instead when the
+    latest version is another one."""
     os.makedirs(_manifest_dir(path), exist_ok=True)
     while True:
-        vs = _versions(path)
-        latest = _read_manifest(path, vs[-1]) if vs else None
-        files, op, meta, stats, row_counts = build(latest)
+        v, latest = _resolve(path, missing_ok=True)
+        if base is not _ANY and v != base:
+            raise _Conflict
+        entries = build(latest)
         # resume numbering past the vacuum horizon: a vacuum that dropped
         # every manifest must not make the next commit reuse version 1
         # (folded history is keyed by version number)
-        base_v = vs[-1] if vs else _read_meta(path)["vacuum_horizon"] - 1
-        version = base_v + 1
+        if v is None:
+            v = _read_meta(path)["vacuum_horizon"] - 1
+        version = v + 1
         manifest = {
             "version": version,
             "op": op,
             "ts": time.strftime("%Y-%m-%d %H:%M:%S"),
-            "files": files,
-            "stats": stats,
-            "row_counts": row_counts,
-            **(meta or {}),
+            **entries,
         }
         target = os.path.join(_manifest_dir(path), f"v{version:010d}.json")
         # write the FULL manifest to a temp file first, then hard-link it
@@ -558,6 +620,30 @@ def _publish(path: str, build) -> int:
             continue  # lost the race: re-resolve latest and retry
         finally:
             os.unlink(tmp)
+
+
+def _occ(path: str, what: str, max_retries: int, attempt, missing_ok=False) -> int:
+    """The one optimistic-concurrency loop. ``attempt(manifest)`` computes
+    a commit against the latest version and returns its ``(op,
+    entries)``, or ``None`` to return that version without committing.
+    A commit landing in between restarts the operation from the new
+    latest version — publishing the stale result could drop the racer's
+    rows; the abandoned attempt's files are unreferenced and reclaimed
+    by :func:`vacuum`. ``max_retries`` lost races raise
+    :class:`ConcurrentSnapshotError`."""
+    for _ in range(max_retries):
+        base, m = _resolve(path, missing_ok=missing_ok)
+        out = attempt(m)
+        if out is None:
+            return base
+        op, entries = out
+        try:
+            return _publish(path, op, lambda latest: entries, base=base)
+        except _Conflict:
+            continue
+    raise ConcurrentSnapshotError(
+        f"{what} at {path} lost {max_retries} publish races; giving up"
+    )
 
 
 def snapshot_add_constraint(path: str, name: str, expr: str) -> None:
@@ -644,59 +730,26 @@ def snapshot_write(
     if check is not None:
         checks["<batch check>"] = check
     _enforce_constraints(df, checks)
-    vs = _versions(path)
+    _, cur = _resolve(path, missing_ok=True)
     # an empty batch appended to a listed file adds no file
-    alone = (
-        mode == "overwrite"
-        or not vs
-        or not _read_manifest(path, vs[-1])["files"]
-    )
+    alone = mode == "overwrite" or not (cur and cur["files"])
     new_files, counts = _write_data_files(df, path, keep_empty=alone)
-    stats = (
-        _file_stats(df.sparkSession, path, new_files, stats_cols)
-        if stats_cols
-        else {}
-    )
-    blooms = (
-        _file_blooms(
-            df.sparkSession, path, new_files, bloom_cols, m_bits=bloom_bits
-        )
-        if bloom_cols
-        else {}
-    )
+    spark = df.sparkSession
+    new = {
+        "stats": _file_stats(spark, path, new_files, stats_cols or []),
+        "row_counts": counts,
+        "blooms": _file_blooms(
+            spark, path, new_files, bloom_cols or [], m_bits=bloom_bits
+        ),
+    }
 
     def build(latest):
-        if latest and mode == "append":
-            base = latest["files"]
-            base_stats = latest.get("stats", {})
-            base_counts = latest.get("row_counts", {})
-        else:
-            base, base_stats, base_counts = [], {}, {}
-        # an append must carry the base version's deletion vectors, or
-        # DV-deleted rows would silently resurrect on the next commit
-        meta2 = dict(meta or {})
-        if latest and mode == "append" and latest.get("dvs"):
-            meta2.setdefault("dvs", latest["dvs"])
-            meta2.setdefault("dv_counts", latest.get("dv_counts", {}))
-        # per-file Blooms ride the same carry rule as stats
-        base_blooms = (
-            latest.get("blooms", {}) if latest and mode == "append" else {}
-        )
-        all_blooms = {
-            **{f: b for f, b in base_blooms.items() if f in base},
-            **blooms,
-        }
-        if all_blooms:
-            meta2["blooms"] = all_blooms
-        return (
-            base + new_files,
-            mode,
-            meta2 or None,
-            {**{f: s for f, s in base_stats.items() if f in base}, **stats},
-            {**{f: n for f, n in base_counts.items() if f in base}, **counts},
-        )
+        # an append carries the base's entries, deletion vectors included
+        base = latest if mode == "append" else None
+        files = (base["files"] if base else []) + new_files
+        return {**_carry(base, files, new), **(meta or {})}
 
-    return _publish(path, build)
+    return _publish(path, mode, build)
 
 
 def snapshot_read(
@@ -712,24 +765,8 @@ def snapshot_read(
     existed read it as NULL — the Delta/Iceberg add-column semantics);
     the default reads with the first file's schema, which is cheaper and
     right for schema-stable tables."""
-    vs = _versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no snapshots at {path}")
-    v = vs[-1] if version is None else version
-    if v not in vs:
-        raise FileNotFoundError(f"version {v} not in {vs}")
-    m = _read_manifest(path, v)
-    files = m["files"]
-    if not files:
-        raise FileNotFoundError(f"version {v} is empty")
-    if m.get("dvs"):
-        return _dv_apply_read(spark, path, m, files, merge_schema)
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(
-        *[os.path.join(path, "data", f) for f in files]
-    )
+    _, m = _resolve(path, version)
+    return _read_files(spark, path, m, m["files"], merge_schema)
 
 
 def _history_row(m: dict) -> dict:
@@ -747,9 +784,7 @@ def snapshot_history(path: str) -> list[dict]:
     (their manifests are gone, so they are no longer time-travelable —
     the history record is what remains)."""
     out = list(_read_meta(path)["history"])
-    for v in _versions(path):
-        out.append(_history_row(_read_manifest(path, v)))
-    return out
+    return out + [_history_row(m) for _, m in _manifests(path)]
 
 
 def vacuum(
@@ -767,30 +802,23 @@ def vacuum(
     to unreferenced files). Pass 0 only when no writer can be active."""
     vs = _versions(path)
     keep = vs[-keep_versions:] if keep_versions > 0 else []
-    live: set[str] = set()
-    live_dvs: set[str] = set()
+    live: dict[str, set[str]] = {"data": set(), "dv": set()}
     for v in keep:
         m = _read_manifest(path, v)
-        live.update(m["files"])
-        live_dvs.update(m.get("dvs", []))
+        live["data"].update(m["files"])
+        live["dv"].update(m.get("dvs", []))
     deleted = []
     now = time.time()
-    for f in glob.glob(os.path.join(path, "data", "*.parquet")):
-        if os.path.basename(f) in live:
-            continue
-        if now - os.path.getmtime(f) < min_age_seconds:
-            continue  # young unreferenced file = likely in-flight commit
-        os.remove(f)
-        deleted.append(os.path.basename(f))
-    # deletion-vector sidecars GC by the same rule (a delete commit's
-    # consolidation de-references its predecessors' DV files)
-    for f in glob.glob(os.path.join(path, "dv", "*.parquet")):
-        if os.path.basename(f) in live_dvs:
-            continue
-        if now - os.path.getmtime(f) < min_age_seconds:
-            continue
-        os.remove(f)
-        deleted.append(os.path.basename(f))
+    # deletion-vector sidecars GC by the same rule as data files (a delete
+    # commit's consolidation de-references its predecessors' DV files)
+    for sub, names in live.items():
+        for f in glob.glob(os.path.join(path, sub, "*.parquet")):
+            if os.path.basename(f) in names:
+                continue
+            if now - os.path.getmtime(f) < min_age_seconds:
+                continue  # young unreferenced file = likely in-flight commit
+            os.remove(f)
+            deleted.append(os.path.basename(f))
     dropped = [v for v in vs if v not in keep]
     if dropped:
         # Fold the to-be-deleted manifests' durable state (streaming dedup
@@ -830,19 +858,21 @@ def _orderable(v) -> bool:
     return v is not None and v == v
 
 
-def _may_hold(s, ckeys) -> bool:
-    """Whether a file whose recorded ``[lo, hi]`` is ``s`` can hold one of
-    the sorted keys ``ckeys``. No key list (``None``), no stats, or stats
-    that do not order mean it may."""
+def _may_hold(s, los, his) -> bool:
+    """The one pruning rule over manifest stats: whether a file whose
+    recorded ``[lo, hi]`` for a column is ``s`` may hold a value in one
+    of the sorted, disjoint ranges ``[los[i], his[i]]``. It may when it
+    has no stats, or a bound is NULL or NaN (no total order holds them).
+    Collated strings record no stats (:func:`_prunable`)."""
     import bisect
 
-    if ckeys is None or s is None:
+    if s is None:
         return True
     lo, hi = _stats_decode(s[0]), _stats_decode(s[1])
     if not (_orderable(lo) and _orderable(hi)):
         return True
-    i = bisect.bisect_left(ckeys, lo)
-    return i < len(ckeys) and ckeys[i] <= hi
+    i = bisect.bisect_left(his, lo)
+    return i < len(his) and los[i] <= hi
 
 
 def _empty_read(spark, path: str, name: str) -> DataFrame:
@@ -886,10 +916,10 @@ def snapshot_merge(
     change set holds more than ``max_change_keys`` keys (a driver-size
     guard, above which the distinct leading keys are collected instead),
     when a leading key is NULL or NaN, or when ``keys[0]`` is a collated
-    string (its order is not Python's) — the whole-table rewrite is the
-    degenerate case, with the same result. Every merge records ``keys[0]``
-    stats for the files it writes, so a table built by merges prunes from
-    its second merge on.
+    string (which records no stats) — the whole-table rewrite is the
+    degenerate case, with the same result. Every merge records stats on
+    ``keys[0]`` and on the columns the base version records for the files
+    it writes, so a table built by merges prunes from its second merge on.
 
     Insert-only path (Delta's insert-only MERGE): when no file is hot and
     the driver sees no key twice in the log, the new files are the log's
@@ -901,9 +931,7 @@ def snapshot_merge(
 
     Concurrency: the hot/cold split is only valid against the exact
     version it was computed from, so a commit landing in between
-    RESTARTS the merge from the new latest version — publishing the stale
-    result would silently drop the racer's rows. The abandoned attempt's
-    data files are unreferenced and reclaimed by :func:`vacuum`.
+    RESTARTS the merge from the new latest version (:func:`_occ`).
     ``max_retries`` conflicts → :class:`ConcurrentSnapshotError`."""
     from pyspark.sql import functions as F
 
@@ -926,25 +954,18 @@ def snapshot_merge(
         rows = changes.select(lead).distinct().limit(n).collect()
     found = {r[0] for r in rows}
     ckeys = None  # every file is hot
-    # a collated leading key orders unlike its Python strings
-    if (
-        not _collated(fields[0])
-        and len(found) < n
-        and all(map(_orderable, found))
-    ):
+    if len(found) < n and all(map(_orderable, found)):
         ckeys = sorted(found)
 
-    for _ in range(max_retries):
-        vs = _versions(path)
-        base_version = vs[-1] if vs else None
-        latest = _read_manifest(path, base_version) if vs else {"files": []}
-        files, stats = latest["files"], latest.get("stats", {})
+    def attempt(m):
+        files, stats = (m["files"], m.get("stats", {})) if m else ([], {})
         hot, cold = [], []
         for f in files:
-            may = _may_hold(stats.get(f, {}).get(lead), ckeys)
+            s = stats.get(f, {}).get(lead)
+            may = ckeys is None or _may_hold(s, ckeys, ckeys)
             (hot if may else cold).append(f)
         if hot:
-            base = _dv_apply_read(spark, path, latest, hot)
+            base = _read_files(spark, path, m, hot)
         elif files:  # nothing to rewrite: no rows, the table's schema
             base = _empty_read(spark, path, files[0])
         else:  # create-on-first-merge: the change log's row shape
@@ -961,38 +982,11 @@ def snapshot_merge(
         new_files, new_counts = _write_data_files(
             merged, path, keep_empty=not cold
         )
-        new_stats = _file_stats(spark, path, new_files, [lead])
+        new_stats = _file_stats(spark, path, new_files, _stats_cols(m, [lead]))
+        new = {"stats": new_stats, "row_counts": new_counts}
+        return "merge", _carry(m, cold + new_files, new)
 
-        def build(latest_m):
-            if (latest_m or {}).get("version") != base_version:
-                raise _Conflict  # someone committed since the split
-            keep = set(cold)
-
-            def carry(d: dict) -> dict:
-                return {f: x for f, x in d.items() if f in keep}
-
-            meta = {}
-            dv_counts = carry(latest.get("dv_counts", {}))
-            if dv_counts:  # hot rewrites just materialized theirs
-                meta.update(dvs=latest["dvs"], dv_counts=dv_counts)
-            blooms = carry(latest.get("blooms", {}))
-            if blooms:
-                meta["blooms"] = blooms
-            return (
-                cold + new_files,
-                "merge",
-                meta or None,
-                {**carry(stats), **new_stats},
-                {**carry(latest.get("row_counts", {})), **new_counts},
-            )
-
-        try:
-            return _publish(path, build)
-        except _Conflict:
-            continue  # restart the whole merge from the new latest
-    raise ConcurrentSnapshotError(
-        f"merge at {path} lost {max_retries} publish races; giving up"
-    )
+    return _occ(path, "merge", max_retries, attempt, missing_ok=True)
 
 
 def snapshot_delete_dv(
@@ -1047,16 +1041,10 @@ def snapshot_delete_dv(
     if keys is not None and key_col is None:
         raise ValueError("keys requires key_col")
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    for _ in range(max_retries):
-        vs = _versions(path)
-        if not vs:
-            raise FileNotFoundError(f"no snapshots at {path}")
-        base_version = vs[-1]
-        m = _read_manifest(path, base_version)
+
+    def attempt(m):
         files = m["files"]
-        scan = spark.read.parquet(
-            *[os.path.join(path, "data", f) for f in files]
-        ).select(
+        scan = spark.read.parquet(*_paths(path, "data", files)).select(
             F.col("_metadata.file_name").alias("__dv_file"),
             F.col("_metadata.row_index").alias("__dv_pos"),
             "*",
@@ -1073,9 +1061,10 @@ def snapshot_delete_dv(
             F.col("__dv_file").alias("file"),
             F.col("__dv_pos").alias("pos"),
         )
-        if m.get("dvs"):
+        old = m.get("dvs")
+        if old:
             matches = matches.unionByName(
-                _read_dv_set(spark, path, m["dvs"])
+                spark.read.parquet(*_paths(path, "dv", old))
             )
         dv_set = (
             matches.where(F.col("file").isin(files)).distinct().cache()
@@ -1087,34 +1076,17 @@ def snapshot_delete_dv(
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             }
-            old_total = sum(m.get("dv_counts", {}).values())
-            if sum(per_file.values()) == old_total:
-                return base_version  # nothing newly deleted: no-op
-            dv_names = _write_dv_files(dv_set, path)
+            if sum(per_file.values()) == sum(m.get("dv_counts", {}).values()):
+                return None  # nothing newly deleted: no-op
+            # one DV file: DVs are small by contract (row-level deletes);
+            # a production format shards one bitmap per data file
+            dvs, _ = _write_data_files(dv_set.coalesce(1), path, subdir="dv")
         finally:
             dv_set.unpersist()
+        # data files unchanged: their stats, counts and Blooms still hold
+        return "delete_dv", _carry(m, files, {"dv_counts": per_file, "dvs": dvs})
 
-        def build(latest_m):
-            if latest_m is None or latest_m.get("version") != base_version:
-                raise _Conflict
-            dv_meta = {"dvs": dv_names, "dv_counts": per_file}
-            if m.get("blooms"):  # files unchanged -> blooms still valid
-                dv_meta["blooms"] = m["blooms"]
-            return (
-                files,
-                "delete_dv",
-                dv_meta,
-                m.get("stats", {}),
-                m.get("row_counts", {}),
-            )
-
-        try:
-            return _publish(path, build)
-        except _Conflict:
-            continue  # restart the scan against the new latest
-    raise ConcurrentSnapshotError(
-        f"delete at {path} lost {max_retries} publish races; giving up"
-    )
+    return _occ(path, "delete", max_retries, attempt)
 
 
 def snapshot_purge_dv(spark, path: str, *, max_retries: int = 10) -> int:
@@ -1126,53 +1098,23 @@ def snapshot_purge_dv(spark, path: str, *, max_retries: int = 10) -> int:
     a delete touching 3 files costs 3 file rewrites at purge time, not
     a table rewrite at delete time. No-op (returns current version) if
     the latest version has no DVs. Pre-purge versions still time-travel
-    with their DVs applied."""
-    for _ in range(max_retries):
-        vs = _versions(path)
-        if not vs:
-            raise FileNotFoundError(f"no snapshots at {path}")
-        base_version = vs[-1]
-        m = _read_manifest(path, base_version)
+    with their DVs applied. The rewritten files record stats on the
+    columns the base version records, so they prune as before."""
+
+    def attempt(m):
         if not m.get("dvs"):
-            return base_version
-        files = m["files"]
-        dv_counts = m.get("dv_counts", {})
-        dirty = [f for f in files if dv_counts.get(f)]
-        clean = [f for f in files if not dv_counts.get(f)]
-        rows = _dv_apply_read(spark, path, m, dirty)
+            return None
+        dv_counts = m["dv_counts"]
+        dirty = [f for f in m["files"] if dv_counts.get(f)]
+        clean = [f for f in m["files"] if not dv_counts.get(f)]
         new_files, new_counts = _write_data_files(
-            rows, path, keep_empty=not clean
+            _read_files(spark, path, m, dirty), path, keep_empty=not clean
         )
+        new_stats = _file_stats(spark, path, new_files, _stats_cols(m))
+        new = {"stats": new_stats, "row_counts": new_counts}
+        return "purge_dv", _carry(m, clean + new_files, new)
 
-        def build(latest_m):
-            if latest_m is None or latest_m.get("version") != base_version:
-                raise _Conflict
-            cold = set(clean)
-            kept_blooms = {
-                f: b for f, b in m.get("blooms", {}).items() if f in cold
-            }
-            return (
-                clean + new_files,
-                "purge_dv",
-                {"blooms": kept_blooms} if kept_blooms else None,
-                {f: s for f, s in m.get("stats", {}).items() if f in cold},
-                {
-                    **{
-                        f: n
-                        for f, n in m.get("row_counts", {}).items()
-                        if f in cold
-                    },
-                    **new_counts,
-                },
-            )
-
-        try:
-            return _publish(path, build)
-        except _Conflict:
-            continue
-    raise ConcurrentSnapshotError(
-        f"purge at {path} lost {max_retries} publish races; giving up"
-    )
+    return _occ(path, "purge", max_retries, attempt)
 
 
 def committed_batch_ids(path: str) -> set[int]:
@@ -1180,12 +1122,20 @@ def committed_batch_ids(path: str) -> set[int]:
     the union of ids recorded in retained manifests and ids folded into
     ``_meta.json`` by :func:`vacuum` — so vacuuming old manifests can
     never erase the exactly-once dedup ledger."""
-    out = set(int(b) for b in _read_meta(path)["batch_ids"])
-    for v in _versions(path):
-        b = _read_manifest(path, v).get("batch_id")
-        if b is not None:
-            out.add(int(b))
-    return out
+    return _ledger(path)[0]
+
+
+def _ledger(path: str, after: int = 0) -> tuple[set[int], int]:
+    """The batch ids of retained manifests newer than version ``after``
+    (from 0, with the ids :func:`vacuum` folded into ``_meta.json``), and
+    the newest version read (``after`` when none is)."""
+    folded = [] if after else _read_meta(path)["batch_ids"]
+    ids, last = set(int(b) for b in folded), after
+    for v, m in _manifests(path, after):
+        if m.get("batch_id") is not None:
+            ids.add(int(m["batch_id"]))
+        last = v
+    return ids, last
 
 
 def snapshot_stream_sink(
@@ -1241,28 +1191,20 @@ def _stream_committer(
     """The foreachBatch closure behind :func:`snapshot_stream_sink`,
     exposed separately so the ledger-refresh behavior is directly
     testable without driving a real stream."""
-    seen: set[int] | None = None
+    seen: set[int] = set()
     load_point = 0
 
     def commit(batch: DataFrame, batch_id: int) -> None:
-        nonlocal seen, load_point
+        nonlocal load_point
         # Re-verify against manifests published since our cached load
         # point (ADVICE r2: the once-per-stream cache silently missed a
         # concurrent writer's batch ids). Cheap: glob + only-new reads.
         # The first batch seeds from the vacuum-surviving _meta.json
         # ledger and then reads the listed manifests through the SAME
-        # loop — one read per manifest per sink lifetime, no double
+        # read — one read per manifest per sink lifetime, no double
         # startup scan, no race window between ledger and listing.
-        vs = _versions(path)
-        if seen is None:
-            seen = set(int(b) for b in _read_meta(path)["batch_ids"])
-        for v in vs:
-            if v > load_point:
-                b = _read_manifest(path, v).get("batch_id")
-                if b is not None:
-                    seen.add(int(b))
-        if vs:
-            load_point = vs[-1]
+        new, load_point = _ledger(path, load_point)
+        seen.update(new)
         if batch.isEmpty() or batch_id in seen:
             return
         snapshot_write(batch, path, mode=mode, meta={"batch_id": batch_id})
@@ -1292,7 +1234,9 @@ def snapshot_scan(
     the reader-side twin of :func:`snapshot_merge`'s pruning, and
     the manifest-level form of parquet footer skipping: with a clustered
     ``col`` a selective scan opens a handful of files out of thousands.
-    Files without stats are read conservatively. Same rows as
+    Files without stats are read conservatively; so is every file for a
+    collated string column, which records no stats (its order is not
+    Python's). Same rows as
     ``snapshot_read(...).where(lo <= col <= hi)``, by construction.
     """
     return snapshot_scan_multi(spark, path, {col: (lo, hi)}, version=version)
@@ -1313,48 +1257,29 @@ def snapshot_scan_multi(
     applied after pruning, so the result equals the unpruned filter."""
     from pyspark.sql import functions as F
 
-    vs = _versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no snapshots at {path}")
-    v = vs[-1] if version is None else version
-    m = _read_manifest(path, v)
+    _, m = _resolve(path, version)
     stats = m.get("stats", {})
 
     def may_match(f: str) -> bool:
-        for col, (lo, hi) in preds.items():
-            s = stats.get(f, {}).get(col)
-            if s is None or s[0] is None:
-                continue  # no stats for this column -> can't prune on it
-            flo, fhi = _stats_decode(s[0]), _stats_decode(s[1])
-            if fhi < lo or flo > hi:
-                return False
-        return True
+        return all(
+            _may_hold(stats.get(f, {}).get(col), [lo], [hi])
+            for col, (lo, hi) in preds.items()
+        )
 
     exact = None
     for col, (lo, hi) in preds.items():
         c = (F.col(col) >= lo) & (F.col(col) <= hi)
         exact = c if exact is None else (exact & c)
     picked = [f for f in m["files"] if may_match(f)]
-    if not picked:
-        return snapshot_read(spark, path, version=v).where(F.lit(False))
-    if m.get("dvs"):
-        df = _dv_apply_read(spark, path, m, picked)
-    else:
-        df = spark.read.parquet(
-            *[os.path.join(path, "data", f) for f in picked]
-        )
-    return df.where(exact)
+    pred = exact if picked else F.lit(False)
+    return _read_files(spark, path, m, picked or m["files"]).where(pred)
 
 
 def snapshot_count(path: str, version: int | None = None) -> int:
     """COUNT(*) of a snapshot from manifest row counts alone — no Spark
     job, no file opens (the footer counts are recorded at write time).
     Raises if the manifest predates row-count recording."""
-    vs = _versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no snapshots at {path}")
-    v = vs[-1] if version is None else version
-    m = _read_manifest(path, v)
+    v, m = _resolve(path, version)
     counts = m.get("row_counts", {})
     missing = [f for f in m["files"] if f not in counts]
     if missing:
@@ -1373,12 +1298,9 @@ def snapshot_minmax(path: str, col: str, version: int | None = None):
     EVERY live file recorded stats for the column AND the version has
     no deletion vectors (a DV-deleted row may have been the extremum,
     and per-file stats cannot see that) — both cases raise rather than
-    silently degrade, pushing the caller to the honest scan."""
-    vs = _versions(path)
-    if not vs:
-        raise FileNotFoundError(f"no snapshots at {path}")
-    v = vs[-1] if version is None else version
-    m = _read_manifest(path, v)
+    silently degrade, pushing the caller to the honest scan. A collated
+    string column records no stats, so it raises too."""
+    v, m = _resolve(path, version)
     if m.get("dvs"):
         raise ValueError(
             f"version {v} carries deletion vectors; metadata min/max "
@@ -1416,13 +1338,17 @@ def snapshot_optimize(
     ``stats_cols`` defaults to ``zorder_cols``, so the rewritten files'
     manifests carry the min/max ranges that make :func:`snapshot_scan`
     and :func:`snapshot_merge` effective — clustering is what
-    turns those stats from decoration into pruning.
+    turns those stats from decoration into pruning. The rewritten files
+    also record stats on every column the latest version records, so a
+    compaction never turns files that pruned into files every merge
+    rewrites. Blooms are rebuilt only for ``bloom_cols``.
     """
     from pyspark.sql import functions as F
 
     from .operators.partitioning import zorder_key
 
-    df = snapshot_read(spark, path)
+    _, m = _resolve(path)
+    df = _read_files(spark, path, m, m["files"])
     if zorder_cols:
         out = (
             zorder_key(df, zorder_cols, bits=bits)
@@ -1437,7 +1363,7 @@ def snapshot_optimize(
         path,
         mode="overwrite",
         meta={"optimized": True},
-        stats_cols=stats_cols or zorder_cols,
+        stats_cols=_stats_cols(m, stats_cols or zorder_cols or []),
         bloom_cols=bloom_cols,
         bloom_bits=bloom_bits,
     )
@@ -1451,29 +1377,9 @@ def snapshot_restore(path: str, version: int) -> int:
     and never renamed, so restoring is a metadata-only commit: the old
     manifest's files, stats, and row counts are republished verbatim.
     Raises if ``version`` was vacuumed (its files may be gone)."""
-    vs = _versions(path)
-    if version not in vs:
-        raise FileNotFoundError(
-            f"version {version} not retained at {path} (have {vs})"
-        )
-    old = _read_manifest(path, version)
-
-    def build(latest):
-        meta = {"restored_from": version}
-        if old.get("dvs"):  # restoring a DV version restores its DVs
-            meta["dvs"] = old["dvs"]
-            meta["dv_counts"] = old.get("dv_counts", {})
-        if old.get("blooms"):
-            meta["blooms"] = old["blooms"]
-        return (
-            old["files"],
-            "restore",
-            meta,
-            old.get("stats", {}),
-            old.get("row_counts", {}),
-        )
-
-    return _publish(path, build)
+    _, old = _resolve(path, version)
+    entries = {**_carry(old, old["files"]), "restored_from": version}
+    return _publish(path, "restore", lambda latest: entries)
 
 
 def snapshot_changes(
@@ -1510,10 +1416,8 @@ def snapshot_appended_rows(
     ``to_version`` (an overwrite/merge/optimize happened in between —
     row identity via file names no longer holds; use
     :func:`snapshot_changes` there)."""
-    vs = _versions(path)
-    v_to = (vs[-1] if to_version is None else to_version)
-    m_old = _read_manifest(path, from_version)
-    m_new = _read_manifest(path, v_to)
+    v_to, m_new = _resolve(path, to_version)
+    _, m_old = _resolve(path, from_version)
     old = set(m_old["files"])
     new = m_new["files"]
     removed = old - set(new)
@@ -1532,11 +1436,8 @@ def snapshot_appended_rows(
             "snapshot_changes"
         )
     added = [f for f in new if f not in old]
-    if not added:
-        return snapshot_read(spark, path, version=v_to).limit(0)
-    return spark.read.parquet(
-        *[os.path.join(path, "data", f) for f in added]
-    )
+    df = _read_files(spark, path, m_new, added or new)
+    return df if added else df.limit(0)
 
 
 def incremental_agg_update(
@@ -1612,14 +1513,10 @@ def snapshot_fsck(path: str) -> dict:
         if vs
         else True
     )
-    on_disk = {
-        os.path.basename(f)
-        for f in glob.glob(os.path.join(path, "data", "*.parquet"))
-    }
-    dv_on_disk = {
-        os.path.basename(f)
-        for f in glob.glob(os.path.join(path, "dv", "*.parquet"))
-    }
+    on_disk, dv_on_disk = (
+        {os.path.basename(f) for f in glob.glob(os.path.join(path, sub, "*.parquet"))}
+        for sub in ("data", "dv")
+    )
     missing: dict[int, list[str]] = {}
     stats_drift: dict[int, list[str]] = {}
     dv_drift: dict[int, list[str]] = {}
@@ -1635,13 +1532,11 @@ def snapshot_fsck(path: str) -> dict:
         ]
         if lost:
             missing[v] = lost
-        drift = [f for f in m.get("stats", {}) if f not in set(files)]
-        if drift:
-            stats_drift[v] = drift
-        # dv_counts must only name live files of the same version
-        dvd = [f for f in m.get("dv_counts", {}) if f not in set(files)]
-        if dvd:
-            dv_drift[v] = dvd
+        # stats and dv_counts must only name live files of the same version
+        for k, out in (("stats", stats_drift), ("dv_counts", dv_drift)):
+            drift = [f for f in m.get(k, {}) if f not in set(files)]
+            if drift:
+                out[v] = drift
     return {
         "versions_ok": versions_ok,
         "n_versions": len(vs),

@@ -1579,3 +1579,360 @@ def test_snapshot_merge_insert_only_matches_whole_table_merge(
           (-0.0, "d", 2, "U")], True, {}),
         ([(2.5, "e", 1, "U")], True, {}),
     ])
+
+
+_PER_FILE_MAPS = ("stats", "row_counts", "blooms", "dv_counts")
+
+
+def _latest_manifest(path):
+    """The latest version's manifest, read from disk."""
+    v = snapshot_history(path)[-1]["version"]
+    with open(os.path.join(path, "_manifests", f"v{v:010d}.json")) as f:
+        return json.load(f)
+
+
+def test_snapshot_protocol_lifecycle(spark, tmp_path):
+    """One table through every manifest operation: write, an append with
+    stats and Blooms, a merge, a DV delete, two restores, a purge, an
+    optimize and a vacuum. After each step the rows, the metadata count,
+    the history and fsck agree, and each per-file map names exactly the
+    files it should: stats every file (rewrites record the columns the
+    base records), row counts every file, Blooms only the appended file
+    while it lives, DV counts only the file with a deleted row."""
+    import pytest
+
+    from etl_weather_jabar_spark.snapshots import (
+        snapshot_appended_rows,
+        snapshot_count,
+        snapshot_delete_dv,
+        snapshot_fsck,
+        snapshot_merge,
+        snapshot_optimize,
+        snapshot_purge_dv,
+        snapshot_restore,
+    )
+
+    path = str(tmp_path / "t")
+    with pytest.raises(FileNotFoundError):
+        snapshot_appended_rows(spark, path, 1)
+    ops: list[str] = []
+
+    def step(op, want, blooms=(), dv=()):
+        if op is not None:
+            ops.append(op)
+        got = {r["k"]: r["v"] for r in snapshot_read(spark, path).collect()}
+        assert got == want, op
+        assert snapshot_count(path) == len(want), op
+        assert [h["op"] for h in snapshot_history(path)] == ops
+        assert snapshot_fsck(path)["ok"], op
+        m = _latest_manifest(path)
+        files = set(m["files"])
+        names = {k: set(m.get(k, {})) for k in _PER_FILE_MAPS}
+        assert names == {
+            "stats": files, "row_counts": files,
+            "blooms": set(blooms), "dv_counts": set(dv),
+        }, op
+        assert bool(m.get("dvs")) == bool(dv), op
+        assert all(set(s) == {"k"} for s in m["stats"].values()), op
+        return m
+
+    def holding(m, k):
+        return next(
+            f for f in m["files"]
+            if m["stats"][f]["k"][0] <= k <= m["stats"][f]["k"][1]
+        )
+
+    rows = {k: f"v{k}" for k in range(1, 9)}
+    base = spark.createDataFrame(sorted(rows.items()), ["k", "v"])
+    snapshot_write(
+        base.repartitionByRange(2, "k"), path, mode="overwrite", stats_cols=["k"]
+    )
+    m1 = step("overwrite", rows)
+    assert len(m1["files"]) == 2
+
+    extra = {101: "w101", 102: "w102"}
+    snapshot_write(
+        spark.createDataFrame(sorted(extra.items()), ["k", "v"]).coalesce(1),
+        path, stats_cols=["k"], bloom_cols=["v"],
+    )
+    rows = {**rows, **extra}
+    appended = [f for f in _latest_manifest(path)["files"] if f not in m1["files"]]
+    m2 = step("append", rows, blooms=appended)
+    assert len(appended) == 1
+    assert sorted(
+        r["k"] for r in snapshot_appended_rows(spark, path, 1).collect()
+    ) == [101, 102]
+
+    # 2 is in one base file's range; 103 in none (the appended file ends at 102)
+    hot = holding(m2, 2)
+    changes = spark.createDataFrame(
+        [(2, "V2", 1, "U"), (103, "new", 1, "U")], ["k", "v", "seq", "op"]
+    )
+    snapshot_merge(spark, path, changes, ["k"])
+    rows = {**rows, 2: "V2", 103: "new"}
+    m3 = step("merge", rows, blooms=appended)
+    assert hot not in m3["files"]
+    assert set(m2["files"]) - {hot} <= set(m3["files"])
+
+    dirty = holding(m3, 6)
+    v4 = snapshot_delete_dv(spark, path, "k = 6")
+    deleted = {k: v for k, v in rows.items() if k != 6}
+    m4 = step("delete_dv", deleted, blooms=appended, dv=[dirty])
+    assert m4["files"] == m3["files"]
+
+    snapshot_restore(path, v4 - 1)
+    step("restore", rows, blooms=appended)
+    snapshot_restore(path, v4)
+    step("restore", deleted, blooms=appended, dv=[dirty])
+
+    snapshot_purge_dv(spark, path)
+    m7 = step("purge_dv", deleted, blooms=appended)
+    assert dirty not in m7["files"]
+    assert set(m4["files"]) - {dirty} <= set(m7["files"])
+
+    snapshot_optimize(spark, path, n_files=1)
+    m8 = step("overwrite", deleted)
+    assert len(m8["files"]) == 1
+
+    # vacuum folds the old versions into the history and drops their files
+    vacuum(path, keep_versions=1, min_age_seconds=0)
+    step(None, deleted)
+    assert sorted(os.listdir(os.path.join(path, "data"))) == m8["files"]
+    assert os.listdir(os.path.join(path, "dv")) == []
+
+
+def test_snapshot_ops_on_missing_table_raise_file_not_found(spark, tmp_path):
+    """Every read and every operation on a path with no version, or on a
+    version that is not retained, raises FileNotFoundError (the append
+    reader used to raise IndexError)."""
+    import pytest
+
+    from etl_weather_jabar_spark.snapshots import (
+        snapshot_appended_rows,
+        snapshot_count,
+        snapshot_delete_dv,
+        snapshot_lookup,
+        snapshot_lookup_files,
+        snapshot_minmax,
+        snapshot_purge_dv,
+        snapshot_restore,
+        snapshot_scan,
+    )
+
+    path = str(tmp_path / "none")
+    calls = [
+        lambda v: snapshot_read(spark, path, version=v),
+        lambda v: snapshot_lookup_files(path, "k", [1], version=v),
+        lambda v: snapshot_lookup(spark, path, "k", [1], version=v),
+        lambda v: snapshot_scan(spark, path, "k", 1, 2, version=v),
+        lambda v: snapshot_count(path, version=v),
+        lambda v: snapshot_minmax(path, "k", version=v),
+        lambda v: snapshot_appended_rows(spark, path, 1, v),
+        lambda v: snapshot_restore(path, v or 1),
+    ]
+    for call in calls + [
+        lambda v: snapshot_delete_dv(spark, path, "k = 1"),
+        lambda v: snapshot_purge_dv(spark, path),
+    ]:
+        with pytest.raises(FileNotFoundError):
+            call(None)
+    snapshot_write(spark.createDataFrame([(1,)], ["k"]), path, stats_cols=["k"])
+    for call in calls:
+        with pytest.raises(FileNotFoundError):
+            call(9)
+
+
+def _racing_publish(monkeypatch, spark, path, times):
+    """Patch ``_publish`` so that an append of one row (k = 100 + n) lands
+    just before each of the first ``times`` publishes of the operation
+    under test; returns the list of keys the racers appended."""
+    import etl_weather_jabar_spark.snapshots as snap
+
+    real, racers, busy = snap._publish, [], [False]
+
+    def racing(*a, **kw):
+        if not busy[0] and len(racers) < times:
+            busy[0] = True
+            k = 100 + len(racers)
+            racers.append(k)
+            snap.snapshot_write(
+                spark.createDataFrame([(k, f"r{k}")], ["k", "v"]), path
+            )
+            busy[0] = False
+        return real(*a, **kw)
+
+    monkeypatch.setattr(snap, "_publish", racing)
+    return racers
+
+
+def _dv_table(spark, path):
+    """Nine rows in three files with k stats; k = 5 deleted by a DV."""
+    import etl_weather_jabar_spark.snapshots as snap
+
+    snap.snapshot_write(
+        spark.createDataFrame(
+            [(i, f"v{i}") for i in range(1, 10)], ["k", "v"]
+        ).repartitionByRange(3, "k"),
+        path,
+        stats_cols=["k"],
+    )
+    snap.snapshot_delete_dv(spark, path, "k = 5")
+
+
+def test_snapshot_delete_dv_restarts_on_concurrent_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A commit landing between the delete's scan and its publish restarts
+    the delete from the new latest version: the racer's rows survive,
+    and the predicate applies to them too."""
+    import etl_weather_jabar_spark.snapshots as snap
+
+    path = str(tmp_path / "t")
+    _dv_table(spark, path)
+    racers = _racing_publish(monkeypatch, spark, path, times=1)
+    v = snap.snapshot_delete_dv(spark, path, "k % 2 = 0")
+    assert racers == [100] and v == 4  # base 2, racer 3, delete 4
+    got = {r["k"] for r in snap.snapshot_read(spark, path).collect()}
+    assert got == {1, 3, 7, 9}  # 5 stays deleted, the racer's 100 too
+    assert snap.snapshot_count(path) == 4
+    assert [h["op"] for h in snap.snapshot_history(path)] == [
+        "append", "delete_dv", "append", "delete_dv"
+    ]
+
+
+def test_snapshot_purge_dv_restarts_on_concurrent_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A commit landing between the purge's rewrite and its publish
+    restarts the purge from the new latest version: the racer's rows
+    survive and no DV stays live."""
+    import etl_weather_jabar_spark.snapshots as snap
+
+    path = str(tmp_path / "t")
+    _dv_table(spark, path)
+    racers = _racing_publish(monkeypatch, spark, path, times=1)
+    v = snap.snapshot_purge_dv(spark, path)
+    assert racers == [100] and v == 4
+    got = {r["k"] for r in snap.snapshot_read(spark, path).collect()}
+    assert got == {1, 2, 3, 4, 6, 7, 8, 9, 100}
+    m = _latest_manifest(path)
+    assert "dvs" not in m and "dv_counts" not in m
+    assert snap.snapshot_count(path) == 9
+
+
+def test_snapshot_occ_gives_up_after_max_retries(spark, tmp_path, monkeypatch):
+    """The merge, the DV delete and the purge each restart on every lost
+    race and raise ConcurrentSnapshotError after ``max_retries`` of them,
+    with no version of their own published."""
+    import pytest
+
+    import etl_weather_jabar_spark.snapshots as snap
+
+    ops = {
+        "merge": lambda p: snap.snapshot_merge(
+            spark, p,
+            spark.createDataFrame([(2, "V2", 1, "U")], ["k", "v", "seq", "op"]),
+            ["k"], max_retries=2,
+        ),
+        "delete_dv": lambda p: snap.snapshot_delete_dv(
+            spark, p, "k = 1", max_retries=2
+        ),
+        "purge_dv": lambda p: snap.snapshot_purge_dv(spark, p, max_retries=2),
+    }
+    for name, op in ops.items():
+        path = str(tmp_path / name)
+        _dv_table(spark, path)
+        with monkeypatch.context() as mp:
+            racers = _racing_publish(mp, spark, path, times=10)
+            with pytest.raises(snap.ConcurrentSnapshotError):
+                op(path)
+        assert racers == [100, 101], name
+        assert [h["op"] for h in snap.snapshot_history(path)] == [
+            "append", "delete_dv", "append", "append"
+        ], name
+        got = {r["k"] for r in snap.snapshot_read(spark, path).collect()}
+        assert got == {1, 2, 3, 4, 6, 7, 8, 9, 100, 101}, name
+
+
+def test_snapshot_collated_column_is_not_pruned(spark, tmp_path):
+    """A collated string column records no stats and no Bloom: its order
+    and equality are neither Python's nor its CAST(… AS STRING) hash's.
+    The range scan, the point lookup and a merge keyed on it return the
+    rows the plain filter does ('B' matches 'b' under UTF8_LCASE)."""
+    from etl_weather_jabar_spark.snapshots import (
+        snapshot_lookup,
+        snapshot_lookup_files,
+        snapshot_merge,
+        snapshot_scan,
+    )
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [("a", 1), ("b", 2)], "s STRING COLLATE UTF8_LCASE, x INT"
+    ).repartitionByRange(2, "x")
+    snapshot_write(df, path, stats_cols=["s", "x"], bloom_cols=["s"])
+    m = _latest_manifest(path)
+    assert len(m["files"]) == 2
+
+    def rows(d):
+        return sorted(map(tuple, d.collect()))
+
+    want = rows(snapshot_read(spark, path).where("s >= 'B' AND s <= 'B'"))
+    assert want == [("b", 2)]
+    assert rows(snapshot_scan(spark, path, "s", "B", "B")) == want
+    assert rows(snapshot_lookup(spark, path, "s", ["B"])) == want
+    assert len(snapshot_lookup_files(path, "s", ["B"])) == 2
+    # the uncollated column still records its stats
+    assert all(set(s) == {"x"} for s in m["stats"].values())
+    changes = spark.createDataFrame(
+        [("B", 20, 1, "U")], "s STRING COLLATE UTF8_LCASE, x INT, seq INT, op STRING"
+    )
+    snapshot_merge(spark, path, changes, ["s"])
+    assert rows(snapshot_read(spark, path)) == [("B", 20), ("a", 1)]
+
+
+def test_snapshot_rewrites_keep_stats_for_the_next_merge(spark, tmp_path):
+    """OPTIMIZE and a DV purge record, on the files they write, the stats
+    the base version records, so the next merge of a new day carries
+    every old file forward by name (insert-only) instead of rewriting
+    files with no stats."""
+    import datetime
+
+    from etl_weather_jabar_spark.snapshots import (
+        snapshot_delete_dv,
+        snapshot_merge,
+        snapshot_optimize,
+        snapshot_purge_dv,
+    )
+
+    path = str(tmp_path / "t")
+    log = "date DATE, location_id INT, v STRING, seq INT, op STRING"
+
+    def day(d):
+        date = datetime.date(2024, 2, d)
+        return spark.createDataFrame(
+            [(date, loc, f"d{d}l{loc}", 1, "U") for loc in (1, 2, 3)], log
+        )
+
+    for d in (1, 2, 3):
+        snapshot_merge(spark, path, day(d), ["date", "location_id"])
+    assert all("date" in s for s in _latest_manifest(path)["stats"].values())
+
+    def next_day_carries_every_file(d):
+        before = _latest_manifest(path)
+        assert set(before["stats"]) == set(before["files"])
+        assert all(set(s) == {"date"} for s in before["stats"].values())
+        snapshot_merge(spark, path, day(d), ["date", "location_id"])
+        assert set(before["files"]) <= set(_latest_manifest(path)["files"])
+
+    snapshot_optimize(spark, path, n_files=1)
+    next_day_carries_every_file(4)
+    snapshot_delete_dv(spark, path, "location_id = 2 AND date < '2024-02-03'")
+    snapshot_purge_dv(spark, path)
+    next_day_carries_every_file(5)
+    got = snapshot_read(spark, path)
+    assert got.count() == 15 - 2
+    # optimize records the caller's columns next to the base's
+    snapshot_optimize(spark, path, n_files=1, stats_cols=["location_id"])
+    (s,) = _latest_manifest(path)["stats"].values()
+    assert set(s) == {"date", "location_id"}

@@ -560,3 +560,31 @@ def test_recap_to_snapshot_new_day_plans_no_shuffle(spark, tmp_path, monkeypatch
     for df in written[:2]:
         assert "Exchange" not in plan(df) and "Window" not in plan(df), plan(df)
     assert "Window" in plan(written[2])
+
+
+def test_commit_internals_are_module_globals(spark, tmp_path, monkeypatch):
+    """perfbench's trace wraps ``snapshots._write_data_files`` and
+    ``snapshots._publish``, and tests patch ``_file_stats``: each must be
+    looked up as a module global at call time. One recap day and one
+    ``snapshot_write`` each reach every patched function exactly once."""
+    import etl_weather_jabar_spark.snapshots as snap
+    from etl_weather_jabar_spark.plans.pipelines import recap_to_snapshot
+
+    calls: list[str] = []
+    for name in ("_write_data_files", "_file_stats", "_publish"):
+        def counted(*a, _name=name, _real=getattr(snap, name), **kw):
+            calls.append(_name)
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(snap, name, counted)
+
+    silver = silver_fixture(spark)
+    recap_to_snapshot(silver, silver, str(tmp_path / "gold"))
+    assert sorted(calls) == ["_file_stats", "_publish", "_write_data_files"]
+    calls.clear()
+    snap.snapshot_write(
+        spark.createDataFrame([(1, "a")], ["k", "v"]),
+        str(tmp_path / "t"),
+        stats_cols=["k"],
+    )
+    assert sorted(calls) == ["_file_stats", "_publish", "_write_data_files"]
