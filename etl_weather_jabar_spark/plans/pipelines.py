@@ -101,19 +101,23 @@ def recap_to_snapshot(
     distinct dates are collected, and a literal ``date IN (...)`` filter
     prunes the full Silver (statically on date-partitioned Silver, by
     parquet pushdown on flat Silver). One recap plan rebuilds only those
-    days, and the rows MERGE into the snapshot table keyed by (date,
-    location_id). The merge prunes on ``date``, so only Gold files
-    holding a recapped day are rewritten; every other day's files carry
-    forward by name, and a day new to Gold takes the merge's insert-only
-    path. One atomic version per run, replay-idempotent (same input →
-    same resulting table state), pre-merge versions time-travelable.
-    Returns the new version number.
+    days, one doc per (date, location_id), and the docs MERGE into the
+    snapshot table keyed by (date, location_id) as an upsert set
+    (``snapshot_merge(op_col=None)``): the recap is written once, as it
+    is, and its keys are read back from the written files. The merge
+    prunes on ``date``, so only Gold files holding a recapped day are
+    rewritten; every other day's files carry forward by name. A day new
+    to Gold runs 4 Spark jobs: two for the dates collect, the recap's
+    groupBy map stage, and the write, whose files become the new
+    version's. A replayed day also reads and rewrites its hot files
+    through the keep-last window. One atomic version per run,
+    replay-idempotent (same input → same resulting table state),
+    pre-merge versions time-travelable. Returns the new version number.
     """
     from ..snapshots import snapshot_merge
 
     dates = [r[0] for r in silver_new.select("date").distinct().collect()]
     recap = daily_recap(silver_all.where(F.col("date").isin(dates)))
-    changes = recap.withColumn("seq", F.lit(1)).withColumn("op", F.lit("U"))
     return snapshot_merge(
-        silver_all.sparkSession, gold_table, changes, list(keys)
+        silver_all.sparkSession, gold_table, recap, list(keys), op_col=None
     )

@@ -124,7 +124,7 @@ def append_dedup_keyed(
     from pyspark.sql.types import StructType
 
     from .operators.dedup import dedupe_keep_first
-    from .snapshots import _exact_keys
+    from .snapshots import _exact_keys, _file_keys
 
     spark = df.sparkSession
     # resolved up front (against the analyzed plan, no new analysis): the
@@ -147,7 +147,7 @@ def append_dedup_keyed(
         else:
             df.write.parquet(f"{staging}/in")
             staged = _data_files(f"{staging}/in")
-            batch_keys, counts = _staged_keys(staged, keys)
+            batch_keys, counts = _file_keys(staged, keys)
             # NULL components compare equal here, as in the window's partitions
             repeats = batch_keys is None or len(set(batch_keys)) < len(batch_keys)
             hot = _hot_files(files, batch_keys, df.schema, keys)
@@ -208,33 +208,6 @@ def _commit_staged(
         crc = os.path.join(d, f".{name}.crc")
         if os.path.exists(crc):
             os.rename(crc, os.path.join(path, f".{name}.crc"))
-
-
-def _staged_keys(
-    staged: list[str], keys: list[str]
-) -> tuple[list[tuple] | None, dict[str, int]]:
-    """The key of every row in the ``staged`` files, NULL components
-    included, or ``None`` when the driver cannot tell keys apart as Spark
-    does: more rows than the driver guard, or dates written with legacy
-    rebasing; and each file's row count, from its footer."""
-    import pyarrow.parquet as pq
-
-    from .snapshots import _MAX_DRIVER_KEYS
-
-    parts = [pq.ParquetFile(f) for f in staged]
-    counts = {f: p.metadata.num_rows for f, p in zip(staged, parts)}
-    if (
-        sum(counts.values()) > _MAX_DRIVER_KEYS
-        # rebased dates read back differently outside Spark
-        or any(b"org.apache.spark.legacyDateTime" in (p.metadata.metadata or {})
-               for p in parts)
-    ):
-        return None, counts
-    out = []
-    for p in parts:
-        t = p.read(columns=keys)
-        out += zip(*(t.column(k).to_pylist() for k in keys))
-    return out, counts
 
 
 def _hot_files(

@@ -4,7 +4,12 @@ MongoDB's per-document atomicity (upsert `update_one($set)` else insert,
 dags/daily_compile_weather.py:136-142) re-expressed for immutable files.
 The keyed upsert is :func:`snapshot_merge`: like the reference's
 find-then-``$set``, it touches only the files whose recorded key range
-can hold a changed key and carries every other file forward by name.
+can hold a changed key and carries every other file forward by name. It
+takes a CDC log (upserts and deletes, ordered per key) or an upsert set
+(one row per key, each replacing or inserting it); an upsert set is
+written once, as it is, and its keys are read back from the written
+files on the driver (:func:`_file_keys`, shared with the Silver keyed
+append), so a set with no hot file costs only its own write.
 
 Layout::
 
@@ -329,6 +334,34 @@ def _exact_keys(fields) -> bool:
 # The most keys a driver-side pruning pass collects (the driver-size guard
 # of :func:`snapshot_merge` and of ``sinks.append_dedup_keyed``).
 _MAX_DRIVER_KEYS = 100_000
+
+
+def _file_keys(
+    files: list[str], keys: list[str], limit: int | None = None
+) -> tuple[list[tuple] | None, dict[str, int]]:
+    """The key of every row in the parquet ``files`` (full paths), NULL
+    components included, or ``None`` when the driver cannot tell keys
+    apart as Spark does: more than ``limit`` rows (by default the driver
+    guard), or dates written with legacy rebasing; and each file's row
+    count, from its footer. The keys are top-level columns of a type
+    :func:`_exact_keys` accepts."""
+    import pyarrow.parquet as pq
+
+    parts = [pq.ParquetFile(f) for f in files]
+    counts = {f: p.metadata.num_rows for f, p in zip(files, parts)}
+    if (
+        # the guard is looked up at call time, so a patched guard holds
+        sum(counts.values()) > (_MAX_DRIVER_KEYS if limit is None else limit)
+        # rebased dates read back differently outside Spark
+        or any(b"org.apache.spark.legacyDateTime" in (p.metadata.metadata or {})
+               for p in parts)
+    ):
+        return None, counts
+    out = []
+    for p in parts:
+        t = p.read(columns=keys)
+        out += zip(*(t.column(k).to_pylist() for k in keys))
+    return out, counts
 
 
 def _footer_fields(md) -> dict:
@@ -699,6 +732,23 @@ def _enforce_constraints(df: DataFrame, checks: dict) -> None:
         raise ValueError(f"CHECK constraint violated — {detail}")
 
 
+def _write_indexed(
+    df: DataFrame, path: str, keep_empty: bool, stats_cols, bloom_cols, bloom_bits
+) -> tuple[list[str], dict]:
+    """Write ``df`` into data files and index them: their names, and
+    their per-file manifest entries (stats on ``stats_cols``, row counts,
+    Blooms on ``bloom_cols``)."""
+    new_files, counts = _write_data_files(df, path, keep_empty=keep_empty)
+    spark = df.sparkSession
+    return new_files, {
+        "stats": _file_stats(spark, path, new_files, stats_cols or []),
+        "row_counts": counts,
+        "blooms": _file_blooms(
+            spark, path, new_files, bloom_cols or [], m_bits=bloom_bits
+        ),
+    }
+
+
 def snapshot_write(
     df: DataFrame,
     path: str,
@@ -733,15 +783,9 @@ def snapshot_write(
     _, cur = _resolve(path, missing_ok=True)
     # an empty batch appended to a listed file adds no file
     alone = mode == "overwrite" or not (cur and cur["files"])
-    new_files, counts = _write_data_files(df, path, keep_empty=alone)
-    spark = df.sparkSession
-    new = {
-        "stats": _file_stats(spark, path, new_files, stats_cols or []),
-        "row_counts": counts,
-        "blooms": _file_blooms(
-            spark, path, new_files, bloom_cols or [], m_bits=bloom_bits
-        ),
-    }
+    new_files, new = _write_indexed(
+        df, path, alone, stats_cols, bloom_cols, bloom_bits
+    )
 
     def build(latest):
         # an append carries the base's entries, deletion vectors included
@@ -875,16 +919,76 @@ def _may_hold(s, los, his) -> bool:
     return i < len(his) and los[i] <= hi
 
 
-def _empty_read(spark, path: str, name: str) -> DataFrame:
-    """A zero-row read of data file ``name``, with the Spark schema its
-    footer records: no schema-inference job, and no scan once optimized."""
+def _footer_read(spark, path: str, names: list[str]) -> DataFrame:
+    """A read of the data files ``names``, one commit's, with the Spark
+    schema the first one's footer records: no schema-inference job."""
     import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
-    f = os.path.join(path, "data", name)
-    kv = pq.ParquetFile(f).metadata.metadata
+    files = _paths(path, "data", names)
+    kv = pq.ParquetFile(files[0]).metadata.metadata
     schema = StructType.fromJson(json.loads(kv[_SPARK_SCHEMA_KEY]))
-    return spark.read.schema(schema).parquet(f).limit(0)
+    return spark.read.schema(schema).parquet(*files)
+
+
+def _empty_read(spark, path: str, name: str) -> DataFrame:
+    """A zero-row read of data file ``name``, with the Spark schema its
+    footer records: no schema-inference job, and no scan once optimized."""
+    return _footer_read(spark, path, [name]).limit(0)
+
+
+def _loose(field):
+    """A field's schema JSON without its nullability, at every level:
+    a file source reads every column as nullable."""
+    if isinstance(field, dict):
+        return {
+            k: _loose(v) for k, v in field.items()
+            if k not in ("nullable", "containsNull", "valueContainsNull")
+        }
+    if isinstance(field, list):
+        return [_loose(v) for v in field]
+    return field
+
+
+def _conform(spark, path: str, m: dict | None, rows: DataFrame) -> DataFrame:
+    """The upsert set ``rows`` in the schema of manifest ``m``'s table.
+    Rows whose column names, order, types and metadata equal those the
+    first listed file's footer records, nullability aside, are returned
+    as they are — as is every set onto a table with no file. Any other
+    set is unioned onto :func:`_empty_read`, which takes the table's
+    column order and widens types as a union does."""
+    import pyarrow.parquet as pq
+
+    if not (m and m["files"]):
+        return rows
+    md = pq.ParquetFile(os.path.join(path, "data", m["files"][0])).metadata
+    table = [_loose(f) for f in _footer_fields(md).values()]
+    if table == [_loose(f.jsonValue()) for f in rows.schema.fields]:
+        return rows
+    base = _empty_read(spark, path, m["files"][0])
+    return base.unionByName(rows.select(*base.columns))
+
+
+def _lead_keys(found: set, n: int) -> list | None:
+    """The sorted distinct leading keys ``found`` of a change set, or
+    ``None`` (every file is hot) when there are ``n`` of them — the
+    driver-size guard — or one is NULL or NaN."""
+    if len(found) < n and all(map(_orderable, found)):
+        return sorted(found)
+    return None
+
+
+def _hot_cold(m: dict | None, lead: str, ckeys) -> tuple[list[str], list[str]]:
+    """The files of manifest ``m`` split into those whose recorded
+    ``[lo, hi]`` for ``lead`` may hold one of the sorted leading keys
+    ``ckeys`` (``None``: every file) and the others."""
+    files, stats = (m["files"], m.get("stats", {})) if m else ([], {})
+    hot, cold = [], []
+    for f in files:
+        s = stats.get(f, {}).get(lead)
+        may = ckeys is None or _may_hold(s, ckeys, ckeys)
+        (hot if may else cold).append(f)
+    return hot, cold
 
 
 def snapshot_merge(
@@ -894,21 +998,28 @@ def snapshot_merge(
     keys: list[str],
     *,
     seq_col: str = "seq",
-    op_col: str = "op",
+    op_col: str | None = "op",
     max_change_keys: int = _MAX_DRIVER_KEYS,
     max_retries: int = 10,
 ) -> int:
-    """MERGE INTO for the versioned table: apply a keyed upsert/delete log
-    (:func:`operators.diff.apply_cdc` over ``keys`` — highest ``seq`` per
-    key wins, 'D' deletes, later 'U' resurrects) onto the latest snapshot
-    and commit the result as one atomic ``"merge"`` version. Readers see
-    the pre-merge or the post-merge table, never a mix; the pre-merge
-    version stays time-travelable. Merging into a path with no version
-    creates the table (Delta's create-on-first-merge).
+    """MERGE INTO for the versioned table: apply ``changes`` keyed on
+    ``keys`` onto the latest snapshot and commit the result as one atomic
+    ``"merge"`` version. Readers see the pre-merge or the post-merge
+    table, never a mix; the pre-merge version stays time-travelable.
+    Merging into a path with no version creates the table (Delta's
+    create-on-first-merge). ``changes`` takes one of two forms:
+
+    * a CDC log (``op_col`` names its op column): keyed upserts and
+      deletes, applied by :func:`operators.diff.apply_cdc` — highest
+      ``seq_col`` per key wins, 'D' deletes, later 'U' resurrects;
+    * an upsert set (``op_col=None``): every row replaces its key's row
+      or inserts it, the reference's ``update_one($set)`` else
+      ``insert_one``. The set has no seq or op column, and a key may
+      appear once: a repeated key (NULL components equal) raises
+      ValueError before anything is published, and no file is left.
 
     Copy-on-write per FILE, pruned on ``keys[0]`` (Delta's min/max data
-    skipping): ``changes`` is materialized once, and its keys are
-    collected once. A file is hot when its recorded ``[lo, hi]`` for
+    skipping): a file is hot when its recorded ``[lo, hi]`` for
     ``keys[0]`` contains one of the leading keys; only hot files are read
     (with their deletion vectors applied) and rewritten, and every cold
     file is carried forward BY NAME with its stats, row count, deletion
@@ -921,6 +1032,7 @@ def snapshot_merge(
     ``keys[0]`` and on the columns the base version records for the files
     it writes, so a table built by merges prunes from its second merge on.
 
+    The CDC log is materialized once, and its keys are collected once.
     Insert-only path (Delta's insert-only MERGE): when no file is hot and
     the driver sees no key twice in the log, the new files are the log's
     'U' rows alone — no keep-last window, so no shuffle. The driver
@@ -929,10 +1041,33 @@ def snapshot_merge(
     type, or a log over the guard, takes ``apply_cdc``. The path writes
     one file per non-empty partition of the materialized log.
 
+    The upsert set is written once, as it is, before the split: its own
+    plan and the write are its only jobs, and the driver reads the
+    written files' keys with pyarrow (:func:`_file_keys`). With no hot
+    file the written files are the new ones; otherwise ``apply_cdc``
+    rewrites the hot files with the written rows (read back with their
+    own schema, at seq 1 and op 'U'), and the written files are deleted
+    once the version that replaces them is published. Where the driver
+    cannot judge keys as Spark does — a key that is not a top-level
+    column of a type :func:`_exact_keys` accepts, more than
+    ``max_change_keys`` rows, or legacy-rebased dates — one aggregate
+    over the written files finds a repeated key and a second collects
+    the distinct leading keys; both sides give the same table and the
+    same error. Conformance: a set whose column names, order and types
+    equal the table's, nullability aside (Spark reads every file column
+    as nullable), is written as it is; any other is unioned onto a
+    zero-row read of the table first, which orders and widens its
+    columns as the table's (:func:`_conform`).
+
     Concurrency: the hot/cold split is only valid against the exact
     version it was computed from, so a commit landing in between
-    RESTARTS the merge from the new latest version (:func:`_occ`).
+    RESTARTS the merge from the new latest version (:func:`_occ`); an
+    upsert set's written files are reused, not written again.
     ``max_retries`` conflicts → :class:`ConcurrentSnapshotError`."""
+    if op_col is None:
+        return _merge_upsert(
+            spark, path, changes, keys, max_change_keys, max_retries
+        )
     from pyspark.sql import functions as F
 
     from .operators.diff import apply_cdc
@@ -952,22 +1087,14 @@ def snapshot_merge(
     )
     if len(rows) == n:
         rows = changes.select(lead).distinct().limit(n).collect()
-    found = {r[0] for r in rows}
-    ckeys = None  # every file is hot
-    if len(found) < n and all(map(_orderable, found)):
-        ckeys = sorted(found)
+    ckeys = _lead_keys({r[0] for r in rows}, n)
 
     def attempt(m):
-        files, stats = (m["files"], m.get("stats", {})) if m else ([], {})
-        hot, cold = [], []
-        for f in files:
-            s = stats.get(f, {}).get(lead)
-            may = ckeys is None or _may_hold(s, ckeys, ckeys)
-            (hot if may else cold).append(f)
+        hot, cold = _hot_cold(m, lead, ckeys)
         if hot:
             base = _read_files(spark, path, m, hot)
-        elif files:  # nothing to rewrite: no rows, the table's schema
-            base = _empty_read(spark, path, files[0])
+        elif cold:  # nothing to rewrite: no rows, the table's schema
+            base = _empty_read(spark, path, cold[0])
         else:  # create-on-first-merge: the change log's row shape
             base = changes.drop(seq_col, op_col).limit(0)
         if hot or not unique:
@@ -987,6 +1114,92 @@ def snapshot_merge(
         return "merge", _carry(m, cold + new_files, new)
 
     return _occ(path, "merge", max_retries, attempt, missing_ok=True)
+
+
+# The seq and op columns the upsert form adds for apply_cdc: private
+# names, since an upsert set may hold columns named ``seq`` or ``op``.
+_UPSERT_SEQ, _UPSERT_OP = "__upsert_seq", "__upsert_op"
+
+
+def _merge_upsert(
+    spark, path: str, rows: DataFrame, keys: list[str], limit: int, max_retries: int
+) -> int:
+    """The upsert-set form of :func:`snapshot_merge`."""
+    from pyspark.sql import functions as F
+
+    from .operators.diff import apply_cdc
+
+    lead = keys[0]
+    _, m = _resolve(path, missing_ok=True)
+    rows = _conform(spark, path, m, rows)
+    fields = rows.select(*keys).schema.fields  # analysis only, no job
+    written, counts = _write_data_files(rows, path)
+    listed: list[str] = []
+
+    def attempt(m):
+        nonlocal listed
+        hot, cold = _hot_cold(m, lead, ckeys)
+        if hot:
+            ups = _footer_read(spark, path, written).select(
+                "*", F.lit(1).alias(_UPSERT_SEQ), F.lit("U").alias(_UPSERT_OP)
+            )
+            merged = apply_cdc(
+                _read_files(spark, path, m, hot), ups, keys,
+                seq_col=_UPSERT_SEQ, op_col=_UPSERT_OP,
+            ).drop(_UPSERT_SEQ)
+            listed, new_counts = _write_data_files(
+                merged, path, keep_empty=not cold
+            )
+        else:  # an empty set's one 0-row file is listed only alone
+            listed = [f for f in written if counts[f]] or (
+                [] if cold else written
+            )
+            new_counts = {f: counts[f] for f in listed}
+        new_stats = _file_stats(spark, path, listed, _stats_cols(m, [lead]))
+        new = {"stats": new_stats, "row_counts": new_counts}
+        return "merge", _carry(m, cold + listed, new)
+
+    try:
+        ckeys = _upsert_leads(spark, path, written, keys, fields, limit)
+        version = _occ(path, "merge", max_retries, attempt, missing_ok=True)
+    except BaseException:
+        listed = []  # nothing is published: no written file is kept
+        raise
+    finally:
+        for f in _paths(path, "data", [f for f in written if f not in listed]):
+            os.remove(f)
+    return version
+
+
+def _upsert_leads(
+    spark, path: str, files: list[str], keys: list[str], fields, limit: int
+) -> list | None:
+    """The sorted distinct leading keys of the upsert set written to data
+    files ``files``, or ``None`` when every file is hot
+    (:func:`_lead_keys`); a repeated key raises ValueError. ``fields``
+    are the keys' StructFields. The driver reads the keys from the files
+    when its equality is Spark's; otherwise one aggregate over the files
+    finds a repeated key and a second collects the leading keys."""
+    top = [f.name for f in fields] == list(keys)  # a nested key is not
+    got = None
+    if top and _exact_keys(fields):
+        got, _ = _file_keys(_paths(path, "data", files), keys, limit)
+    n = limit + 1
+    if got is not None:
+        # NULL components compare equal here, as in a Spark GROUP BY
+        repeated = len(set(got)) < len(got)
+        found = {k[0] for k in got}
+    else:
+        df = _footer_read(spark, path, files)
+        repeated = bool(
+            df.groupBy(*keys).count().where("count > 1").limit(1).collect()
+        )
+        found = set() if repeated else {
+            r[0] for r in df.select(keys[0]).distinct().limit(n).collect()
+        }
+    if repeated:
+        raise ValueError(f"the upsert set repeats a key on {list(keys)}")
+    return _lead_keys(found, n)
 
 
 def snapshot_delete_dv(
@@ -1341,32 +1554,38 @@ def snapshot_optimize(
     turns those stats from decoration into pruning. The rewritten files
     also record stats on every column the latest version records, so a
     compaction never turns files that pruned into files every merge
-    rewrites. Blooms are rebuilt only for ``bloom_cols``.
+    rewrites. Blooms are rebuilt only for ``bloom_cols``. Table-level
+    CHECK constraints are enforced as by :func:`snapshot_write`.
+
+    Concurrency: the rewrite holds the rows of the version it read, so a
+    commit landing before its publish RESTARTS the compaction from the
+    new latest version (:func:`_occ`) — publishing it would drop the
+    racer's rows from this and every later version. Ten lost races
+    raise :class:`ConcurrentSnapshotError`.
     """
     from pyspark.sql import functions as F
 
     from .operators.partitioning import zorder_key
 
-    _, m = _resolve(path)
-    df = _read_files(spark, path, m, m["files"])
-    if zorder_cols:
-        out = (
-            zorder_key(df, zorder_cols, bits=bits)
-            .repartitionByRange(n_files, F.col("zkey"))
-            .sortWithinPartitions("zkey")
-            .drop("zkey")
+    def attempt(m):
+        df = _read_files(spark, path, m, m["files"])
+        if zorder_cols:
+            out = (
+                zorder_key(df, zorder_cols, bits=bits)
+                .repartitionByRange(n_files, F.col("zkey"))
+                .sortWithinPartitions("zkey")
+                .drop("zkey")
+            )
+        else:
+            out = df.coalesce(n_files)
+        _enforce_constraints(out, _read_meta(path).get("constraints", {}))
+        new_files, new = _write_indexed(
+            out, path, True, _stats_cols(m, stats_cols or zorder_cols or []),
+            bloom_cols, bloom_bits,
         )
-    else:
-        out = df.coalesce(n_files)
-    return snapshot_write(
-        out,
-        path,
-        mode="overwrite",
-        meta={"optimized": True},
-        stats_cols=_stats_cols(m, stats_cols or zorder_cols or []),
-        bloom_cols=bloom_cols,
-        bloom_bits=bloom_bits,
-    )
+        return "overwrite", {**_carry(None, new_files, new), "optimized": True}
+
+    return _occ(path, "optimize", 10, attempt)
 
 
 def snapshot_restore(path: str, version: int) -> int:

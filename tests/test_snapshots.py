@@ -1936,3 +1936,215 @@ def test_snapshot_rewrites_keep_stats_for_the_next_merge(spark, tmp_path):
     snapshot_optimize(spark, path, n_files=1, stats_cols=["location_id"])
     (s,) = _latest_manifest(path)["stats"].values()
     assert set(s) == {"date", "location_id"}
+
+
+def test_snapshot_optimize_restarts_on_concurrent_commit(
+    spark, tmp_path, monkeypatch
+):
+    """An append landing between the optimize's read and its publish
+    restarts the compaction from the new latest version: the racer's
+    row is in the optimized version, not dropped by it."""
+    import etl_weather_jabar_spark.snapshots as snap
+
+    path = str(tmp_path / "t")
+    snap.snapshot_write(
+        spark.createDataFrame([(i, f"v{i}") for i in range(4)], ["k", "v"])
+        .repartition(2),
+        path,
+        stats_cols=["k"],
+    )
+    racers = _racing_publish(monkeypatch, spark, path, times=1)
+    v = snap.snapshot_optimize(spark, path, n_files=1)
+    assert racers == [100] and v == 3  # base 1, racer 2, optimize 3
+    got = {r["k"] for r in snap.snapshot_read(spark, path).collect()}
+    assert got == {0, 1, 2, 3, 100}
+    assert [h["op"] for h in snap.snapshot_history(path)] == [
+        "append", "append", "overwrite"
+    ]
+    assert snap.snapshot_count(path) == 5
+
+
+def _upsert_base(spark, path, schema, rows, lead):
+    """A table of ``rows`` in one file per leading key, with stats on it."""
+    snapshot_write(
+        spark.createDataFrame(rows, schema).repartitionByRange(len(rows), lead),
+        path,
+        stats_cols=[lead],
+    )
+
+
+def test_snapshot_merge_upsert_matches_cdc_form(spark, tmp_path, monkeypatch):
+    """The upsert-set form (``op_col=None``) lands the same table as the
+    CDC form given the same rows at seq 1 and op 'U', and carries the
+    same base files forward by name: onto a new table, new leading keys,
+    a replay where every key is hot, hot and new keys mixed, an empty
+    set, a NULL leading key, rows that differ from the table only in
+    nullability (written as they are) or in column order (conformed
+    through a zero-row read of the table), more rows than
+    ``max_change_keys``, and a timestamp key, which the driver does not
+    judge. The upsert form leaves no file that no version lists."""
+    import datetime
+    import shutil
+
+    import etl_weather_jabar_spark.snapshots as snap
+    from pyspark.sql.types import (
+        IntegerType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    conformed, real_empty = [], snap._empty_read
+
+    def counting_empty(*a, **kw):
+        conformed.append(1)
+        return real_empty(*a, **kw)
+
+    monkeypatch.setattr(snap, "_empty_read", counting_empty)
+
+    schema = "date STRING, location_id INT, v STRING"
+    base_rows = [(f"2024-02-0{d}", loc, f"d{d}l{loc}") for d in (1, 2, 3)
+                 for loc in (1, 2)]
+    base = str(tmp_path / "base")
+    _upsert_base(spark, base, schema, base_rows, "date")
+    ts = datetime.datetime
+    ts_schema = "t TIMESTAMP, v STRING"
+    ts_base = str(tmp_path / "ts_base")
+    _upsert_base(spark, ts_base, ts_schema,
+                 [(ts(2024, 2, d, 10), f"t{d}") for d in (1, 2, 3)], "t")
+    not_null = StructType([
+        StructField("date", StringType()),
+        StructField("location_id", IntegerType(), nullable=False),
+        StructField("v", StringType(), nullable=False),
+    ])
+
+    def run(name, src, rows, row_schema, keys, n_cold, conform=False, **kw):
+        ref, got = str(tmp_path / f"{name}_ref"), str(tmp_path / f"{name}_got")
+        if src is not None:
+            shutil.copytree(src, ref)
+            shutil.copytree(src, got)
+        before = _latest_manifest(src)["files"] if src else []
+        df = spark.createDataFrame(rows, row_schema)
+        changes = df.withColumn("seq", F.lit(1)).withColumn("op", F.lit("U"))
+        snap.snapshot_merge(spark, ref, changes, keys, **kw)
+        conformed.clear()
+        snap.snapshot_merge(spark, got, df, keys, op_col=None, **kw)
+        assert bool(conformed) == conform, name
+        assert sorted(map(repr, snapshot_read(spark, got).collect())) == sorted(
+            map(repr, snapshot_read(spark, ref).collect())
+        ), name
+        kept = [
+            [f for f in before if f in _latest_manifest(p)["files"]]
+            for p in (ref, got)
+        ]
+        assert kept[0] == kept[1] and len(kept[1]) == n_cold, (name, kept)
+        assert snap.snapshot_fsck(got)["n_orphans"] == 0, name
+        assert all(_row_counts(got).values()), name
+
+    run("new_table", None, [("2024-02-01", 1, "a"), ("2024-02-01", 2, "b")],
+        schema, ["date", "location_id"], 0)
+    run("new_leads", base, [("2024-02-09", 1, "a"), ("2024-02-09", 2, "b")],
+        schema, ["date", "location_id"], 3)
+    run("replay", base, [(d, loc, v.upper()) for d, loc, v in base_rows],
+        schema, ["date", "location_id"], 0)
+    run("mixed", base, [("2024-02-01", 1, "X"), ("2024-02-10", 1, "y")],
+        schema, ["date", "location_id"], 2)
+    run("empty", base, [], schema, ["date", "location_id"], 3)
+    run("null_lead", base, [(None, 1, "n")], schema, ["date", "location_id"], 0)
+    run("nullability", base, [("2024-02-02", 1, "X"), ("2024-02-11", 1, "y")],
+        not_null, ["date", "location_id"], 2)
+    run("order", base, [("X", 1, "2024-02-02"), ("y", 1, "2024-02-11")],
+        "v STRING, location_id INT, date STRING", ["date", "location_id"], 2,
+        conform=True)
+    run("over_guard", base, [("2024-02-01", 1, "X"), ("2024-02-12", 1, "z")],
+        schema, ["date", "location_id"], 0, max_change_keys=1)
+    run("timestamp", ts_base, [(ts(2024, 2, 1, 10), "T"), (ts(2024, 2, 9, 10), "n")],
+        ts_schema, ["t"], 2)
+
+
+def test_snapshot_merge_upsert_repeated_key_raises(spark, tmp_path):
+    """A key twice in an upsert set raises ValueError, whether the driver
+    judges keys (NULL components equal, as in Spark) or one aggregate
+    does (over ``max_change_keys``, or a timestamp key); nothing is
+    published and no file is left under ``data/``."""
+    import datetime
+
+    import pytest
+
+    import etl_weather_jabar_spark.snapshots as snap
+
+    schema = "date STRING, location_id INT, v STRING"
+    path = str(tmp_path / "t")
+    _upsert_base(spark, path, schema, [("2024-02-01", 1, "a")], "date")
+    ts = datetime.datetime(2024, 2, 1, 10)
+    ts_path = str(tmp_path / "ts")
+    _upsert_base(spark, ts_path, "t TIMESTAMP, v STRING", [(ts, "a")], "t")
+    cases = [
+        (path, schema, [("2024-02-02", 1, "a"), ("2024-02-02", 1, "b")], {}),
+        (path, schema, [("2024-02-02", None, "a"), ("2024-02-02", None, "b")], {}),
+        (path, schema, [("2024-02-02", 1, "a"), ("2024-02-02", 1, "b")],
+         {"max_change_keys": 1}),
+        (str(tmp_path / "new"), schema,
+         [("2024-02-02", 1, "a"), ("2024-02-02", 1, "b")], {}),
+        (ts_path, "t TIMESTAMP, v STRING", [(ts, "b"), (ts, "c")], {}),
+    ]
+    for p, s, rows, kw in cases:
+        keys = ["t"] if s.startswith("t ") else ["date", "location_id"]
+        data = os.path.join(p, "data")
+        files = sorted(os.listdir(data)) if os.path.isdir(data) else []
+        history = snapshot_history(p)
+        with pytest.raises(ValueError, match="repeats a key"):
+            snap.snapshot_merge(
+                spark, p, spark.createDataFrame(rows, s), keys, op_col=None, **kw
+            )
+        assert snapshot_history(p) == history, (p, rows)
+        now = sorted(os.listdir(data)) if os.path.isdir(data) else []
+        assert now == files, (p, rows)
+
+
+def test_snapshot_merge_upsert_restarts_on_concurrent_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A commit landing between the upsert's write and its publish
+    restarts the merge onto the new version without writing the rows
+    again: the racer's rows survive, and every written file the
+    published version does not list is deleted. A racer whose file has
+    stats leaves the written files cold (they are the new version's); a
+    racer without stats makes its file hot, so it is rewritten with the
+    rows and the written files go."""
+    import etl_weather_jabar_spark.snapshots as snap
+
+    real_stats, real_write = snap._file_stats, snap._write_data_files
+    for racer_stats in (["k"], []):
+        path = str(tmp_path / f"t{len(racer_stats)}")
+        _upsert_base(spark, path, "k BIGINT, v STRING",
+                     [(i, f"v{i}") for i in (1, 2, 3)], "k")
+        writes, fired = [], []
+
+        def racing_stats(*a, _path=path, _cols=racer_stats, **kw):
+            # after the upsert wrote its rows, before it publishes
+            if not fired:
+                fired.append(1)
+                snap.snapshot_write(
+                    spark.createDataFrame([(100, "racer")], ["k", "v"]),
+                    _path,
+                    stats_cols=_cols,
+                )
+            return real_stats(*a, **kw)
+
+        def counting_write(*a, **kw):
+            writes.append(1)
+            return real_write(*a, **kw)
+
+        monkeypatch.setattr(snap, "_file_stats", racing_stats)
+        monkeypatch.setattr(snap, "_write_data_files", counting_write)
+        rows = spark.createDataFrame([(50, "a"), (60, "b")], ["k", "v"])
+        v = snap.snapshot_merge(spark, path, rows, ["k"], op_col=None)
+        monkeypatch.undo()
+        assert fired and v == 3  # base 1, racer 2, merge 3
+        # the rows' write, the racer's, and (racer without stats) the rewrite
+        assert len(writes) == (3 if not racer_stats else 2), racer_stats
+        got = {(r["k"], r["v"]) for r in snapshot_read(spark, path).collect()}
+        assert got == {(1, "v1"), (2, "v2"), (3, "v3"), (50, "a"), (60, "b"),
+                       (100, "racer")}
+        assert snap.snapshot_fsck(path)["n_orphans"] == 0

@@ -528,12 +528,14 @@ def test_recap_one_doc_per_station_day_across_a_rename(spark, tmp_path):
     assert table() == first
 
 
-def test_recap_to_snapshot_new_day_plans_no_shuffle(spark, tmp_path, monkeypatch):
+def test_recap_to_snapshot_job_shape(spark, tmp_path, monkeypatch):
     """A recap day new to Gold, onto a new table and onto a table holding
-    another day, is written without an Exchange or a Window: the recap's
-    groupBy runs when the merge materializes its log, and the merge's
-    insert-only path needs no keep-last window. A replayed day rewrites
-    its file through the window. Checked on the write's executed plan."""
+    another day, runs 4 Spark jobs — two for the dates collect, the
+    recap's groupBy map stage and the write — and its write holds no
+    Window: the merge writes the recap as an upsert set, once. A replayed
+    day runs at most 7 jobs, and its rewrite of the hot file keeps the
+    keep-last Window. Jobs are counted through a job group and the
+    status tracker; the Windows on the written plans."""
     import etl_weather_jabar_spark.snapshots as snap
     from etl_weather_jabar_spark.plans.pipelines import recap_to_snapshot
 
@@ -548,18 +550,30 @@ def test_recap_to_snapshot_new_day_plans_no_shuffle(spark, tmp_path, monkeypatch
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
+    sc = spark.sparkContext
+
+    def jobs(new, tag):
+        sc.setJobGroup(tag, tag)
+        try:
+            recap_to_snapshot(silver, new, gold)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
     day1 = silver_fixture(spark)
     day2 = (day1.withColumn("date", F.lit("2024-02-02"))
             .withColumn("timestamp", F.regexp_replace("timestamp", "2024-02-01", "2024-02-02")))
     silver = day1.unionByName(day2)
     gold = str(tmp_path / "gold")
-    recap_to_snapshot(silver, day1, gold)
-    recap_to_snapshot(silver, day2, gold)
-    recap_to_snapshot(silver, day2, gold)
-    assert len(written) == 3
-    for df in written[:2]:
-        assert "Exchange" not in plan(df) and "Window" not in plan(df), plan(df)
-    assert "Window" in plan(written[2])
+    tag = f"recap-{tmp_path.name}"
+    assert jobs(day1, f"{tag}-1") == 4
+    assert jobs(day2, f"{tag}-2") == 4
+    assert jobs(day2, f"{tag}-3") <= 7
+    # each new day writes once; the replay writes its rows, then the rewrite
+    assert len(written) == 4
+    for df in written[:3]:
+        assert "Window" not in plan(df), plan(df)
+    assert "Window" in plan(written[3])
 
 
 def test_commit_internals_are_module_globals(spark, tmp_path, monkeypatch):

@@ -2,8 +2,8 @@
 # The full gate chain in one command — what every round-end certification
 # ran by hand. ~25 min on local[32]:
 #   oracle at sf0.001/0.01/0.1, adversarial-conf oracle at sf0.01,
-#   full pytest, perfbench output checks, entry smoke. Exits nonzero
-#   on the first failure.
+#   full pytest, perfbench output checks, a traced recap_backfill run,
+#   entry smoke. Exits nonzero on the first failure.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -39,6 +39,18 @@ assert r["correct"] is True and r["failed"] == 0, r
 print(sys.argv[1], "correct, 0 failed")
 PY
 done
+
+echo "=== PERFBENCH TRACED RUN (recap_backfill, 5 s) ==="
+# --trace 1 reads the per-layer spans (one snapshot_merge span per day);
+# a recap path that stopped producing them fails here, not only in a report
+line=$(python perfbench/run.py --workload recap_backfill --seconds 5 --trace 1 | tail -1) \
+  || { echo "PERFBENCH TRACED recap_backfill FAILED"; exit 1; }
+python - "$line" <<'PY' || { echo "PERFBENCH TRACED recap_backfill FAILED"; exit 1; }
+import json, sys
+r = json.loads(sys.argv[1])
+assert r["correct"] is True and r["failed"] == 0, r
+print("recap_backfill traced: correct, 0 failed")
+PY
 
 echo "=== ENTRY SMOKE ==="
 python - <<'PY'
